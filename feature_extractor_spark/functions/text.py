@@ -988,13 +988,10 @@ def encode_bpe(
     # r10: the Python encode pass inherits the scan's split count — a
     # compact corpus (few parquet files) serializes the per-word merge
     # loop through a handful of tasks (measured: 8 tasks with a 0.69 s
-    # straggler spanning the whole stage on a 50k-doc corpus). Round-
-    # robin up to cluster parallelism first; a corpus whose scan already
-    # exceeds it is left untouched (the _adc_score widen-only pattern).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    return df.mapInPandas(run, schema)
+    # straggler spanning the whole stage on a 50k-doc corpus).
+    from feature_extractor_spark.operators.skew import widen_narrow_scan
+
+    return widen_narrow_scan(df).mapInPandas(run, schema)
 
 
 def decode_bpe(

@@ -1,6 +1,5 @@
 from feature_extractor_spark.operators.windows import (  # noqa: F401
     sliding_windows,
-    sliding_windows_map_in_pandas,
     lag_lead_features,
     last_step,
 )

@@ -10,16 +10,21 @@ This operator never materializes windows outside a NumPy view:
 
   raw rows -> scan-based per-entity row numbers (no serial pass)
            -> chunk assignment + W-1 context-row replication (explode)
-           -> ONE shuffle of raw rows on (entity, chunk)
-           -> applyInPandas per (entity, chunk):
-                sort, np.sliding_window_view (zero-copy), encoder forward
-                in sub-batches, emit (entity, ts, z_mean)
+           -> ONE shuffle of raw rows on (entity, chunk) into one partition
+              per core, sorted by (entity, chunk, row number, ts)
+           -> mapInPandas, one vectorized kernel call per Arrow batch:
+                group boundaries and in-group positions in NumPy, one
+                np.sliding_window_view (zero-copy) over the batch, encoder
+                forward in sub-batches, emit (entity, ts, z_mean); the
+                batch's last group is carried into the next batch
 
 Parity vs the unfused path is allclose(rtol=1e-5) (tests); throughput and
 scaling are the reason it exists (see BENCH.md).
 """
 
 from __future__ import annotations
+
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,22 +46,19 @@ def _chunk_assign(
     rn_ts_chunk_seconds: int,
 ) -> DataFrame:
     """Scan-based row numbers -> row-count chunks -> W-1 context rows
-    replicated into the next chunk (single pass, explode)."""
+    replicated into the next chunk (single pass, inline)."""
     base = _scan_row_numbers(src, entity_col, ts_col, rn_ts_chunk_seconds)
     chunk = F.floor(F.col("__rn") / rows_per_chunk)
     assign = F.when(
         F.pmod(F.col("__rn"), F.lit(rows_per_chunk)) >= rows_per_chunk - (W - 1),
         F.array(
-            F.struct(chunk.alias("c"), F.lit(False).alias("ctx")),
-            F.struct((chunk + 1).alias("c"), F.lit(True).alias("ctx")),
+            F.struct(chunk.alias("__chunk"), F.lit(False).alias("__ctx")),
+            F.struct((chunk + 1).alias("__chunk"), F.lit(True).alias("__ctx")),
         ),
-    ).otherwise(F.array(F.struct(chunk.alias("c"), F.lit(False).alias("ctx"))))
-    return (
-        base.withColumn("__a", F.explode(assign))
-        .withColumn("__chunk", F.col("__a.c"))
-        .withColumn("__ctx", F.col("__a.ctx"))
-        .drop("__a")
+    ).otherwise(
+        F.array(F.struct(chunk.alias("__chunk"), F.lit(False).alias("__ctx")))
     )
+    return base.select("*", F.inline(assign), F.lit(False).alias("__local"))
 
 
 def _cyclical_np(ts: pd.Series) -> np.ndarray:
@@ -79,6 +81,22 @@ def _cyclical_np(ts: pd.Series) -> np.ndarray:
         cols.append(np.sin(ang))
         cols.append(np.cos(ang))
     return np.stack(cols, axis=1)
+
+
+def _group_starts(ent: np.ndarray, chunk: np.ndarray) -> np.ndarray:
+    """True where a new (entity, chunk) group starts in sorted rows. NULL
+    entity keys form one group, as Window.partitionBy keeps them (NaN and
+    None compare unequal to themselves)."""
+    na = pd.isna(ent)
+    start = np.ones(len(ent), dtype=bool)
+    start[1:] = ((ent[1:] != ent[:-1]) & ~(na[1:] & na[:-1])) | (
+        chunk[1:] != chunk[:-1]
+    )
+    return start
+
+
+def _same(a, b) -> bool:
+    return bool(pd.isna(a) and pd.isna(b)) or a == b
 
 
 def windowed_encode(
@@ -150,11 +168,11 @@ def windowed_encode(
         )
         heavy_src = src.filter(F.col(entity_col).isin(heavy_keys))
         heavy = _chunk_assign(heavy_src, entity_col, ts_col, W, rows_per_chunk,
-                              rn_ts_chunk_seconds).withColumn("__local", F.lit(False))
+                              rn_ts_chunk_seconds)
         both = light.unionByName(heavy)
     else:
         both = _chunk_assign(src, entity_col, ts_col, W, rows_per_chunk,
-                             rn_ts_chunk_seconds).withColumn("__local", F.lit(False))
+                             rn_ts_chunk_seconds)
 
     sc = df.sparkSession.sparkContext
     bw = sc.broadcast(dict(weights))
@@ -165,57 +183,89 @@ def windowed_encode(
             T.StructField(out_col, T.ArrayType(T.FloatType()), False),
         ]
     )
-    n_feat = len(feature_cols)
 
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        wts = bw.value
-        pdf = pdf.sort_values(ts_col, kind="mergesort").reset_index(drop=True)
+    def encode(frames: list[pd.DataFrame], wts: dict) -> Iterator[pd.DataFrame]:
+        """Windows + latents for whole (entity, chunk) groups, sorted."""
+        pdf = pd.concat(frames, ignore_index=True)
         n = len(pdf)
         if n < W:
-            empty = pdf.iloc[:0][[entity_col, ts_col]].copy()
-            empty[out_col] = pd.Series([], dtype=object)  # not float64: Arrow
-            return empty  # needs object dtype to map to list<float>
-
+            return
+        ent = pdf[entity_col].to_numpy()
+        start = _group_starts(ent, pdf["__chunk"].to_numpy())
+        first = np.flatnonzero(start)
+        pos = np.arange(n) - first[np.cumsum(start) - 1]  # in-group position
+        # a window needs W rows of its own group; whole-entity groups own
+        # every row, chunked ones only rows that are not context and have
+        # W-1 predecessors in the whole entity
+        owned = (pos >= W - 1) & (
+            pdf["__local"].to_numpy()
+            | (~pdf["__ctx"].to_numpy() & (pdf["__rn"].to_numpy() >= W - 1))
+        )
+        idx = np.flatnonzero(owned)
+        if not len(idx):
+            return
         feats = pdf[feature_cols].to_numpy(dtype=np.float32)  # (n, F)
-        # zero-copy sliding windows: (n-W+1, W, F)
-        wins = np.lib.stride_tricks.sliding_window_view(feats, W, axis=0)
-        wins = np.swapaxes(wins, 1, 2)
-        # window ending at sorted position i (i >= W-1) -> wins[i-W+1]
-        if bool(pdf["__local"].iloc[0]):
-            # whole-entity group: every row owned, rn = local position
-            rn = np.arange(n, dtype=np.int64)
-            owned = rn >= W - 1
-        else:
-            owned = (~pdf["__ctx"].to_numpy()) & (pdf["__rn"].to_numpy() >= W - 1)
-        idx = np.nonzero(owned)[0]
-        idx = idx[idx >= W - 1]  # context shortfall guard (first chunk)
+        # zero-copy (n-W+1, W, F); the window ending at row i is wins[i-W+1]
+        wins = np.swapaxes(
+            np.lib.stride_tricks.sliding_window_view(feats, W, axis=0), 1, 2
+        )
+        ts = pdf[ts_col].iloc[idx]
         if in_stage_conds:
-            conds = _cyclical_np(pdf[ts_col])
+            conds = _cyclical_np(ts)
         elif cond_cols:
-            conds = pdf[cond_cols].to_numpy(dtype=np.float32)
+            conds = pdf[cond_cols].to_numpy(dtype=np.float32)[idx]
         else:
-            conds = np.zeros((n, 0), dtype=np.float32)
+            conds = np.zeros((len(idx), 0), dtype=np.float32)
         outs = []
         for s in range(0, len(idx), sub_batch):
             sel = idx[s : s + sub_batch]
             x = np.ascontiguousarray(wins[sel - (W - 1)])
             h = np.zeros((len(sel), h_dim), dtype=np.float32)
-            outs.append(forward_fn(x, h, conds[sel], wts))
-        z = np.concatenate(outs) if outs else np.zeros((0, 1), np.float32)
-        return pd.DataFrame(
+            outs.append(forward_fn(x, h, conds[s : s + sub_batch], wts))
+        yield pd.DataFrame(
             {
-                entity_col: pdf[entity_col].to_numpy()[idx],
-                ts_col: pdf[ts_col].to_numpy()[idx],
-                out_col: list(z),
+                entity_col: ent[idx],
+                ts_col: ts.to_numpy(),
+                out_col: list(np.concatenate(outs)),
             }
         )
 
-    # explicit repartition: AQE coalesces by SHUFFLE BYTES (64MB advisory),
-    # but this stage's cost is W^2 encoder compute per row, not bytes — at
-    # W=144 AQE squeezed 1M rows into 19 tasks and idled 40% of the cores
-    # behind a 29s straggler. A user repartition on the group keys both
-    # satisfies the groupBy distribution (no second exchange) and is exempt
-    # from AQE coalescing.
-    n_parts = df.sparkSession.sparkContext.defaultParallelism * 8
-    both = both.repartition(n_parts, F.col(entity_col), F.col("__chunk"))
-    return both.groupBy(entity_col, "__chunk").applyInPandas(per_group, schema)
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """One ``encode`` per Arrow batch over its closed groups; the last,
+        possibly open group waits in ``carry`` for the next batch. A group
+        longer than a batch spans several, so its frames are buffered and
+        concatenated once when it closes."""
+        wts = bw.value
+        carry: list[pd.DataFrame] = []
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            start = _group_starts(
+                pdf[entity_col].to_numpy(), pdf["__chunk"].to_numpy()
+            )
+            if carry:
+                tail = carry[-1]
+                start[0] = not (
+                    _same(tail[entity_col].iloc[-1], pdf[entity_col].iloc[0])
+                    and tail["__chunk"].iloc[-1] == pdf["__chunk"].iloc[0]
+                )
+            cut = np.flatnonzero(start)
+            if not len(cut):  # the whole batch continues the carried group
+                carry.append(pdf)
+                continue
+            closed = carry + [pdf.iloc[: cut[-1]]]
+            carry = [pdf.iloc[cut[-1] :]]
+            yield from encode(closed, wts)
+        if carry:
+            yield from encode(carry, wts)
+
+    # one task per core: at these sizes a Python task's fixed cost (launch
+    # to UDF entry) outweighs its share of the encoder work. An explicit
+    # repartition is exempt from AQE coalescing, which sizes partitions by
+    # shuffle bytes and would starve this compute-bound stage. The __rn
+    # tiebreak orders equal-ts context and owned rows the same on every run.
+    return (
+        both.repartition(sc.defaultParallelism, F.col(entity_col), F.col("__chunk"))
+        .sortWithinPartitions(entity_col, "__chunk", "__rn", ts_col)
+        .mapInPandas(kernel, schema)
+    )

@@ -973,14 +973,11 @@ def _adc_score(
     # r10: the broadcast probe join and the Python ADC pass inherit the
     # coded-corpus scan's split count — a compacted single-file codes
     # table put ~6M candidate scorings through ONE task (2.4 s serial,
-    # event-log profile) while the cluster idled. Round-robin the corpus
-    # up to the cluster's parallelism first (rows are (id, cell, m-byte
-    # code) — a few MB per million vectors); a well-partitioned corpus
-    # at scale already exceeds defaultParallelism and is left untouched.
-    par = spark.sparkContext.defaultParallelism
-    if corpus_idx.rdd.getNumPartitions() < par:
-        corpus_idx = corpus_idx.repartition(par)
-    cand = corpus_idx.join(F.broadcast(q_probe), "cell").filter(
+    # event-log profile) while the cluster idled. Rows are (id, cell,
+    # m-byte code): a few MB per million vectors to round-robin.
+    from feature_extractor_spark.operators.skew import widen_narrow_scan
+
+    cand = widen_narrow_scan(corpus_idx).join(F.broadcast(q_probe), "cell").filter(
         F.col("query_id") != F.col(id_col)
     )
 

@@ -127,3 +127,28 @@ def salted_join(
 
     out = l_salted.join(r_salted, [on, "__salt"], how)
     return out.drop("__salt")
+
+
+def _has_exchange(plan) -> bool:
+    """Whether a JVM physical plan shuffles or broadcasts anywhere (an
+    adaptive plan is one that does)."""
+    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.nodeName():
+        return True
+    kids = plan.children()
+    return any(_has_exchange(kids.apply(i)) for i in range(kids.size()))
+
+
+def widen_narrow_scan(df: DataFrame) -> DataFrame:
+    """Round-robin a scan-rooted ``df`` with fewer partitions than the
+    session's parallelism up to it, ahead of a compute-heavy Python pass
+    that would otherwise inherit a compact input's few splits. Inputs that
+    shuffle are returned unchanged: their partition count is only known
+    once their exchanges run, and under AQE asking for it while a plan is
+    being built runs those shuffles, which the real action runs again. A
+    scan-rooted plan is never adaptive, so its split count comes from the
+    executed plan without a job."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if _has_exchange(plan) or plan.execute().getNumPartitions() >= par:
+        return df
+    return df.repartition(par)

@@ -6,24 +6,16 @@ over a time-ordered frame; N rows -> N-W+1 windows; empty when N < W; the
 sample's label/timestamp is the window's LAST step (zero temporal leakage —
 a window at ts t contains only rows with ts <= t).
 
-Two physical strategies behind one logical API:
-
-1. ``sliding_windows`` — ``collect_list(...).over(rowsBetween(-(W-1), 0))``.
-   Declarative; Catalyst/Tungsten stream it through the window operator's
-   external sorter with spill. Each output row carries its own W-length
-   array, so the shuffle writes O(N·W) values — fine for small/medium W.
-
-2. ``sliding_windows_map_in_pandas`` — range-partition by (entity, ts),
-   replicate only W-1 boundary rows into the next partition (overlap), then
-   build windows per-partition in one vectorized pandas pass. Shuffle volume
-   is O(N + P·W) instead of O(N·W): the scale path for W=144+ at 10^12 rows.
+``sliding_windows`` is ``collect_list(...).over(rowsBetween(-(W-1), 0))``:
+declarative; Catalyst/Tungsten stream it through the window operator's
+external sorter with spill. Each output row carries its own W-length array,
+so the shuffle writes O(N·W) values — fine for small/medium W.
+``sliding_windows_chunked`` / ``sliding_windows_auto`` split heavy-hitter
+entities into row chunks. Windows consumed only by the encoder never leave
+NumPy: see ``operators/fused.windowed_encode``.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,123 +51,6 @@ def sliding_windows(
         .withColumn(out_col, F.collect_list(payload).over(w))
         .filter(F.size(out_col) == window_size)
         .select(entity_col, ts_col, *keep, out_col)
-    )
-
-
-def sliding_windows_map_in_pandas(
-    df: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    value_cols: list[str] | str,
-    window_size: int,
-    out_col: str = "window",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """W1, overlap-partition path (scale strategy for large W).
-
-    ``value_cols`` accepts a single name (window = array<scalar>, built as
-    a zero-copy ``sliding_window_view``) or a list (window = array<struct>,
-    same element shape as the other three W1 paths — multi-feature callers
-    no longer have to fall back to the W×-amplifying collect_list path).
-
-    Plan: range-repartition on (entity, ts) -> duplicate each row's
-    (partition_id+1) copy iff it is within W-1 rows of its partition's tail
-    -> sortWithinPartitions -> mapInPandas builds windows vectorized,
-    emitting only rows owned by the partition (overlap rows contribute
-    history but are not re-emitted). Avoids the W× row amplification that
-    collect_list pushes through the shuffle.
-
-    Entities are hash-partitioned whole and the partition is sorted on
-    (entity, ts), so Arrow batches arrive entity-contiguous in time order.
-    Each batch is processed with one ``sliding_window_view`` per entity run
-    (zero-copy, no per-row Python); the trailing W-1 rows of the batch's
-    LAST entity are carried into the next batch as context, so an entity
-    spanning multiple Arrow batches (> maxRecordsPerBatch rows) loses no
-    windows. Carried rows contribute history only — a window ending at a
-    carried row needs W rows of context the carry cannot contain, so
-    nothing is ever emitted twice (parity under a tiny batch size is
-    tested). For entities too large for one partition use
-    ``sliding_windows_chunked``.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
-    multi = len(cols) > 1
-    elem_type = (
-        T.StructType([df.schema[c] for c in cols])
-        if multi
-        else df.schema[cols[0]].dataType
-    )
-    schema = T.StructType(
-        [
-            df.schema[entity_col],
-            df.schema[ts_col],
-            T.StructField(out_col, T.ArrayType(elem_type), False),
-        ]
-    )
-    n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    W = window_size
-
-    # null-entity keys must behave exactly like sliding_windows
-    # (Window.partitionBy keeps nulls as one group): pandas groupby defaults
-    # to dropna=True and NaN == NaN is False, so both the grouping and the
-    # carry comparison need isna-aware forms (same helpers as ema_macd)
-    def _same(a, b):
-        return (pd.isna(a) and pd.isna(b)) or a == b
-
-    def _key_mask(col: pd.Series, key):
-        return col.isna() if pd.isna(key) else (col == key)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None  # trailing rows of the last entity
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if carry is not None:
-                # only prepend if the batch continues the carried entity;
-                # otherwise that entity ended exactly at a batch boundary
-                if _same(pdf[entity_col].iloc[0], carry[entity_col].iloc[0]):
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            out_frames = []
-            for _, g in pdf.groupby(entity_col, sort=False, dropna=False):
-                n = len(g)
-                if n >= W:
-                    if multi:
-                        # one dict per ROW (shared across the W windows that
-                        # contain it), windows as O(1)-ish slices — no W×
-                        # duplication of the feature values in Python
-                        recs = g[cols].to_dict("records")
-                        wins = [recs[i : i + W] for i in range(n - W + 1)]
-                    else:
-                        vals = g[cols[0]].to_numpy()
-                        wins = list(
-                            np.lib.stride_tricks.sliding_window_view(vals, W)
-                        )
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                entity_col: g[entity_col].to_numpy()[W - 1 :],
-                                ts_col: g[ts_col].to_numpy()[W - 1 :],
-                                out_col: wins,
-                            }
-                        )
-                    )
-            # carry: up to W-1 trailing rows of the batch's last entity —
-            # enough history for every yet-unseen row of that entity (rows
-            # shorter than their full history keep ALL their rows via tail)
-            last_ent = pdf[entity_col].iloc[-1]
-            tail = pdf[_key_mask(pdf[entity_col], last_ent)].tail(W - 1)
-            carry = tail if len(tail) else None
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)
-
-    return (
-        df.select(entity_col, ts_col, *cols)
-        .repartition(n_parts, entity_col)
-        .sortWithinPartitions(entity_col, ts_col)
-        .mapInPandas(build, schema)
     )
 
 
@@ -275,12 +150,15 @@ def _scan_row_numbers(
         marked.groupBy(entity_col, "__tc")
         .agg(F.count(F.lit(1)).alias("__cnt"))
         .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)))
-        .select(entity_col, "__tc", "__off")
+        .select(F.col(entity_col).alias("__oe"), F.col("__tc").alias("__otc"), "__off")
     )
+    # NULL-safe on the entity: a plain equi-join drops NULL-keyed rows, which
+    # Window.partitionBy above keeps as one entity
+    on = F.col(entity_col).eqNullSafe(F.col("__oe")) & (F.col("__tc") == F.col("__otc"))
     return (
-        local.join(offsets, [entity_col, "__tc"])
+        local.join(offsets, on)
         .withColumn("__rn", (F.col("__lrn") + F.col("__off")).cast("long"))
-        .drop("__tc", "__lrn", "__off")
+        .drop("__tc", "__lrn", "__oe", "__otc", "__off")
     )
 
 

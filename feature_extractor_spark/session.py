@@ -13,6 +13,20 @@ from contextlib import contextmanager as _contextmanager
 from pyspark.sql import SparkSession
 
 
+def machine_cores() -> int:
+    """Cores this process may run on (its CPU affinity, which a container
+    or ``taskset`` narrows below ``os.cpu_count()``)."""
+    return len(os.sched_getaffinity(0))
+
+
+def driver_memory_default() -> str:
+    """Half the machine's physical memory, at most 24g: the local-mode
+    driver JVM holds every executor, and the Python workers it forks need
+    the other half."""
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(total_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "feature_extractor_spark",
     cores: int | None = None,
@@ -24,6 +38,8 @@ def get_spark(
     Defaults are scale-oriented: AQE on (runtime coalesce + skew-join
     splitting), Arrow transfer on for the pandas-UDF stages, UTC session
     timezone so cyclical datetime features are reproducible anywhere.
+    Cores and driver memory fit the machine unless ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_DRIVER_MEM`` (or ``cores``) say otherwise.
     """
     # Make the package importable inside Python workers regardless of the
     # driver's cwd — the local-mode analog of shipping the package with
@@ -44,7 +60,7 @@ def get_spark(
         os.environ.setdefault(var, "1")
 
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or machine_cores())
     if shuffle_partitions is None:
         # 4x cores: enough granularity for AQE to balance skewed stages
         # (it coalesces the excess); 1x cores left stragglers pinning wall
@@ -61,7 +77,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or driver_memory_default(),
+        )
         .config("spark.ui.enabled", "false")
         # shuffle spill dir: a single spinning /tmp disk caps every shuffle
         # stage at its write bandwidth regardless of cores (measured: the

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -24,3 +25,26 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_mid():
     return f"{TESTDATA}/sf0.01"
+
+
+class JobCount:
+    """``with JobCount(spark) as jobs: ...`` then ``jobs.n``: the Spark jobs
+    run inside the block, tagged by a job group of their own (jobs started
+    from other threads carry the caller's local properties)."""
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.group = f"job-count-{uuid.uuid4().hex}"
+        self.n = None
+
+    def __enter__(self):
+        self.prev = self.sc.getLocalProperty("spark.jobGroup.id")
+        self.sc.setLocalProperty("spark.jobGroup.id", self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", self.prev)
+        # job-start events reach the status store through the listener bus
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
+        return False

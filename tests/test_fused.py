@@ -19,32 +19,60 @@ COND = ["sin_hour", "cos_hour", "sin_dow", "cos_dow", "sin_dom",
         "cos_dom", "sin_month", "cos_month", "sin_doy", "cos_doy"]
 
 
-def _src(spark, n=300, entities=4):
+def _src(spark, n=300, entities=4, null_entity=False):
     base = dt.datetime(2024, 1, 1)
     rows = []
     for e in range(entities):
-        # entity 0 is heavy: 4x the rows
+        # entity 0 is heavy: 4x the rows. null_entity makes the keys numeric
+        # (pandas sees a NULL one as NaN, which is unequal to itself) and
+        # the last one NULL
         m = n * 4 if e == 0 else n
+        key = f"d{e}"
+        if null_entity:
+            key = None if e == entities - 1 else e
         for i in range(m):
             rows.append(
-                (f"d{e}", base + dt.timedelta(minutes=3 * i),
+                (key, base + dt.timedelta(minutes=3 * i),
                  float((i * 13 + e) % 97) / 97.0, float((i * 7 + e) % 31) / 31.0)
             )
-    df = spark.createDataFrame(rows, "doc_id string, ts timestamp, f1 double, f2 double")
+    key_type = "long" if null_entity else "string"
+    df = spark.createDataFrame(
+        rows, f"doc_id {key_type}, ts timestamp, f1 double, f2 double"
+    )
     return cyclical_datetime_features(df)
 
 
-@pytest.mark.parametrize("rows_per_chunk", [64, 8192])
-def test_fused_matches_unfused(spark, rows_per_chunk):
+@pytest.mark.parametrize(
+    "rows_per_chunk,batch_rows,null_entity,heavy_keys",
+    [
+        pytest.param(64, None, False, None, id="64"),
+        pytest.param(8192, None, False, None, id="8192"),
+        # Arrow batches shorter than W: chunk groups and their context rows
+        # straddle batches, so the kernel's carry must join them
+        pytest.param(64, 7, False, None, id="64-batch7"),
+        # a NULL entity key spanning many batches, chunked and whole-entity
+        pytest.param(64, 7, True, None, id="null-chunked-batch7"),
+        pytest.param(64, 7, True, [0], id="null-light-batch7"),
+    ],
+)
+def test_fused_matches_unfused(spark, rows_per_chunk, batch_rows, null_entity,
+                               heavy_keys):
     W = 16
-    src = _src(spark)
+    src = _src(spark, null_entity=null_entity)
     weights = init_weights(window_size=W, n_features=2, rnn_hidden_dim=4,
                            conditioning_dim=10, latent_dim=8)
-
-    fused = windowed_encode(
-        src, "doc_id", "ts", ["f1", "f2"], COND, W, weights,
-        rows_per_chunk=rows_per_chunk, rn_ts_chunk_seconds=3600,
-    ).orderBy("doc_id", "ts").toPandas()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if batch_rows:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        fused = windowed_encode(
+            src, "doc_id", "ts", ["f1", "f2"], COND, W, weights,
+            rows_per_chunk=rows_per_chunk, rn_ts_chunk_seconds=3600,
+            heavy_keys=heavy_keys,
+        ).orderBy("doc_id", "ts").toPandas()
+    finally:
+        spark.conf.set(conf, old)
 
     win = sliding_windows(
         src.withColumn("fv", F.array("f1", "f2")), "doc_id", "ts", ["fv"], W,
@@ -54,6 +82,8 @@ def test_fused_matches_unfused(spark, rows_per_chunk):
     unfused = encode_stage(
         win, weights, cond_cols=COND, keep_cols=["doc_id", "ts"]
     ).orderBy("doc_id", "ts").toPandas()
+    if null_entity:
+        assert fused["doc_id"].isna().sum() == unfused["doc_id"].isna().sum() > 0
 
     assert len(fused) == len(unfused) > 0
     assert fused["ts"].tolist() == unfused["ts"].tolist()

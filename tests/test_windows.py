@@ -12,7 +12,6 @@ from feature_extractor_spark.operators.windows import (
     lag_lead_features,
     last_step,
     sliding_windows,
-    sliding_windows_map_in_pandas,
 )
 
 
@@ -56,87 +55,6 @@ def test_sliding_window_exact_length(spark):
     got = sliding_windows(df, "doc_id", "ts", ["value"], 4).collect()
     assert len(got) == 1
     assert list(got[0]["window"]) == [0.0, 1.0, 2.0, 3.0]
-
-
-def test_map_in_pandas_path_matches_collect_list(spark):
-    n, w = 30, 7
-    df = _series_df(spark, n=n, entities=("a", "b", "c"))
-    a = sliding_windows(df, "doc_id", "ts", ["value"], w)
-    b = sliding_windows_map_in_pandas(df, "doc_id", "ts", "value", w)
-    pa = a.orderBy("doc_id", "ts").toPandas()
-    pb = b.orderBy("doc_id", "ts").toPandas()
-    assert len(pa) == len(pb) == 3 * (n - w + 1)
-    for x, y in zip(pa["window"], pb["window"]):
-        assert list(x) == list(y)
-
-
-def test_map_in_pandas_cross_batch_carry(spark):
-    """An entity spanning multiple Arrow batches must lose no windows: with
-    maxRecordsPerBatch=50 and n=200 rows/entity, the naive per-batch pass
-    dropped W-1 windows per boundary (176 vs 194 at W=7)."""
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "50")
-    try:
-        n, w = 200, 7
-        df = _series_df(spark, n=n, entities=("a", "b"))
-        got = (
-            sliding_windows_map_in_pandas(df, "doc_id", "ts", "value", w)
-            .orderBy("doc_id", "ts")
-            .toPandas()
-        )
-        assert len(got) == 2 * (n - w + 1)
-        exp = _oracle_windows(n, w)
-        got_a = got[got["doc_id"] == "a"]["window"].tolist()
-        assert [list(x) for x in got_a] == exp
-    finally:
-        spark.conf.set(conf, old)
-
-
-def test_map_in_pandas_keeps_null_entity_rows(spark):
-    """ADVICE r2: a NULL entity key must form one group exactly like
-    Window.partitionBy does in sliding_windows — pandas groupby dropna and
-    NaN != NaN carry comparisons silently dropped those rows before."""
-    rows = []
-    for e in ("a", None):
-        for i in range(12):
-            rows.append((e, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), float(i)))
-    df = spark.createDataFrame(rows, "doc_id string, ts timestamp, value double")
-    w = 4
-    a = sliding_windows(df, "doc_id", "ts", ["value"], w).orderBy("doc_id", "ts").toPandas()
-    b = (
-        sliding_windows_map_in_pandas(df, "doc_id", "ts", "value", w)
-        .orderBy("doc_id", "ts")
-        .toPandas()
-    )
-    assert len(a) == len(b) == 2 * (12 - w + 1)
-    null_b = b[b["doc_id"].isna()]
-    assert len(null_b) == 12 - w + 1
-    assert [list(x) for x in null_b["window"]] == _oracle_windows(12, w)
-
-
-def test_map_in_pandas_null_entity_cross_batch(spark):
-    """Null entity spanning Arrow batch boundaries: the isna-aware carry
-    must prepend history across batches for the NaN key too."""
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "50")
-    try:
-        n, w = 150, 6
-        rows = [
-            (None, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), float(i))
-            for i in range(n)
-        ]
-        df = spark.createDataFrame(rows, "doc_id string, ts timestamp, value double")
-        got = (
-            sliding_windows_map_in_pandas(df, "doc_id", "ts", "value", w)
-            .orderBy("ts")
-            .toPandas()
-        )
-        assert len(got) == n - w + 1
-        assert [list(x) for x in got["window"]] == _oracle_windows(n, w)
-    finally:
-        spark.conf.set(conf, old)
 
 
 def test_last_step_is_point_in_time(spark):
@@ -195,34 +113,3 @@ def test_sliding_windows_auto_keeps_null_keys(spark):
     got = out.toPandas()
     assert len(got[got["doc_id"].isna()]) == 5 - 3 + 1  # null entity windows
     assert len(got) == (10 - 3 + 1) + 3
-
-
-def test_map_in_pandas_multi_column_matches_collect_list(spark):
-    """value_cols as a LIST: array<struct> output equal to sliding_windows'
-    multi-column payload — multi-feature callers no longer need the
-    collect_list path (VERDICT r3 item 6). Includes cross-batch carry."""
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "40")
-    try:
-        from pyspark.sql import functions as F
-
-        n, w = 100, 6
-        df = _series_df(spark, n=n, entities=("a", "b")).withColumn(
-            "v2", F.col("value") * 2.0
-        )
-        a = sliding_windows(df, "doc_id", "ts", ["value", "v2"], w)
-        b = sliding_windows_map_in_pandas(df, "doc_id", "ts", ["value", "v2"], w)
-        pa_ = a.orderBy("doc_id", "ts").toPandas()
-        pb = b.orderBy("doc_id", "ts").toPandas()
-        assert len(pa_) == len(pb) == 2 * (n - w + 1)
-        for x, y in zip(pa_["window"], pb["window"]):
-            assert [tuple(s) for s in x] == [tuple(s) for s in y]
-        # single-element list == scalar behavior parity
-        c = sliding_windows_map_in_pandas(df, "doc_id", "ts", ["value"], w)
-        pc = c.orderBy("doc_id", "ts").toPandas()
-        assert [list(r) for r in pc["window"]][:3] == [
-            [x["value"] for x in r] for r in pb["window"][:3]
-        ]
-    finally:
-        spark.conf.set(conf, old)
