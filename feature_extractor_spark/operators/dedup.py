@@ -275,7 +275,8 @@ def hashed_shingles(words_col, n: int = 3):
 def _hashed_shingle_table(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> tuple[DataFrame, DataFrame]:
-    """(persisted word-hash table, shingle-hash frame derived from it).
+    """(persisted word-hash table, ``(id, __h, __sz)`` gram frame derived
+    from it; ``__sz`` is the distinct-gram set size).
 
     The persist sits at the WORD-HASH level, and that placement is load-
     bearing twice over: (a) it is the only reliable projection-collapse
@@ -284,29 +285,38 @@ def _hashed_shingle_table(
     re-tokenizes + re-hashes the whole document once per shingle element
     (measured: 14.7s -> ~1s for the sf0.1 build; visible as 6 copies of
     xxhash64 in the optimized plan — tests/test_plan_quality.py pins the
-    count at exactly 1); (b) the cache feeds all three consumers
-    (signatures + both sides of the verification join), which race to
-    populate it inside one job — the per-consumer recompute from the
-    cached array (the O(shingles) combine) is the cheap part.
+    count at exactly 1); (b) the cache feeds every consumer of the gram
+    frame (signatures and both verify sides; in the streaming ingest its
+    one checkpoint) — the per-consumer recompute from the cached array
+    (the O(shingles) combine) is the cheap part.
     The repartition ahead of it spreads a small single-split input (and,
     at scale, skewed file sizes) across the cluster before the hash work.
     Caller owns unpersisting the returned wh_tbl."""
     ws = F.transform(words(F.col(text_col)), F.lower)
+    return _grams_from_word_hashes(df, id_col, text_col, word_hashes(ws), shingle_n)
+
+
+def _grams_from_word_hashes(
+    df: DataFrame, id_col: str, src_col: str, wh, gram_n: int
+) -> tuple[DataFrame, DataFrame]:
+    """Shared front of the text and token-array paths: ``wh`` (per-element
+    hashes of ``src_col``) persisted as ``__wh`` after a repartition, then
+    the n-gram combine over the cached arrays (docs without a gram dropped)."""
     par = df.sparkSession.sparkContext.defaultParallelism
     wh_tbl = (
-        df.select(id_col, text_col)
+        df.select(id_col, src_col)
         .repartition(par)
-        .select(F.col(id_col), word_hashes(ws).alias("__wh"))
+        .select(F.col(id_col), wh.alias("__wh"))
         .persist()
     )
-    docs = (
+    grams = (
         wh_tbl.select(
-            F.col(id_col),
-            combine_word_hashes(F.col("__wh"), shingle_n).alias("__h"),
+            F.col(id_col), combine_word_hashes(F.col("__wh"), gram_n).alias("__h")
         )
         .filter(F.size("__h") > 0)
+        .withColumn("__sz", F.size(F.array_distinct("__h")))
     )
-    return wh_tbl, docs
+    return wh_tbl, grams
 
 
 def minhash_lsh_pairs(
@@ -317,7 +327,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    eager: bool = True,
 ) -> DataFrame:
     """MinHash/LSH near-dup candidate pairs with exact-Jaccard verification
     on the (hashed) shingle sets of the candidates only.
@@ -329,14 +338,10 @@ def minhash_lsh_pairs(
     equals string-shingle jaccard up to hash collisions (~2^-31 per pair;
     parity vs string-shingle jaccard is tested).
 
-    ``eager=True`` (default) materializes the verified pairs and releases
-    the shingle cache before returning (localCheckpoint, freed on GC);
-    ``eager=False`` returns the fully lazy plan with the cache left alive
-    (freed only when the plan's RDDs are GC'd)."""
+    The verified pairs are materialized and the shingle caches released
+    before returning (localCheckpoint, freed on GC)."""
     wh_tbl, docs = _hashed_shingle_table(df, id_col, text_col, shingle_n)
-    return _lsh_pairs_from_grams(
-        wh_tbl, docs, id_col, num_hashes, bands, threshold, eager
-    )
+    return _lsh_pairs_from_grams(wh_tbl, docs, id_col, num_hashes, bands, threshold)
 
 
 def minhash_lsh_pairs_tokens(
@@ -347,7 +352,6 @@ def minhash_lsh_pairs_tokens(
     bands: int = 8,
     gram_n: int = 5,
     threshold: float = 0.5,
-    eager: bool = True,
 ) -> DataFrame:
     """MinHash/LSH near-dup pairs over PRE-TOKENIZED sequences — the
     input_hint payload (doc_id, tokens:array<int>): real LLM dedup runs on
@@ -364,19 +368,8 @@ def minhash_lsh_pairs_tokens(
             tok.cast("long") * F.lit(2654435761) + F.lit(40503), F.lit(_M31)
         ),
     )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    wh_tbl = (
-        df.select(id_col, tokens_col)
-        .repartition(par)
-        .select(F.col(id_col), t.alias("__wh"))
-        .persist()
-    )
-    docs = wh_tbl.select(
-        F.col(id_col), combine_word_hashes(F.col("__wh"), gram_n).alias("__h")
-    ).filter(F.size("__h") > 0)
-    return _lsh_pairs_from_grams(
-        wh_tbl, docs, id_col, num_hashes, bands, threshold, eager
-    )
+    wh_tbl, docs = _grams_from_word_hashes(df, id_col, tokens_col, t, gram_n)
+    return _lsh_pairs_from_grams(wh_tbl, docs, id_col, num_hashes, bands, threshold)
 
 
 def signature_bands(
@@ -432,37 +425,48 @@ def _lsh_pairs_from_grams(
     num_hashes: int,
     bands: int,
     threshold: float,
-    eager: bool,
 ) -> DataFrame:
-    """Shared LSH tail for the text and token-array front ends: minhash
-    signatures (compiled aggregates), band-bucket ids-only join, exact
-    Jaccard verification on candidates only. ``wh_tbl`` is the persisted
-    upstream cache (released here when ``eager``).
-
-    ``docs`` (the hashed-GRAM arrays) is persisted here too (r8): three
-    consumers read it — the signature aggregates plus BOTH verify sides
-    — and without a cache each re-runs the n-gram rolling combine over
-    the word-hash arrays (measured -15% on the stage at 30k seqs).
-    Released with wh_tbl when ``eager``; under ``eager=False`` both
-    caches follow the documented cache-owned-by-the-returned-plan
-    lifetime (LRU eviction / session teardown)."""
+    """The pairwise front ends' driver: band the ``(id, __h, __sz)`` gram
+    frame, run the shared candidate/verify tail, materialize the verified
+    pairs and release both caches (``wh_tbl`` is the upstream one).
+    ``docs`` is persisted (r8): the signature aggregates and BOTH verify
+    sides read it, and without a cache each re-runs the n-gram combine
+    (measured -15% on the stage at 30k seqs)."""
     docs = docs.persist()
-    # r10 size-ratio prefilter (guide §2.3/§3.2 — decide with small rows,
-    # move the heavy arrays only for survivors): jaccard <= min/max of the
-    # two DISTINCT-gram set sizes, so any candidate with
-    # least(sz)/greatest(sz) < threshold can never verify — measured 11.6M
-    # distinct candidates -> 0.42M verified at the tokens path's
-    # threshold 0.9, so most gram-array joins + intersections were
-    # provably wasted. The set size rides the existing signature
-    # aggregation + band explode as one extra int (``carry``) — NO size
-    # join exists at any scale — and the filter runs directly on the band
-    # join output, BEFORE the dropDuplicates exchange, so the dedup
-    # shuffles only survivors. EXACT-preserving: double rounding is
-    # monotone, so fl(min/max) >= fl(inter/union) whenever the reals
-    # order that way — any pair passing the final jaccard >= threshold
-    # filter passes this one (boundary case pinned in tests).
-    docs_sz = docs.withColumn("__sz", F.size(F.array_distinct("__h")))
-    banded = signature_bands(docs_sz, id_col, num_hashes, bands, carry=["__sz"])
+    banded = signature_bands(docs, id_col, num_hashes, bands, carry=["__sz"])
+    # checkpoint while the caches are alive, then release them: a persist
+    # that outlives its operator pins storage memory for the whole app,
+    # localCheckpoint blocks are freed when the returned frame is dropped
+    out = _verified_pairs(docs, banded, id_col, threshold).localCheckpoint(eager=True)
+    wh_tbl.unpersist()
+    docs.unpersist()
+    return out
+
+
+def _verified_pairs(
+    grams: DataFrame, banded: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """The one candidate/verify tail (lazy): (id_a, id_b, jaccard) with
+    id_a < id_b for every pair sharing a band bucket whose exact Jaccard
+    over the distinct-gram sets reaches ``threshold``. ``grams`` is the
+    ``(id, __h, __sz)`` frame, ``banded`` its ``signature_bands`` rows
+    carrying ``__sz``. Used by minhash_lsh_pairs(_tokens) and by the
+    streaming ingest's within-batch step.
+
+    r10 size-ratio prefilter (guide §2.3/§3.2 — decide with small rows,
+    move the heavy arrays only for survivors): jaccard <= min/max of the
+    two DISTINCT-gram set sizes, so any candidate with
+    least(sz)/greatest(sz) < threshold can never verify — measured 11.6M
+    distinct candidates -> 0.42M verified at the tokens path's
+    threshold 0.9, so most gram-array joins + intersections were
+    provably wasted. The set size rides the signature aggregation + band
+    explode as one extra int (``carry``) — NO size join exists at any
+    scale — and the filter runs directly on the band join output, BEFORE
+    the dropDuplicates exchange, so the dedup shuffles only survivors.
+    EXACT-preserving: double rounding is monotone, so fl(min/max) >=
+    fl(inter/union) whenever the reals order that way — any pair passing
+    the final jaccard >= threshold filter passes this one (boundary case
+    pinned in tests)."""
     a = banded.select(
         F.col(id_col).alias("id_a"), "band", "bucket",
         F.col("__sz").alias("__sz_a"),
@@ -482,29 +486,19 @@ def _lsh_pairs_from_grams(
         .select("id_a", "id_b", "__sz_a", "__sz_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sh_a = docs.select(F.col(id_col).alias("id_a"), F.col("__h").alias("sh_a"))
-    sh_b = docs.select(F.col(id_col).alias("id_b"), F.col("__h").alias("sh_b"))
+    sh_a = grams.select(F.col(id_col).alias("id_a"), F.col("__h").alias("sh_a"))
+    sh_b = grams.select(F.col(id_col).alias("id_b"), F.col("__h").alias("sh_b"))
     pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     # |A ∪ B| = |A| + |B| - |A ∩ B| over the distinct-gram sets: same
     # integer, same double division as size(array_union(..)) — but no
     # per-pair union array is ever built (it was half the verify CPU)
     union = F.col("__sz_a") + F.col("__sz_b") - inter
-    out = (
+    return (
         pairs.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if eager:
-        # materialize the (small-by-design) verified pair set while the
-        # shingle cache is alive, then release it: a persist that outlives
-        # its operator pins executor storage memory for the whole app.
-        # localCheckpoint blocks are freed by the ContextCleaner when the
-        # returned frame is dropped — no explicit unpersist debt on callers.
-        out = out.localCheckpoint(eager=True)
-        wh_tbl.unpersist()
-        docs.unpersist()
-    return out
 
 
 def simhash(

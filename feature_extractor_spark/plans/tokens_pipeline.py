@@ -252,15 +252,11 @@ def curate(
     #    Jaccard pairs -> star-contraction closure -> keep component minima.
     #    _pair_guard (VERDICT r6 item 2) records pair count + max per-doc
     #    degree into the funnel and RAISES on max_pairs_per_doc blowup.
-    # eager=True (r10): the verified pairs are materialized inside the LSH
-    # call and its word-hash/gram caches released IMMEDIATELY. The old
-    # eager=False left both persists registered in the CacheManager for
-    # the session's lifetime (CacheManager holds strong refs — persists
-    # are never GC-collected, unlike localCheckpoint blocks), so every
-    # curate() invocation in a long-lived session leaked two dead caches
-    # and repeated bench runs degraded 2-3x from eviction/GC pressure.
+    # the verified pairs are materialized inside the LSH call and its
+    # word-hash/gram caches released there (r10: persists left alive leak
+    # for the session's lifetime — the CacheManager holds strong refs)
     pairs = minhash_lsh_pairs(
-        survivors, id_col, text_col, threshold=near_dup_threshold, eager=True
+        survivors, id_col, text_col, threshold=near_dup_threshold
     )
     pairs = _pair_guard(pairs, id_col, stage_counts, max_pairs_per_doc)
     cc_stats: dict = {}
@@ -657,10 +653,9 @@ def curate_tokens(
 
     # 2. transitive near-dup over token n-grams (pair density recorded /
     #    guarded by _pair_guard, VERDICT r6 item 2 — see curate)
-    # eager=True (r10): release the LSH caches at stage end — see curate
     pairs = minhash_lsh_pairs_tokens(
         survivors, "seq_id", tokens_col,
-        gram_n=gram_n, threshold=near_dup_threshold, eager=True,
+        gram_n=gram_n, threshold=near_dup_threshold,
     )
     pairs = _pair_guard(pairs, "seq_id", stage_counts, max_pairs_per_doc)
     cc_stats: dict = {}

@@ -10,16 +10,19 @@ without recomputing the corpus. This module keeps a persistent LSH index
 
 Per micro-batch (Structured Streaming ``foreachBatch`` — the standard
 pattern for stream writes that need multi-table transactions Spark does
-not provide natively):
+not provide natively), the batch is hashed ONCE: one materialized
+``(id, __h, __sz)`` gram frame and its ``signature_bands`` rows feed
+three consumers:
 
-1. within-batch dedup: banded MinHash pairs + star-contraction closure
-   (a batch can contain its own duplicates),
+1. within-batch dedup: the shared LSH candidate/verify tail
+   (``operators.dedup._verified_pairs``) + the connected-components
+   closure (a batch can contain its own duplicates),
 2. index lookup: the batch's band buckets join the index's — candidates
    only, never batch x corpus — then exact Jaccard on the hashed shingle
-   sets of the candidates,
+   sets of the candidates (one materialized flag row per survivor),
 3. accepted (non-duplicate) docs append to the corpus output AND their
-   band/shingle rows append to the index, so batch N+1 dedups against
-   batch N.
+   own gram/band rows (a semi-join on the accepted ids) append to the
+   index, so batch N+1 dedups against batch N.
 
 Idempotency/restart: every write lands under a ``batch_id=<n>`` dynamic
 partition with overwrite mode, so a replayed micro-batch (foreachBatch is
@@ -31,39 +34,62 @@ through ``operators.dedup.signature_bands``.
 
 from __future__ import annotations
 
+from collections import Counter
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feature_extractor_spark.operators.dedup import (
     _hashed_shingle_table,
+    _verified_pairs,
     contamination_flags,
-    minhash_lsh_pairs,
+    # not called: bound for perfbench's traced run, which wraps it (with
+    # near_dup_clusters and flag_against_index) by name in this module
+    minhash_lsh_pairs,  # noqa: F401
     near_dup_clusters,
     signature_bands,
 )
 from feature_extractor_spark.session import restore_conf
 
 
-def flag_against_index(
-    new_docs: DataFrame,
-    index_bands: DataFrame,
-    index_shingles: DataFrame,
+def _hash_batch(
+    docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch's one hashing pass: the ``(id, __h, __sz)`` gram frame and
+    its ``signature_bands`` rows ``(id, band, bucket, __sz)``, both
+    materialized (docs under ``shingle_n`` words have neither)."""
+    wh_tbl, grams = _hashed_shingle_table(docs, id_col, text_col, shingle_n)
+    grams = grams.localCheckpoint(eager=True)
+    wh_tbl.unpersist()
+    banded = signature_bands(grams, id_col, num_hashes, bands, carry=["__sz"])
+    return grams, banded.localCheckpoint(eager=True)
+
+
+def flag_against_index(
+    survivors: DataFrame,
+    grams: DataFrame,
+    banded: DataFrame,
+    index_bands: DataFrame,
+    index_shingles: DataFrame,
+    id_col: str = "doc_id",
     threshold: float = 0.9,
 ) -> DataFrame:
-    """(id, is_dup, dup_of, jaccard) for every new doc vs the index.
+    """(id, is_dup, dup_of, jaccard) for every id of ``survivors`` vs the
+    index, materialized. ``grams`` / ``banded`` are the batch's hashing
+    pass (``_hash_batch``); they may cover more ids than ``survivors``.
 
     Candidates come only from shared (band, bucket) rows; each candidate
     is verified with exact Jaccard over hashed shingle sets. ``dup_of``
     is the best match (max jaccard, ties to the smaller corpus id)."""
-    wh_tbl, docs = _hashed_shingle_table(new_docs, id_col, text_col, shingle_n)
-    banded_new = signature_bands(docs, id_col, num_hashes, bands)
     cand = (
-        banded_new.join(
+        banded.join(
             index_bands.select(
                 F.col(id_col).alias("corpus_id"), "band", "bucket"
             ),
@@ -73,7 +99,7 @@ def flag_against_index(
         .dropDuplicates([id_col, "corpus_id"])
     )
     verified = (
-        cand.join(docs.select(id_col, F.col("__h").alias("h_new")), id_col)
+        cand.join(grams.select(id_col, F.col("__h").alias("h_new")), id_col)
         .join(
             index_shingles.select(
                 F.col(id_col).alias("corpus_id"), F.col("__h").alias("h_old")
@@ -101,8 +127,8 @@ def flag_against_index(
         ).alias("__b"),
         F.max("jaccard").alias("jaccard"),
     )
-    out = (
-        new_docs.select(id_col)
+    return (
+        survivors.select(id_col)
         .distinct()
         .join(best, id_col, "left")
         .select(
@@ -111,29 +137,8 @@ def flag_against_index(
             F.col("__b.corpus_id").alias("dup_of"),
             "jaccard",
         )
+        .localCheckpoint(eager=True)
     )
-    out = out.localCheckpoint(eager=True)
-    wh_tbl.unpersist()
-    return out
-
-
-def _index_rows(
-    accepted: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(bands_df, shingles_df) index rows for newly accepted docs."""
-    wh_tbl, docs = _hashed_shingle_table(accepted, id_col, text_col, shingle_n)
-    bands_df = signature_bands(docs, id_col, num_hashes, bands)
-    shingles_df = docs.select(id_col, "__h")
-    # materialize both before releasing the shared word-hash cache
-    bands_df = bands_df.localCheckpoint(eager=True)
-    shingles_df = shingles_df.localCheckpoint(eager=True)
-    wh_tbl.unpersist()
-    return bands_df, shingles_df
 
 
 def _index_exists(spark, index_dir: str) -> bool:
@@ -240,21 +245,22 @@ def ingest_batch(
     # leak one cached DataFrame per micro-batch of a long-running stream
     persisted: list[DataFrame] = []
     try:
+        # the one hashing pass: every step below reads these two frames
+        grams, banded = _hash_batch(
+            batch_df, id_col, text_col, num_hashes, bands, shingle_n
+        )
+        index_rows = {
+            "bands": banded.select(id_col, "band", "bucket"),
+            "shingles": grams.select(id_col, "__h"),
+        }
         # 1. within-batch transitive dedup
-        pairs = minhash_lsh_pairs(
-            batch_df, id_col, text_col,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            threshold=threshold, eager=True,
-        )
+        pairs = _verified_pairs(grams, banded, id_col, threshold)
         clusters = near_dup_clusters(pairs, batch_df, id_col)
-        unique = batch_df.join(
-            clusters.filter(F.col(id_col) == F.col("canonical_id")).select(id_col),
-            id_col,
-        )
+        unique = clusters.filter(F.col(id_col) == F.col("canonical_id"))
         # 2. against the existing index. Only a MISSING index (first
         # batch, probed explicitly) skips the cross-batch check; read or
         # compute failures propagate so the stream retries the batch.
-        flags = cflags = None
+        # flags: one materialized row per within-batch survivor
         if _index_exists(spark, index_dir):
             # exclude this batch's OWN index partitions (r9, mirroring the
             # semantic ingest's hardened replay contract): a replayed
@@ -266,21 +272,26 @@ def ingest_batch(
             # diverged from the original run. Partition-pruned exclusion
             # makes the replay RE-DERIVE identical content instead; the
             # compacted history partition (-1) never collides.
-            idx_bands = spark.read.parquet(f"{index_dir}/bands").filter(
-                F.col("batch_id") != int(batch_id)
-            )
-            idx_shingles = spark.read.parquet(
-                f"{index_dir}/shingles"
-            ).filter(F.col("batch_id") != int(batch_id))
+            # read with the schema this function writes: inferring it
+            # from the files would run one job per table
+            index = [
+                spark.read.schema(T.StructType(
+                    [*df.schema, T.StructField("batch_id", T.IntegerType())]
+                ))
+                .parquet(f"{index_dir}/{sub}")
+                .filter(F.col("batch_id") != int(batch_id))
+                for sub, df in index_rows.items()
+            ]
             flags = flag_against_index(
-                unique, idx_bands, idx_shingles, id_col, text_col,
-                num_hashes, bands, shingle_n, threshold,
-            )
-            accepted = unique.join(
-                flags.filter(~F.col("is_dup")).select(id_col), id_col
+                unique, grams, banded, *index, id_col, threshold
             )
         else:  # first batch: no index yet
-            accepted = unique
+            flags = unique.select(
+                id_col, F.lit(False).alias("is_dup")
+            ).localCheckpoint(eager=True)
+        accepted = batch_df.join(
+            flags.filter(~F.col("is_dup")).select(id_col), id_col
+        )
         if quality_classifier is not None:
             # BEFORE decontamination — the same stage order as batch
             # curate, and the same keep seed (review r9: diverging seed
@@ -299,6 +310,7 @@ def ingest_batch(
                 alpha=classifier_alpha,
                 seed=classifier_seed,
             )
+        cflags = None
         if benchmark is not None:
             # persist BEFORE the flags pass: contamination_flags eagerly
             # localCheckpoints, so an un-persisted `accepted` would
@@ -316,56 +328,55 @@ def ingest_batch(
             )
         accepted = accepted.persist()
         persisted.append(accepted)
-        # 3. accepted docs + their index rows, idempotent per batch
+        # 3. accepted docs + their index rows (the batch's own gram and
+        # band rows of the accepted ids), idempotent per batch
+        acc_ids = accepted.select(id_col)
+        rows = {accepted_dir: accepted} | {
+            f"{index_dir}/{sub}": df.join(acc_ids, id_col, "left_semi")
+            for sub, df in index_rows.items()
+        }
         bid = F.lit(int(batch_id))
         with restore_conf(
             spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
         ):
-            accepted.withColumn("batch_id", bid).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(accepted_dir)
-            new_bands, new_shingles = _index_rows(
-                accepted, id_col, text_col, num_hashes, bands, shingle_n
-            )
-            new_bands.withColumn("batch_id", bid).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(f"{index_dir}/bands")
-            new_shingles.withColumn("batch_id", bid).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(f"{index_dir}/shingles")
+            for out, df in rows.items():
+                df.withColumn("batch_id", bid).write.mode(
+                    "overwrite"
+                ).partitionBy("batch_id").parquet(out)
         if stats_dir is not None:
             # per-batch funnel row (replay-idempotent: overwrites its own
-            # batch_id partition). flags/cflags are eagerly checkpointed
-            # by their producers, so counting them is a cheap re-read.
-            n_input = batch_df.count()
-            n_accepted = accepted.count()
-            if flags is not None:
-                n_unique = flags.count()  # one row per within-batch survivor
-                n_index_dup = flags.filter(F.col("is_dup")).count()
-            else:  # first batch: no index, no cross-batch flags
-                n_unique = unique.count()
-                n_index_dup = 0
-            n_decontam = (
-                cflags.filter(F.col("is_contaminated")).count()
-                if cflags is not None
-                else 0
-            )
-            # quality drops derive arithmetically — every earlier stage
-            # is already counted, so no extra job
-            n_quality = (
-                (n_unique - n_index_dup - n_decontam - n_accepted)
-                if quality_classifier is not None
-                else 0
-            )
+            # batch_id partition), counted in ONE query over frames that
+            # are already materialized
+            parts = [
+                batch_df.select(F.lit("n_input").alias("k")),
+                flags.select(
+                    F.when(F.col("is_dup"), "n_index_dup")
+                    .otherwise("n_index_new").alias("k")
+                ),
+                accepted.select(F.lit("n_accepted").alias("k")),
+            ]
+            if cflags is not None:
+                parts.append(
+                    cflags.filter(F.col("is_contaminated")).select(
+                        F.lit("n_decontam").alias("k")
+                    )
+                )
+            n = Counter(dict(
+                reduce(DataFrame.union, parts).groupBy("k").count().collect()
+            ))
+            n_unique = n["n_index_dup"] + n["n_index_new"]
             write_stats_row(
                 spark, stats_dir, batch_id,
                 {
-                    "n_input": n_input,
-                    "n_within_dup": n_input - n_unique,
-                    "n_index_dup": n_index_dup,
-                    "n_decontam": n_decontam,
-                    "n_quality": n_quality,
-                    "n_accepted": n_accepted,
+                    "n_input": n["n_input"],
+                    "n_within_dup": n["n_input"] - n_unique,
+                    "n_index_dup": n["n_index_dup"],
+                    "n_decontam": n["n_decontam"],
+                    # quality drops derive arithmetically — every other
+                    # stage is counted above
+                    "n_quality": n["n_index_new"] - n["n_decontam"]
+                    - n["n_accepted"],
+                    "n_accepted": n["n_accepted"],
                 },
             )
     finally:

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.streaming.incremental_dedup import (
+    _hash_batch,
     flag_against_index,
     ingest_batch,
     stream_dedup_ingest,
@@ -18,6 +19,14 @@ C = "a third unrelated document discussing parquet row group layouts"
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def _flag(new, idx_bands, idx_shingles, threshold=0.5):
+    """flag_against_index over every doc of ``new``, from its own hashing
+    pass (as ingest_batch calls it)."""
+    return flag_against_index(
+        new, *_hash_batch(new), idx_bands, idx_shingles, threshold=threshold
+    )
 
 
 def test_ingest_within_and_across_batches(spark, tmp_path):
@@ -55,16 +64,63 @@ def test_flag_against_index_reports_best_match(spark, tmp_path):
 
     flags = {
         r["doc_id"]: r
-        for r in flag_against_index(
+        for r in _flag(
             _df(spark, [("x1", A_NEAR), ("x2", C)]),
             spark.read.parquet(f"{idx}/bands"),
             spark.read.parquet(f"{idx}/shingles"),
-            threshold=0.5,
         ).collect()
     }
     assert flags["x1"]["is_dup"] and flags["x1"]["dup_of"] == "a1"
     assert 0.5 <= flags["x1"]["jaccard"] <= 1.0
     assert not flags["x2"]["is_dup"] and flags["x2"]["dup_of"] is None
+
+
+def test_index_rows_are_exactly_those_of_the_accepted_docs(spark, tmp_path):
+    """The bands/ and shingles/ rows a batch appends are derived from its
+    one hashing pass: they must equal signature_bands / _hashed_shingle_table
+    run on its accepted output alone — no row of a within-batch duplicate,
+    an index duplicate or a benchmark leak, none for a doc under 3 words,
+    and the same bucket values the index builder computes."""
+    from feature_extractor_spark.operators.dedup import (
+        _hashed_shingle_table,
+        signature_bands,
+    )
+
+    idx = str(tmp_path / "idx")
+    acc = str(tmp_path / "acc")
+    ingest_batch(_df(spark, [("a1", A), ("b1", B)]), 0, idx, acc, threshold=0.5)
+    leak = "which river flows through the capital city of the country named in the passage"
+    batch = _df(spark, [
+        ("c1", C), ("c2", C),  # within-batch duplicate
+        ("x1", A_NEAR),  # index duplicate of a1
+        ("l1", "background reading: " + leak),  # benchmark leak
+        ("s1", "two words"),  # no 3-gram
+        ("d1", "yet another fresh document about columnar storage engines"),
+    ])
+    ingest_batch(batch, 1, idx, acc, threshold=0.5,
+                 benchmark=_df(spark, [("q1", leak)]))
+
+    accepted = spark.read.parquet(f"{acc}/batch_id=1").select("doc_id", "text")
+    assert {r["doc_id"] for r in accepted.collect()} == {"c1", "s1", "d1"}
+    wh, grams = _hashed_shingle_table(accepted, "doc_id", "text", 3)
+    want_bands = sorted(
+        tuple(r) for r in signature_bands(grams, "doc_id", 32, 8).collect()
+    )
+    want_shingles = sorted(
+        (r["doc_id"], tuple(r["__h"])) for r in grams.select("doc_id", "__h").collect()
+    )
+    wh.unpersist()
+    got_bands = sorted(
+        tuple(r) for r in spark.read.parquet(f"{idx}/bands/batch_id=1")
+        .select("doc_id", "band", "bucket").collect()
+    )
+    got_shingles = sorted(
+        (r["doc_id"], tuple(r["__h"]))
+        for r in spark.read.parquet(f"{idx}/shingles/batch_id=1").collect()
+    )
+    assert {r[0] for r in got_bands} == {"c1", "d1"}
+    assert got_bands == want_bands
+    assert got_shingles == want_shingles
 
 
 def test_corrupt_index_raises_instead_of_admitting_dups(spark, tmp_path):
@@ -109,7 +165,7 @@ def test_dup_of_keeps_id_native_type_and_numeric_tie_order(spark, tmp_path):
     wh.unpersist()
 
     new = spark.createDataFrame([(99, A)], "doc_id long, text string")
-    out = flag_against_index(new, idx_bands, idx_shingles, threshold=0.5)
+    out = _flag(new, idx_bands, idx_shingles)
     row = out.collect()[0]
     assert out.schema["dup_of"].dataType.simpleString() == "bigint"
     assert row["is_dup"] and row["dup_of"] == 9
@@ -167,11 +223,10 @@ def test_compact_index_preserves_dedup_and_reduces_files(spark, tmp_path):
     before = nfiles("bands")
     pre = {
         r["doc_id"]: r["is_dup"]
-        for r in flag_against_index(
+        for r in _flag(
             _df(spark, [("x1", A_NEAR), ("x2", C)]),
             spark.read.parquet(f"{idx}/bands"),
             spark.read.parquet(f"{idx}/shingles"),
-            threshold=0.5,
         ).collect()
     }
 
@@ -181,11 +236,10 @@ def test_compact_index_preserves_dedup_and_reduces_files(spark, tmp_path):
 
     post = {
         r["doc_id"]: r["is_dup"]
-        for r in flag_against_index(
+        for r in _flag(
             _df(spark, [("x1", A_NEAR), ("x2", C)]),
             spark.read.parquet(f"{idx}/bands"),
             spark.read.parquet(f"{idx}/shingles"),
-            threshold=0.5,
         ).collect()
     }
     assert post == pre == {"x1": True, "x2": False}
@@ -222,11 +276,10 @@ def test_compact_index_crash_recovery_restores_pre_compact(spark, tmp_path):
     def decisions():
         return {
             r["doc_id"]: r["is_dup"]
-            for r in flag_against_index(
+            for r in _flag(
                 _df(spark, [("x1", A_NEAR), ("x2", C)]),
                 spark.read.parquet(f"{idx}/bands"),
                 spark.read.parquet(f"{idx}/shingles"),
-                threshold=0.5,
             ).collect()
         }
 

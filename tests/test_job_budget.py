@@ -12,8 +12,10 @@ from conftest import JobCount
 from feature_extractor_spark.encoder import init_weights
 from feature_extractor_spark.functions.text import encode_bpe
 from feature_extractor_spark.operators.asof import asof_join
+from feature_extractor_spark.operators.dedup import near_dup_clusters
 from feature_extractor_spark.operators.fused import windowed_encode
 from feature_extractor_spark.operators.skew import detect_heavy_hitters
+from feature_extractor_spark.streaming.incremental_dedup import ingest_batch
 
 
 @pytest.fixture(scope="module")
@@ -75,3 +77,35 @@ def test_encode_bpe_plan_over_shuffled_input_runs_no_job(spark):
         enc = encode_bpe(docs, merges, vocab)
     assert jobs.n == 0
     assert enc.count() == 3
+
+
+def test_near_dup_clusters_driver_path_job_ceiling(spark):
+    # edge checkpoint, its count and the union-find collect
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e")], "id_a string, id_b string"
+    )
+    nodes = spark.createDataFrame([(x,) for x in "abcdefg"], "doc_id string")
+    stats: dict = {}
+    with JobCount(spark) as jobs:
+        near_dup_clusters(pairs, nodes, stats=stats)
+    assert stats["path"] == "driver"
+    assert jobs.n <= 5
+
+
+def test_ingest_batch_index_path_job_ceiling(spark, tmp_path):
+    idx, acc, stats = (str(tmp_path / d) for d in ("idx", "acc", "stats"))
+    words = [" ".join(f"w{k}{i}" for i in range(12)) for k in range(3)]
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "doc_id string, text string")
+
+    ingest_batch(batch([("a0", words[0]), ("b0", words[1])]), 0, idx, acc,
+                 stats_dir=stats)
+    # two copies of a fresh doc and a copy of an indexed one
+    b1 = batch([("c1", words[2]), ("c2", words[2]), ("a1", words[0])])
+    with JobCount(spark) as jobs:
+        ingest_batch(b1, 1, idx, acc, stats_dir=stats)
+    assert {r["doc_id"] for r in spark.read.parquet(f"{acc}/batch_id=1").collect()} == {"c1"}
+    # one hashing pass feeds pairs, lookup and index rows (61 jobs when
+    # each of them hashed the batch itself)
+    assert jobs.n <= 33

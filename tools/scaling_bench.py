@@ -102,10 +102,9 @@ def _dedup_stage(spark):
     )
 
     docs = spark.read.parquet(DOCS_DIR)
-    # eager=True: pairs materialize inside the timed section AND the
-    # shingle cache is released per run (eager=False would leak one
-    # word-hash cache per repetition)
-    pairs = minhash_lsh_pairs(docs, threshold=0.6, eager=True)
+    # pairs materialize inside the timed section, and the shingle cache
+    # is released per run
+    pairs = minhash_lsh_pairs(docs, threshold=0.6)
     return near_dup_clusters(pairs, docs, "doc_id")
 
 
