@@ -14,7 +14,7 @@ From-scratch re-expression of the capabilities of harveybc/feature-extractor
 
 Everything is DataFrame/SQL-first so Catalyst handles pushdown, pruning and
 join planning; pandas UDFs appear only where built-ins cannot express the
-semantics (model forward pass, merge_asof fast path).
+semantics (model forward pass).
 """
 
 __version__ = "0.1.0"

@@ -8,7 +8,7 @@ carried forward). Zero temporal leakage by construction — rows with
 right.ts > left.ts can never influence the output.
 
 ``direction="forward"`` attaches the EARLIEST right row with right.ts >=
-left.ts instead (next observation) — the same scan time-reversed, in all
+left.ts instead (next observation) — the same scan time-reversed, in both
 strategies. Forward reads the future BY DESIGN: it is for label/target
 construction (e.g. "next price after t"), never for features at t —
 keep feature pipelines on backward, where the no-leakage property holds.
@@ -21,22 +21,26 @@ Two strategies:
   plans a single sort + window; AQE handles partition sizing. Works for any
   key cardinality and is the 100 TB-safe default (sort-merge-shaped).
 
-- ``merge_asof``: co-partition both sides by key, per-partition
-  ``pandas.merge_asof`` inside mapInPandas via cogroup. Faster when the
-  right side is wide (many value columns) because it avoids widening the
-  union; Arrow-batched, no per-row Python.
+- ``auto``: the skew-adaptive route. Heavy-hitter keys (``heavy_keys``, or
+  ``skew.detect_heavy_hitters`` when None) take a two-phase parallel
+  prefix scan over time chunks, so one Zipf-head key no longer serializes
+  into a single task; every other key takes ``union_locf``.
 
 A tolerance (max staleness) is supported in both.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.functions.timeutil import epoch_seconds
+from feature_extractor_spark.operators.skew import detect_heavy_hitters
+
+# ``auto``: a key is heavy above this share of the sampled left rows, and
+# each heavy key's time span is cut into this many chunks
+_HEAVY_SHARE = 0.02
+_TARGET_CHUNKS = 128
 
 
 def asof_join(
@@ -48,7 +52,6 @@ def asof_join(
     direction: str = "backward",
     tolerance_seconds: int | None = None,
     strategy: str = "union_locf",
-    chunk_seconds: int = 7 * 24 * 3600,
     heavy_keys: list | None = None,
 ) -> DataFrame:
     if direction not in ("backward", "forward"):
@@ -59,19 +62,10 @@ def asof_join(
         return _asof_union_locf(
             left, right, on, by, value_cols, tolerance_seconds, direction
         )
-    if strategy == "merge_asof":
-        return _asof_merge_asof(
-            left, right, on, by, value_cols, tolerance_seconds, direction
-        )
-    if strategy == "union_locf_chunked":
-        return _asof_union_locf_chunked(
-            left, right, on, by, value_cols, tolerance_seconds, chunk_seconds,
-            direction,
-        )
     if strategy == "auto":
         return _asof_auto(
-            left, right, on, by, value_cols, tolerance_seconds,
-            heavy_keys=heavy_keys, direction=direction,
+            left, right, on, by, value_cols, tolerance_seconds, heavy_keys,
+            direction,
         )
     raise ValueError(f"unknown strategy {strategy!r}")
 
@@ -83,35 +77,23 @@ def _asof_auto(
     by: str,
     value_cols: list[str],
     tolerance_seconds: int | None,
-    heavy_share: float = 0.02,
-    target_chunks: int = 128,
-    heavy_keys: list | None = None,
-    direction: str = "backward",
+    heavy_keys: list | None,
+    direction: str,
 ) -> DataFrame:
     """Skew-adaptive hybrid (the production default at scale).
 
     The per-key union_locf is already parallel ACROSS keys; a key only hurts
-    when it alone dwarfs a task. So: detect keys holding more than
-    ``heavy_share`` of rows (one sampled agg), route the light population
-    through the plain path, and route each heavy key through the chunked
-    scan path with chunk width sized from that population's time span so
-    each heavy key splits into ~``target_chunks`` parallel slices.
-    Fine-grained chunking of EVERY key would be wrong: the chunk-domain
-    table degenerates to ~|left| rows and the cross-chunk scan becomes the
-    new straggler (measured 3x slower than plain on 3k uniform keys)."""
+    when it alone dwarfs a task. So: route the keys holding more than
+    ``_HEAVY_SHARE`` of left rows through the chunked scan path, with chunk
+    width sized from their time span so each heavy key splits into
+    ~``_TARGET_CHUNKS`` parallel slices, and the rest through the plain
+    path. Fine-grained chunking of EVERY key would be wrong: the
+    chunk-domain table degenerates to ~|left| rows and the cross-chunk scan
+    becomes the new straggler (measured 3x slower than plain on 3k uniform
+    keys)."""
     heavy = heavy_keys
     if heavy is None:
-        sampled = left.select(by).sample(fraction=0.1, seed=42)
-        counts = sampled.groupBy(by).count()
-        total = counts.agg(F.sum("count")).first()[0] or 0
-        heavy = (
-            [
-                r[0]
-                for r in counts.filter(F.col("count") > heavy_share * total).collect()
-            ]
-            if total
-            else []
-        )
+        heavy = detect_heavy_hitters(left, by, threshold_share=_HEAVY_SHARE)
     if not heavy:
         return _asof_union_locf(
             left, right, on, by, value_cols, tolerance_seconds, direction
@@ -127,7 +109,7 @@ def _asof_auto(
     span = l_heavy.agg(
         epoch_seconds(F.min(on)).alias("lo"), epoch_seconds(F.max(on)).alias("hi")
     ).first()
-    chunk_seconds = max(1, int((span["hi"] - span["lo"]) / target_chunks) + 1)
+    chunk_seconds = max(1, int((span["hi"] - span["lo"]) / _TARGET_CHUNKS) + 1)
     light_out = _asof_union_locf(
         l_light, r_light, on, by, value_cols, tolerance_seconds, direction
     )
@@ -192,41 +174,6 @@ def _asof_union_locf(
         .filter(F.col("__side") == 1)
         .drop("__side")
     )
-
-
-def _asof_merge_asof(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    value_cols: list[str],
-    tolerance_seconds: int | None,
-    direction: str = "backward",
-) -> DataFrame:
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(c, right.schema[c].dataType, True) for c in value_cols]
-    )
-    tol = pd.Timedelta(seconds=tolerance_seconds) if tolerance_seconds else None
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        l_pdf = l_pdf.sort_values(on, kind="mergesort")
-        if r_pdf.empty:
-            for c in value_cols:
-                l_pdf[c] = None
-            return l_pdf
-        r_pdf = r_pdf[[on] + value_cols].sort_values(on, kind="mergesort")
-        return pd.merge_asof(
-            l_pdf, r_pdf, on=on, direction=direction, tolerance=tol
-        )
-
-    return left.groupBy(by).cogroup(
-        right.select(by, on, *value_cols).groupBy(by)
-    ).applyInPandas(merge, out_schema)
 
 
 def _asof_union_locf_chunked(

@@ -29,12 +29,42 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_extractor_spark.encoder.forward import encoder_forward
-from feature_extractor_spark.operators.windows import _scan_row_numbers
+from feature_extractor_spark.functions.timeutil import epoch_seconds
+
+
+def _scan_row_numbers(
+    src: DataFrame, entity_col: str, ts_col: str, ts_chunk_seconds: int
+) -> DataFrame:
+    """Global per-entity 0-based __rn without a per-entity serial sort:
+    row_number within (entity, time-chunk) + prefix-sum of chunk counts."""
+    tchunk = F.floor(epoch_seconds(F.col(ts_col)) / F.lit(ts_chunk_seconds))
+    marked = src.withColumn("__tc", tchunk)
+    w_local = Window.partitionBy(entity_col, "__tc").orderBy(ts_col)
+    local = marked.withColumn("__lrn", F.row_number().over(w_local) - 1)
+    w_off = (
+        Window.partitionBy(entity_col)
+        .orderBy("__tc")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        marked.groupBy(entity_col, "__tc")
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)))
+        .select(F.col(entity_col).alias("__oe"), F.col("__tc").alias("__otc"), "__off")
+    )
+    # NULL-safe on the entity: a plain equi-join drops NULL-keyed rows, which
+    # Window.partitionBy above keeps as one entity
+    on = F.col(entity_col).eqNullSafe(F.col("__oe")) & (F.col("__tc") == F.col("__otc"))
+    return (
+        local.join(offsets, on)
+        .withColumn("__rn", (F.col("__lrn") + F.col("__off")).cast("long"))
+        .drop("__tc", "__lrn", "__oe", "__otc", "__off")
+    )
 
 
 def _chunk_assign(

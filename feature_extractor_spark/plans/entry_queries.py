@@ -550,8 +550,7 @@ def w3_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 explicit lag/lead features. Driver row ceded r7 to
     ``vocab_audit`` (VERDICT r6 item 1 — a two-function window is
     near-trivia next to an ingest-gating audit); stays DuckDB-checked in
-    pytest (tests/test_ceded_rows.py) and
-    benched by name in bench.py for cross-round comparability."""
+    pytest (tests/test_ceded_rows.py)."""
     ev = _t(spark, sf_dir, "events")
     return lag_lead_features(
         ev.select("event_id", "user_id", "ts", "value"),

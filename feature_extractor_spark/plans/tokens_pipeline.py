@@ -54,7 +54,7 @@ def _pair_guard(
 ) -> DataFrame:
     """Candidate-pair observability + density guard for the composed
     curation paths (VERDICT r6 item 2): a systematically templated corpus
-    (bench.py's own lattice-shift note) makes the verified near-dup graph
+    (e.g. lattice-shifted templates) makes the verified near-dup graph
     DENSE, silently turning the connected-components closure into the
     dominant cost — the funnel counted surviving docs but never pairs, so
     nothing surfaced the blowup before it burned a cluster.
@@ -233,7 +233,7 @@ def curate(
     # compresses to a few MB -> ~11 partitions), but the per-row work in
     # the stage it feeds — the md5 digest, the rank window, the keep-join
     # probe — is compute AQE cannot see: the stage ran 11 tasks of ~1.6 s
-    # while 21 cores idled (event-log profile, plans/r10). A user
+    # while 21 cores idled (event-log profile, local[32]). A user
     # repartition on the identical expression is exempt from coalescing
     # and satisfies the window's ClusteredDistribution, so no second
     # exchange appears (plan-verified). Same fix family as the post-join
@@ -277,7 +277,7 @@ def curate(
     # expressions, repetition_signals, token_counts' regexp passes — is
     # per-doc compute AQE cannot see: the whole tail ran as a single
     # 20 s task while the rest of the cluster idled (event-log profile,
-    # plans/r10). A user repartition is exempt from AQE coalescing and
+    # local[32]). A user repartition is exempt from AQE coalescing and
     # spreads the tail across the cluster (same fix, same reasoning as
     # operators/fused.windowed_encode's group repartition).
     survivors = survivors.repartition(par)

@@ -1,4 +1,5 @@
-"""J3 as-of join parity: both strategies vs pandas.merge_asof, plus the
+"""J3 as-of join parity: both strategies vs pandas.merge_asof, the
+chunked scan of the ``auto`` route vs the plain one, plus the
 zero-temporal-leakage property (BASELINE.json quality gate)."""
 
 import datetime as dt
@@ -7,7 +8,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from feature_extractor_spark.operators.asof import asof_join
+from feature_extractor_spark.operators.asof import (
+    _asof_union_locf_chunked,
+    asof_join,
+)
 
 
 def _fixtures(spark, seed=7, n_left=120, n_right=40, keys=("a", "b", "c")):
@@ -38,7 +42,7 @@ def _pandas_oracle(left, right, tolerance=None):
     return out.sort_values(["doc_id", "ts"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["union_locf", "merge_asof"])
+@pytest.mark.parametrize("strategy", ["union_locf", "auto"])
 def test_asof_matches_pandas(spark, strategy):
     left, right = _fixtures(spark)
     got = (
@@ -53,7 +57,7 @@ def test_asof_matches_pandas(spark, strategy):
     )
 
 
-@pytest.mark.parametrize("strategy", ["union_locf", "merge_asof"])
+@pytest.mark.parametrize("strategy", ["union_locf", "auto"])
 def test_asof_tolerance(spark, strategy):
     left, right = _fixtures(spark)
     got = (
@@ -137,9 +141,8 @@ def test_asof_chunked_nulls_in_values_match_plain(spark):
         right_rows, "doc_id string, ts timestamp, aux1 double, aux2 double"
     )
     plain = asof_join(left, right, on="ts", by="doc_id", strategy="union_locf")
-    chunked = asof_join(
-        left, right, on="ts", by="doc_id", strategy="union_locf_chunked",
-        chunk_seconds=4 * 3600,
+    chunked = _asof_union_locf_chunked(
+        left, right, "ts", "doc_id", ["aux1", "aux2"], None, 4 * 3600
     )
     pa = plain.orderBy("ts").toPandas()
     pb = chunked.orderBy("ts").toPandas()
@@ -170,9 +173,8 @@ def test_asof_chunked_nulls_with_tolerance_match_plain(spark):
             left, right, on="ts", by="doc_id", strategy="union_locf",
             tolerance_seconds=tol,
         )
-        chunked = asof_join(
-            left, right, on="ts", by="doc_id", strategy="union_locf_chunked",
-            chunk_seconds=6 * 3600, tolerance_seconds=tol,
+        chunked = _asof_union_locf_chunked(
+            left, right, "ts", "doc_id", ["aux"], tol, 6 * 3600
         )
         pd.testing.assert_frame_equal(
             plain.orderBy("ts").toPandas(), chunked.orderBy("ts").toPandas()
@@ -190,7 +192,7 @@ def _pandas_oracle_fwd(left, right, tolerance=None):
     return out.sort_values(["doc_id", "ts"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["union_locf", "merge_asof"])
+@pytest.mark.parametrize("strategy", ["union_locf", "auto"])
 @pytest.mark.parametrize("tol", [None, 1800])
 def test_asof_forward_matches_pandas(spark, strategy, tol):
     """direction='forward' (next observation, for label construction) must
@@ -222,19 +224,16 @@ def test_asof_forward_chunked_and_auto_match_plain(spark):
         .toPandas()
         .reset_index(drop=True)
     )
-    for strategy, kw in (
-        ("union_locf_chunked", {"chunk_seconds": 3600}),
-        ("auto", {"heavy_keys": ["a"]}),
+    for out in (
+        _asof_union_locf_chunked(
+            left, right, "ts", "doc_id", ["aux"], None, 3600, "forward"
+        ),
+        asof_join(
+            left, right, on="ts", by="doc_id", direction="forward",
+            strategy="auto", heavy_keys=["a"],
+        ),
     ):
-        got = (
-            asof_join(
-                left, right, on="ts", by="doc_id", direction="forward",
-                strategy=strategy, **kw,
-            )
-            .orderBy("doc_id", "ts")
-            .toPandas()
-            .reset_index(drop=True)
-        )
+        got = out.orderBy("doc_id", "ts").toPandas().reset_index(drop=True)
         pd.testing.assert_frame_equal(got, plain)
 
 
@@ -270,10 +269,16 @@ def test_asof_forward_nulls_in_values_match_plain_chunked(spark):
     plain = asof_join(
         left, right, on="ts", by="doc_id", direction="forward"
     ).orderBy("ts").toPandas()
-    chunked = asof_join(
-        left, right, on="ts", by="doc_id", direction="forward",
-        strategy="union_locf_chunked", chunk_seconds=6 * 3600,
+    chunked = _asof_union_locf_chunked(
+        left, right, "ts", "doc_id", ["aux"], None, 6 * 3600, "forward"
     ).orderBy("ts").toPandas()
     pd.testing.assert_frame_equal(plain, chunked)
     # rows at/before h=5 see the h=20 value (null at h=5 does not mask)
     assert plain.iloc[0]["aux"] == 7.0
+
+
+@pytest.mark.parametrize("strategy", ["merge_asof", "union_locf_chunked"])
+def test_asof_rejects_unknown_strategy(spark, strategy):
+    left, right = _fixtures(spark, n_left=2, n_right=2)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        asof_join(left, right, on="ts", by="doc_id", strategy=strategy)

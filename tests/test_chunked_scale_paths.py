@@ -1,17 +1,21 @@
 """Skew-proof scale paths must be semantically identical to the plain
-per-entity paths: chunked window build and chunked (two-phase scan) LOCF."""
+per-entity paths: the fused stage's chunked window build and chunked
+(two-phase scan) LOCF."""
 
 import datetime as dt
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from feature_extractor_spark.operators.asof import asof_join
-from feature_extractor_spark.operators.windows import (
-    sliding_windows,
-    sliding_windows_chunked,
+from feature_extractor_spark.encoder import init_weights
+from feature_extractor_spark.operators.asof import (
+    _asof_union_locf_chunked,
+    asof_join,
 )
+from feature_extractor_spark.operators.fused import windowed_encode
+from feature_extractor_spark.operators.skew import detect_heavy_hitters
 
 
 def _series(spark, n=200, entities=("a", "b")):
@@ -24,31 +28,44 @@ def _series(spark, n=200, entities=("a", "b")):
     return spark.createDataFrame(rows, "doc_id string, ts timestamp, value double")
 
 
+def _fused(df, w, **kw):
+    """Latents of ``windowed_encode`` over ``value``, sorted."""
+    weights = init_weights(window_size=w, n_features=1, latent_dim=4)
+    return (
+        windowed_encode(df, "doc_id", "ts", ["value"], None, w, weights, **kw)
+        .orderBy("doc_id", "ts")
+        .toPandas()
+    )
+
+
+def _assert_same_latents(a, b):
+    assert a["ts"].tolist() == b["ts"].tolist()
+    za = np.asarray([np.asarray(v) for v in a["z_mean"]])
+    zb = np.asarray([np.asarray(v) for v in b["z_mean"]])
+    assert np.allclose(za, zb, rtol=1e-5, atol=1e-6)
+
+
 @pytest.mark.parametrize("rows_per_chunk", [16, 33, 1000])
 def test_chunked_windows_match_plain(spark, rows_per_chunk):
+    """Every entity chunked (chunks of exactly W rows, unaligned, and one
+    chunk per entity) == every entity whole in one group."""
     df = _series(spark)
     w = 16
-    plain = sliding_windows(df, "doc_id", "ts", ["value"], w)
-    chunked = sliding_windows_chunked(
-        df, "doc_id", "ts", ["value"], w, rows_per_chunk=rows_per_chunk
-    )
-    pa = plain.orderBy("doc_id", "ts").toPandas()
-    pb = chunked.orderBy("doc_id", "ts").toPandas()
-    assert len(pa) == len(pb) == 2 * (200 - w + 1)
-    assert pa["ts"].tolist() == pb["ts"].tolist()
-    for x, y in zip(pa["window"], pb["window"]):
-        assert list(x) == list(y)
+    plain = _fused(df, w, heavy_keys=[])
+    chunked = _fused(df, w, rows_per_chunk=rows_per_chunk)
+    assert len(plain) == len(chunked) == 2 * (200 - w + 1)
+    _assert_same_latents(plain, chunked)
 
 
 def test_chunked_windows_rejects_tiny_chunks(spark):
     df = _series(spark, n=20)
+    weights = init_weights(window_size=8, n_features=1, latent_dim=4)
     with pytest.raises(ValueError, match="rows_per_chunk"):
-        sliding_windows_chunked(df, "doc_id", "ts", ["value"], 8, rows_per_chunk=4)
+        windowed_encode(df, "doc_id", "ts", ["value"], None, 8, weights,
+                        rows_per_chunk=4)
 
 
 def _asof_fixtures(spark):
-    import numpy as np
-
     rng = np.random.default_rng(11)
     base = dt.datetime(2024, 1, 1)
     left_rows, right_rows = [], []
@@ -75,9 +92,8 @@ def test_chunked_locf_matches_plain(spark, chunk_seconds, tolerance):
         .toPandas()
     )
     chunked = (
-        asof_join(
-            left, right, on="ts", by="doc_id", tolerance_seconds=tolerance,
-            strategy="union_locf_chunked", chunk_seconds=chunk_seconds,
+        _asof_union_locf_chunked(
+            left, right, "ts", "doc_id", ["aux"], tolerance, chunk_seconds
         )
         .orderBy("doc_id", "ts")
         .toPandas()
@@ -97,22 +113,20 @@ def _skewed(spark, n_heavy=3000, n_light=50, n_entities=20):
 
 
 def test_auto_windows_match_plain_on_skew(spark):
-    from feature_extractor_spark.operators.windows import sliding_windows_auto
-
+    """The production route: detected heavy hitters take the chunked path
+    (12 chunks of the heavy entity), the rest whole entities."""
     df = _skewed(spark)
     w = 16
-    plain = sliding_windows(df, "doc_id", "ts", ["value"], w)
-    auto = sliding_windows_auto(df, "doc_id", "ts", ["value"], w, target_chunks=16)
-    pa = plain.orderBy("doc_id", "ts").toPandas()
-    pb = auto.orderBy("doc_id", "ts").toPandas()
-    assert len(pa) == len(pb)
-    assert pa["ts"].tolist() == pb["ts"].tolist()
-    for x, y in zip(pa["window"], pb["window"]):
-        assert list(x) == list(y)
+    heavy = detect_heavy_hitters(df, "doc_id", threshold_share=0.02)
+    assert "heavy" in heavy
+    plain = _fused(df, w, heavy_keys=[])
+    auto = _fused(df, w, heavy_keys=heavy, rows_per_chunk=256)
+    assert len(plain) == len(auto) == (3000 - w + 1) + 20 * (50 - w + 1)
+    _assert_same_latents(plain, auto)
 
 
 def test_scan_row_numbers_match_global(spark):
-    from feature_extractor_spark.operators.windows import _scan_row_numbers
+    from feature_extractor_spark.operators.fused import _scan_row_numbers
     from pyspark.sql import Window as W
 
     df = _skewed(spark, n_heavy=500, n_light=30, n_entities=5)

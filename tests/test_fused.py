@@ -47,6 +47,9 @@ def _src(spark, n=300, entities=4, null_entity=False):
     [
         pytest.param(64, None, False, None, id="64"),
         pytest.param(8192, None, False, None, id="8192"),
+        # rows_per_chunk == W: all but the first row of a chunk are context
+        # rows of the next
+        pytest.param(16, None, False, None, id="16"),
         # Arrow batches shorter than W: chunk groups and their context rows
         # straddle batches, so the kernel's carry must join them
         pytest.param(64, 7, False, None, id="64-batch7"),

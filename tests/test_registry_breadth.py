@@ -1,11 +1,11 @@
 """Registry breadth guard (VERDICT r6 item 8): every callable exported
 at the package boundary must be referenced by at least one driver row
-(plans/entry_queries.py, plans/tokens_pipeline.py, __spark_entry__.py,
-bench.py) OR at least one test file — so a new public operator cannot
-land verification-free. The check is textual (word-boundary reference
-scan over the verification surface), which is exactly the property we
-want: a name nobody TYPES in a test or a driver row is unverified no
-matter what the import graph says."""
+(plans/entry_queries.py, plans/tokens_pipeline.py, __spark_entry__.py),
+tool or test file — so a new public operator cannot land
+verification-free. The check is textual (word-boundary reference scan
+over the verification surface), which is exactly the property we want:
+a name nobody TYPES in a test or a driver row is unverified no matter
+what the import graph says."""
 
 import os
 import re
@@ -15,13 +15,12 @@ import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 
-# the verification surface: driver rows + bench + every test module
+# the verification surface: driver rows + every test module and tool
 _SURFACE = (
     [
         ROOT / "feature_extractor_spark" / "plans" / "entry_queries.py",
         ROOT / "feature_extractor_spark" / "plans" / "tokens_pipeline.py",
         ROOT / "__spark_entry__.py",
-        ROOT / "bench.py",
     ]
     + sorted((ROOT / "tests").glob("test_*.py"))
     + sorted((ROOT / "tools").glob("*.py"))
@@ -64,7 +63,7 @@ def test_every_package_export_is_verified_somewhere():
             if not re.search(rf"\b{re.escape(name)}\b", text):
                 uncovered.append(f"{mod}.{name}")
     assert not uncovered, (
-        "package-boundary exports with NO driver-row, bench, tool or test "
+        "package-boundary exports with NO driver-row, tool or test "
         f"reference (add coverage or unexport): {uncovered}"
     )
 

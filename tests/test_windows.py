@@ -96,20 +96,3 @@ def test_lag_lead(spark):
     assert pd.isna(out["value_lag_1"].iloc[0])
     assert pd.isna(out["value_lag_2"].iloc[1])
     assert out["value_lead_1"].tolist()[:-1] == out["value"].tolist()[1:]
-
-
-def test_sliding_windows_auto_keeps_null_keys(spark):
-    """Null-entity rows take the light path instead of vanishing."""
-    import datetime as _dt
-    from feature_extractor_spark.operators.windows import sliding_windows_auto
-
-    t = _dt.datetime(2024, 1, 1)
-    rows = [("a", t + _dt.timedelta(hours=i), float(i)) for i in range(10)]
-    rows += [(None, t + _dt.timedelta(hours=i), 50.0 + i) for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id string, ts timestamp, value double")
-    out = sliding_windows_auto(
-        df, "doc_id", "ts", ["value"], 3, heavy_keys=["a"], ts_chunk_seconds=3600
-    )
-    got = out.toPandas()
-    assert len(got[got["doc_id"].isna()]) == 5 - 3 + 1  # null entity windows
-    assert len(got) == (10 - 3 + 1) + 3

@@ -32,8 +32,7 @@ LATENT = int(os.environ.get("PARITY_LATENT", "32"))
 
 def run(spark) -> dict:
     """Measure the reference's exact phase-4.2 inference workload on an
-    existing session; returns the metrics dict (importable from bench.py so
-    BENCH_r{N}.json carries the W=144 parity block every round)."""
+    existing session; returns the metrics dict."""
     cores = spark.sparkContext.defaultParallelism
     # deterministic hourly series, 54 features per step (pure expressions)
     rid = F.col("id")

@@ -7,9 +7,10 @@ parallelism levels in fresh JVMs:
     efficiency = (T_N / T_4N) / 4
 
 Protocol (round-1 pitfalls memo, BENCH.md): fresh JVM per config, taskset
-pinning to a fixed core set, ParallelGC + tmpfs local dirs (session.py),
-BLAS pinned to one thread per worker, warm run discarded, min-of-RUNS
-steady-state walls. Interpret results against tools/hw_ceiling.py: a single
+pinning to a fixed core set, ParallelGC (session.py), tmpfs local dirs
+(the recorded runs had them; export SPARK_LOCAL_DIRS=/dev/shm/spark-local
+to reproduce), BLAS pinned to one thread per worker, warm run discarded,
+min-of-RUNS steady-state walls. Interpret results against tools/hw_ceiling.py: a single
 box shares one frequency budget and one memory system across both configs,
 so the per-core ALU ceiling (0.91 for 4->16, 0.75 for 8->32 on this box)
 is the standard a real cluster — whose added nodes bring their own clocks
