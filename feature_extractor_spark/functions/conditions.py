@@ -58,48 +58,26 @@ def positional_encoding(
     d_model: int = 4,
     prefix: str = "pe_",
     partition_col: str | None = None,
-    cache_scan: bool = False,
 ) -> DataFrame:
     """Append sin/cos positional-encoding columns computed from the row's
     global (or per-partition) position — row_number over the order column,
     then the transformer PE formula pos / 10000^(2i/d).
 
     ``partition_col=None`` mirrors the reference's GLOBAL position semantics
-    but does NOT use a global ``Window.orderBy`` (which serializes the whole
-    dataset into one task): positions come from a two-phase scan — range
-    partition on the order column, per-partition row numbers (parallel),
-    plus broadcast prefix-sum offsets of per-partition counts.
-
-    The ``ranged`` subtree executes twice (row numbers + count offsets), so
-    the INPUT PLAN MUST BE DETERMINISTIC: a nondeterministic upstream (rand,
-    sampling, unstable limits) can make repartitionByRange draw different
-    boundary samples in the two executions and silently corrupt positions.
-    Pass ``cache_scan=True`` (or persist ``df`` yourself) for such inputs —
-    it pins one copy of the ranged scan for the job's lifetime."""
+    without a global ``Window.orderBy`` (one task for the whole dataset):
+    the position is the exclusive sum of ``lit(1)`` by the packing
+    operator's two-phase scan over one checkpointed range partitioning
+    (operators/packing._global_exclusive_sum)."""
     if partition_col:
         w = Window.partitionBy(partition_col).orderBy(order_col)
         out = df.withColumn("__pos", F.row_number().over(w).cast("double") - 1)
     else:
-        n = df.sparkSession.sparkContext.defaultParallelism * 4
-        ranged = df.repartitionByRange(n, F.col(order_col)).withColumn(
-            "__pid", F.spark_partition_id()
+        from feature_extractor_spark.operators.packing import (
+            _global_exclusive_sum,
         )
-        if cache_scan:
-            ranged = ranged.persist()
-        w_local = Window.partitionBy("__pid").orderBy(order_col)
-        local = ranged.withColumn("__lrn", F.row_number().over(w_local) - 1)
-        w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = (
-            ranged.groupBy("__pid")  # n rows total: the global scan is tiny
-            .count()
-            .withColumn("__off", F.coalesce(F.sum("count").over(w_off), F.lit(0)))
-            .select("__pid", "__off")
-        )
-        out = (
-            local.join(F.broadcast(offsets), "__pid")
-            .withColumn("__pos", (F.col("__lrn") + F.col("__off")).cast("double"))
-            .drop("__pid", "__lrn", "__off")
-        )
+
+        out = _global_exclusive_sum(df, [order_col], F.lit(1), "__pos")
+        out = out.withColumn("__pos", F.col("__pos").cast("double"))
     for i in range(d_model // 2):
         denom = float(10000 ** (2 * i / d_model))
         out = out.withColumn(

@@ -26,7 +26,6 @@ from feature_extractor_spark.operators.packing import (  # noqa: F401
     bin_packing_stats,
     chunk_tokens,
     pack_bins,
-    pack_bins_ffd,
     pack_sequences,
     packing_stats,
 )

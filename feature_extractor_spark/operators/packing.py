@@ -15,17 +15,19 @@ input row (one tokenized sequence) gets:
   exactly this flag.
 
 The hard distributed part is the GLOBAL prefix sum. A bare
-``Window.orderBy(order_col)`` serializes the whole table through one task
-— the classic global-window trap — so this uses the same two-phase scan as
-functions/conditions.positional_encoding: range-partition on the order
-column, per-partition running sums (parallel), plus broadcast prefix
-offsets of per-partition token totals (one tiny row per partition). Two
-executions of the ranged subtree ⇒ the input plan must be deterministic
-(or pass ``cache_scan=True``), same contract as positional_encoding.
+``Window.orderBy`` serializes the table through one task, so
+``_global_exclusive_sum`` (also behind conditions.positional_encoding)
+runs a two-phase scan: per-partition running sums over a range
+partitioning, plus broadcast prefix offsets of per-partition totals.
 
-At 10^12 rows: the offsets aggregate is |partitions| rows, the join is a
-broadcast, and everything else is per-partition window work over the
-range-partitioned shuffle — one shuffle total.
+Both phases must read ONE partitioning. Column pruning plans each branch
+as its own range exchange, each exchange samples its own range bounds,
+and once partitions outgrow the sample (``spark.sql.execution.
+rangeExchange.sampleSizePerPartition``) the branches disagree on a row's
+partition and offsets overlap, on any input. So the partition-tagged
+frame is checkpointed once and both branches read that copy: a range
+shuffle, a shuffle on the tag for the local window, and |partitions|
+broadcast offset rows.
 """
 
 from __future__ import annotations
@@ -34,22 +36,51 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _global_exclusive_sum(
+    df: DataFrame, order_cols: list[str], value, out_col: str
+) -> DataFrame:
+    """``df`` plus ``out_col``: the sum of the ``value`` column over every
+    row before this one in ``order_cols`` order (0 for the first row), by
+    the two-phase scan of the module docstring; ``F.lit(1)`` gives 0-based
+    positions. The checkpoint is the one barrier: both branches read it."""
+    n = df.sparkSession.sparkContext.defaultParallelism * 4
+    ranged = (
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    w_local = (
+        Window.partitionBy("__pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        ranged.groupBy("__pid")  # |partitions| rows: the global scan is tiny
+        .agg(F.sum(value).alias("__ptot"))
+        .withColumn("__off", F.coalesce(F.sum("__ptot").over(w_off), F.lit(0)))
+        .select("__pid", "__off")
+    )
+    return (
+        ranged.withColumn("__lsum", F.coalesce(F.sum(value).over(w_local), F.lit(0)))
+        .join(F.broadcast(offsets), "__pid")
+        .withColumn(out_col, (F.col("__lsum") + F.col("__off")).cast("long"))
+        .drop("__pid", "__lsum", "__off")
+    )
+
+
 def pack_sequences(
     df: DataFrame,
     order_col: str | list[str],
     n_tok_col: str = "n_tok",
     context_len: int = 2048,
     partition_col: str | None = None,
-    cache_scan: bool = False,
 ) -> DataFrame:
     """Assign packing coordinates to every sequence row. ``order_col``
     (one column name or a list — a multi-column order composes a
-    tiebreaker WITHOUT materializing a composite key; r8: the curation
-    paths previously concatenated a formatted-double string per row just
-    to get (shuffle_key, id) ordering, paying format_string + string
-    range-partition + string sort on the hot packing tail) must be a
-    total order (ties make tok_start nondeterministic). ``partition_col``
-    packs within groups instead of globally (per-source packing)."""
+    tiebreaker without materializing a composite key) must be a total
+    order (ties make tok_start nondeterministic). ``partition_col`` packs
+    within groups instead of globally (per-source packing)."""
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     L = F.lit(context_len)
     if partition_col:
@@ -62,32 +93,7 @@ def pack_sequences(
             "tok_start", F.coalesce(F.sum(n_tok_col).over(w), F.lit(0)).cast("long")
         )
     else:
-        n = df.sparkSession.sparkContext.defaultParallelism * 4
-        ranged = df.repartitionByRange(
-            n, *[F.col(c) for c in order_cols]
-        ).withColumn("__pid", F.spark_partition_id())
-        if cache_scan:
-            ranged = ranged.persist()
-        w_local = (
-            Window.partitionBy("__pid")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        local = ranged.withColumn(
-            "__lsum", F.coalesce(F.sum(n_tok_col).over(w_local), F.lit(0))
-        )
-        w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = (
-            ranged.groupBy("__pid")  # |partitions| rows: the global scan is tiny
-            .agg(F.sum(n_tok_col).alias("__ptoks"))
-            .withColumn("__off", F.coalesce(F.sum("__ptoks").over(w_off), F.lit(0)))
-            .select("__pid", "__off")
-        )
-        out = (
-            local.join(F.broadcast(offsets), "__pid")
-            .withColumn("tok_start", (F.col("__lsum") + F.col("__off")).cast("long"))
-            .drop("__pid", "__lsum")
-        )
+        out = _global_exclusive_sum(df, order_cols, F.col(n_tok_col), "tok_start")
     return (
         out.withColumn("bin_id", (F.col("tok_start") / L).cast("long"))
         .withColumn("bin_pos", F.pmod(F.col("tok_start"), L).cast("long"))
@@ -205,7 +211,7 @@ def packing_stats(packed: DataFrame, n_tok_col: str = "n_tok") -> DataFrame:
 
 
 # Fixed sharding default: bin membership must be a pure function of the
-# DATA (id, n_tok, n_shards, capacity, fit), never of the cluster that
+# DATA (id, n_tok, n_shards, capacity), never of the cluster that
 # happened to run the job (ADVICE r7 — defaultParallelism*4 made bin ids
 # differ across cluster sizes). 1024 shards keep per-task state bounded
 # at |rows|/1024 while still saturating any realistic executor count.
@@ -219,8 +225,6 @@ def pack_bins(
     capacity: int = 2048,
     n_shards: int | None = None,
     out_bin_col: str = "bin_id",
-    fit: str = "best",
-    max_ffd_shard_rows: int = 200_000,
 ) -> DataFrame:
     """Padding-aware bin packing — the OTHER standard way (besides
     contiguous ``pack_sequences`` and strided ``chunk_tokens``) training
@@ -239,22 +243,10 @@ def pack_bins(
     carries the assignment back onto the payload rows (NULL ids would
     drop out of the join; duplicate ids would multiply rows).
 
-    ``fit`` picks the decreasing-order heuristic (both public classics
-    with the same 11/9 OPT + 6/9 guarantee, Johnson 1973):
-
-    - ``"best"`` (default, the scale path): best-fit-decreasing — each
-      item goes to the open bin with the SMALLEST remaining capacity
-      that fits (ties: lowest bin id), maintained as a bisect-sorted
-      list, O(n log n) per shard.
-    - ``"first"``: first-fit-decreasing — lowest-INDEX open bin that
-      fits, O(n * open_bins) per shard. In decreasing order most early
-      bins cannot take later items, so the scan degenerates toward
-      quadratic on large shards; kept for parity with the textbook FFD
-      and for small-shard use. A shard larger than
-      ``max_ffd_shard_rows`` RAISES under this fit (review r8 item 4 —
-      the guard makes the documented degeneration loud instead of a
-      silent stall; raise ``n_shards`` or use ``fit="best"``). The
-      best-fit path needs no guard: it is O(n log n) by construction.
+    The heuristic is best-fit-decreasing (11/9 OPT + 6/9, Johnson 1973):
+    each item, in decreasing size, goes to the open bin with the SMALLEST
+    remaining capacity that fits (ties: lowest bin id), maintained as a
+    bisect-sorted list, O(n log n) per shard.
 
     Scale shape (VERDICT r7 item 1 — metadata-only packing): global
     packing is inherently sequential, so the distributed form shards
@@ -270,7 +262,7 @@ def pack_bins(
     bin's worth per shard) while the work parallelizes across shards.
 
     Membership and bin ids are pure functions of (id, n_tok, n_shards,
-    capacity, fit) — independent of partitioning, cluster size, and
+    capacity) — independent of partitioning, cluster size, and
     reruns (``n_shards`` defaults to the FIXED ``DEFAULT_N_SHARDS``, not
     a cluster-derived value): within a shard items are processed in
     (n_tok DESC, id ASC) order, and the global id is
@@ -290,8 +282,6 @@ def pack_bins(
     cap = int(capacity)
     if cap < 1:
         raise ValueError(f"pack_bins: capacity must be >= 1, got {capacity}")
-    if fit not in ("best", "first"):
-        raise ValueError(f"pack_bins: fit must be 'best' or 'first', got {fit!r}")
     if n_shards is None:
         n_shards = DEFAULT_N_SHARDS
     n_shards = max(1, int(n_shards))
@@ -330,14 +320,6 @@ def pack_bins(
                 f"pack_bins: duplicate {id_col!r} (e.g. {dup!r}) — the "
                 "id column must be unique (the assignment joins back on it)"
             )
-        if fit == "first" and len(pdf) > int(max_ffd_shard_rows):
-            raise ValueError(
-                f"pack_bins: shard {key[0]} has {len(pdf)} rows > "
-                f"max_ffd_shard_rows={max_ffd_shard_rows} under "
-                'fit="first" (the FFD scan is O(n*open_bins) and '
-                "degenerates toward quadratic); raise n_shards or use "
-                'fit="best"'
-            )
         shard = int(key[0])
         base = shard << 40
         pdf = pdf.sort_values(
@@ -346,9 +328,9 @@ def pack_bins(
         fills: list[int] = []  # final fill per local bin id
         assign: list[int] = []
         oversize: list[bool] = []
-        # best-fit state: open bins as a bisect-sorted list of
-        # (remaining_capacity, bin_id) — smallest fitting remainder wins,
-        # ties to the lowest bin id (tuple order gives both)
+        # open bins as a bisect-sorted list of (remaining_capacity,
+        # bin_id) — smallest fitting remainder wins, ties to the lowest
+        # bin id (tuple order gives both)
         open_bins: list[tuple[int, int]] = []
         for n in pdf[n_tok_col]:
             n = int(n)
@@ -358,30 +340,19 @@ def pack_bins(
                 oversize.append(True)
                 continue
             oversize.append(False)
-            if fit == "best":
-                i = bisect_left(open_bins, (n, -1))
-                if i < len(open_bins):
-                    rem, b = open_bins.pop(i)
-                    fills[b] += n
-                    assign.append(b)
-                    if rem - n > 0:
-                        insort(open_bins, (rem - n, b))
-                else:
-                    b = len(fills)
-                    fills.append(n)
-                    assign.append(b)
-                    if cap - n > 0:
-                        insort(open_bins, (cap - n, b))
-            else:  # first fit: lowest-index open bin that fits
-                # (oversize bins have fill > cap, so they never match)
-                for b, f in enumerate(fills):
-                    if f + n <= cap:
-                        fills[b] = f + n
-                        assign.append(b)
-                        break
-                else:
-                    assign.append(len(fills))
-                    fills.append(n)
+            i = bisect_left(open_bins, (n, -1))
+            if i < len(open_bins):
+                rem, b = open_bins.pop(i)
+                fills[b] += n
+                assign.append(b)
+                if rem - n > 0:
+                    insort(open_bins, (rem - n, b))
+            else:
+                b = len(fills)
+                fills.append(n)
+                assign.append(b)
+                if cap - n > 0:
+                    insort(open_bins, (cap - n, b))
         return pd.DataFrame(
             {
                 id_col: pdf[id_col].to_numpy(),
@@ -395,12 +366,6 @@ def pack_bins(
     return df.join(assignment, id_col).withColumn(
         "bin_capacity", F.lit(cap).cast("long")
     )
-
-
-def pack_bins_ffd(df: DataFrame, id_col: str, **kwargs) -> DataFrame:
-    """Textbook first-fit-decreasing form of ``pack_bins`` (see its
-    docstring for the fit trade-off)."""
-    return pack_bins(df, id_col, fit="first", **kwargs)
 
 
 def bin_packing_stats(

@@ -2270,8 +2270,8 @@ def pack_bins_bfd(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard), and the DuckDB side replays the ENTIRE sequential BFD —
     a recursive CTE carries the open-bin remainder list step by step,
     picking the smallest fitting remainder with ties to the lowest bin
-    id, exactly the operator's contract (operators/packing.py pack_bins
-    fit='best'; Johnson 1973). Every bin id, fill, and oversize flag is
+    id, exactly the operator's contract (operators/packing.py pack_bins;
+    Johnson 1973). Every bin id, fill, and oversize flag is
     value-checked; a capacity or fit-rule perturbation flips the row red
     (tests/test_driver_rows_r8.py)."""
     from feature_extractor_spark.operators.packing import pack_bins

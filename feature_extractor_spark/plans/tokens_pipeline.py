@@ -11,7 +11,8 @@ only COMPOSES them, so the pipeline inherits their scale contracts:
 - dedup never materializes N^2 (banded LSH candidates, star-contraction
   closure in O(log n) rounds),
 - filters and sampling are map-side only (no shuffle),
-- packing's global prefix sum is two scans + a |partitions|-row broadcast,
+- packing's global prefix sum is one materialized range partitioning
+  read twice + a |partitions|-row broadcast,
 - the write commits per-source dynamic partitions in batched jobs with
   per-unit lineage metrics (plans/lineage.py).
 
@@ -150,12 +151,12 @@ def curate(
     ``u(id) < score^classifier_alpha``.
 
     ``stage_counts``, if given, collects per-stage survivor counts via
-    ``observe()`` on the returned plan — the metrics ride the caller's
-    ONE action (no extra jobs), the same observability discipline as the
-    lineage manifest. The metric is an HLL distinct-count of the id
+    ``observe()`` on the returned plan — the metrics ride jobs the plan
+    runs anyway (no extra jobs): the stages up to the packing scan report
+    when that scan materializes its range partitioning, the rest with the
+    caller's action. The metric is an HLL distinct-count of the id
     column (rsd 1%, exact at small cardinality), NOT a row count — on
-    purpose: multi-scan stages re-execute upstream nodes (sequence
-    packing is a two-phase scan; the CC closure runs eager jobs), and a
+    purpose: the CC closure's eager jobs re-execute upstream nodes, and a
     plain count double-tallies every replay, while a distinct-id sketch
     merges idempotently. After an action has run, pass the dict to
     ``resolve_stage_counts`` for plain ints. Disabled stages are absent.
@@ -169,6 +170,7 @@ def curate(
     ``shuffle_key``, and packing coordinates (``tok_start``/``bin_id``/
     ``bin_pos``/``spans_boundary``) in the shuffled training order.
     """
+    _check_packing("curate", packing)
     # 0. optional C4 pre-cleaning, BEFORE dedup identity is computed:
     #    unicode_norm first (composed accents + stripped zero-widths make
     #    visually identical strings hash identically), then
@@ -204,17 +206,8 @@ def curate(
             docs, id_col, text_col, min_len=exact_span_min_len
         ).drop("n_removed_tokens", "n_dup_spans")
 
-    from pyspark.sql import Observation
-
     def _count(df: DataFrame, stage: str) -> DataFrame:
-        if stage_counts is None:
-            return df
-        obs = Observation()
-        stage_counts[stage] = obs  # resolve_stage_counts turns these to ints
-        # approx_count_distinct, NOT count: replay-idempotent (see docstring)
-        return df.observe(
-            obs, F.approx_count_distinct(id_col, 0.01).alias("rows")
-        )
+        return _funnel_count(df, stage_counts, stage, id_col)
 
     docs = _count(docs, "input")
 
@@ -354,72 +347,80 @@ def curate(
         filtered = redact_pii(filtered, text_col)
 
     # 5. token counts + stable training-order shuffle + sequence packing
-    if packing not in ("contiguous", "ffd"):
-        raise ValueError(
-            f"curate: packing must be 'contiguous' or 'ffd', got {packing!r}"
-        )
     with_tokens = token_counts(filtered, text_col).withColumn(
         "n_tok", F.col("n_bpe_tokens")
     )
+    return _shuffle_and_pack(
+        with_tokens, id_col, "n_tok", packing, context_len, pack_n_shards,
+        seed, stage_counts,
+    )
+
+
+def _check_packing(caller: str, packing: str) -> None:
+    """Reject a bad ``packing`` before any plan-time Spark job runs."""
+    if packing not in ("contiguous", "ffd"):
+        raise ValueError(
+            f"{caller}: packing must be 'contiguous' or 'ffd', got {packing!r}"
+        )
+
+
+def _funnel_count(
+    df: DataFrame, stage_counts: dict | None, stage: str, id_col: str
+) -> DataFrame:
+    """``df`` observed into ``stage_counts[stage]`` when the funnel is on."""
+    if stage_counts is None:
+        return df
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    stage_counts[stage] = obs
+    # approx_count_distinct, NOT count: replay-idempotent (see curate)
+    return df.observe(obs, F.approx_count_distinct(id_col, 0.01).alias("rows"))
+
+
+def _shuffle_and_pack(
+    df: DataFrame,
+    id_col: str,
+    n_tok_col: str,
+    packing: str,
+    context_len: int,
+    pack_n_shards: int | None,
+    seed: int,
+    stage_counts: dict | None,
+) -> DataFrame:
+    """Stable training-order shuffle + packing + the ``output`` count.
+
+    ``contiguous``: ``pack_sequences`` in (shuffle_key, id) order — the id
+    as a second native order column breaks hash ties. The shuffled frame
+    goes straight in: the packing scan checkpoints its own range
+    partitioning, the one barrier, so the dedup/filter pipeline runs
+    once. ``ffd``: best-fit whole-sequence bins (``pack_bins``), shuffled
+    by bin — the padded-batch fine-tuning recipe."""
     if packing == "ffd":
-        # padding-aware whole-document bins (pack_bins best-fit; see
-        # curate_tokens) — no prefix-sum scan, so no persist barrier
         from feature_extractor_spark.operators.packing import pack_bins
 
         binned = _observe_packing(
             pack_bins(
-                with_tokens, id_col, n_tok_col="n_tok",
+                df, id_col, n_tok_col=n_tok_col,
                 capacity=context_len, n_shards=pack_n_shards,
             ),
             stage_counts,
-            "n_tok",
+            n_tok_col,
         )
         out = deterministic_shuffle(binned, "bin_id", seed=seed)
-        return _count(out, "output")
-    shuffled = deterministic_shuffle(with_tokens, id_col, seed=seed)
-    # shuffle_key is a hash of the unique id -> collision-free total order
-    # is restored by the packing scan's range partitioner reading the key;
-    # ties (hash collisions) are broken by the id as a SECOND order
-    # column (r8: this used to materialize a formatted-double composite
-    # STRING per row — format_string + string range-partition + string
-    # sort were ~15% of the whole curation wall; multi-column ordering
-    # keeps the keys native)
-    ordered = shuffled
-    # barrier before the two-phase packing scan: pack_sequences' offsets
-    # branch is pruned to (shuffle_key, id, n_tok) so Catalyst plans it as a
-    # DIFFERENT exchange subtree than the full-width main branch — no
-    # ReuseExchange — and without a barrier each action executes the
-    # whole dedup/filter pipeline TWICE. Two barrier forms (r10):
-    #
-    # - with stage_counts: persist() — the InMemoryRelation stays INSIDE
-    #   the query plan, so the funnel's observe() nodes still report
-    #   through the caller's action (a checkpoint materializes outside a
-    #   SQL execution and would orphan them). Cache owned by the returned
-    #   plan (LRU / session teardown), the documented funnel trade.
-    # - without stage_counts (the common/bench path): a LAZY
-    #   localCheckpoint — same one-materialization barrier (both pack
-    #   branches read the checkpointed RDD's cached blocks), but the
-    #   blocks are freed by the ContextCleaner when the plan is dropped,
-    #   where a persist stays registered in the CacheManager forever
-    #   (strong refs — never GC-collected). Repeated curate() calls in
-    #   one session previously accumulated dead barrier caches and
-    #   degraded later runs 2-3x from eviction/GC pressure.
-    ordered = (
-        ordered.persist()
-        if stage_counts is not None
-        else ordered.localCheckpoint(eager=False)
-    )
-    out = pack_sequences(
-        ordered, order_col=["shuffle_key", id_col], n_tok_col="n_tok",
-        context_len=context_len,
-    )
-    return _count(out, "output")
+    else:
+        out = pack_sequences(
+            deterministic_shuffle(df, id_col, seed=seed),
+            order_col=["shuffle_key", id_col], n_tok_col=n_tok_col,
+            context_len=context_len,
+        )
+    return _funnel_count(out, stage_counts, "output", id_col)
 
 
 def _observe_packing(
     binned: DataFrame, stage_counts: dict | None, n_tok_col: str
 ) -> DataFrame:
-    """Packing-efficiency observability for the ffd branches (VERDICT r7
+    """Packing-efficiency observability for ``packing="ffd"`` (VERDICT r7
     item 7): fill_ratio / n_bins / n_oversize_bins ride the caller's one
     action via ``observe()``, like every other funnel metric. All three
     are REPLAY-IDEMPOTENT by construction (the funnel's discipline):
@@ -570,21 +571,14 @@ def curate_tokens(
     ``stage_counts`` works as in ``curate`` (replay-idempotent HLL
     distinct-seq_id metric via observe; resolve_stage_counts after an
     action)."""
+    _check_packing("curate_tokens", packing)
     from feature_extractor_spark.operators.dedup import (
         minhash_lsh_pairs_tokens,
         near_dup_clusters,
     )
 
-    from pyspark.sql import Observation
-
     def _count(df: DataFrame, stage: str) -> DataFrame:
-        if stage_counts is None:
-            return df
-        obs = Observation()
-        stage_counts[stage] = obs
-        return df.observe(
-            obs, F.approx_count_distinct("seq_id", 0.01).alias("rows")
-        )
+        return _funnel_count(df, stage_counts, stage, "seq_id")
 
     seqs = tokens_df.withColumn(
         "seq_id", F.xxhash64(F.col(doc_col), F.col(ts_col))
@@ -724,52 +718,15 @@ def curate_tokens(
         filtered = append_eos(filtered, tokens_col, eos_id, n_tok_col)
 
     # 4./5. deterministic per-source sampling + stable shuffle + packing
-    if packing not in ("contiguous", "ffd"):
-        raise ValueError(
-            f"curate_tokens: packing must be 'contiguous' or 'ffd', "
-            f"got {packing!r}"
-        )
     if sample_fractions:
         filtered = stratified_sample(
             filtered, "seq_id", source_col, sample_fractions,
             default_fraction=1.0, seed=seed,
         )
-    if packing == "ffd":
-        # padding-aware whole-sequence bins (pack_bins, best-fit-
-        # decreasing — the O(n log n) scale path): no sequence
-        # split, bins padded to context_len at materialization. The
-        # training-order shuffle is over BINS here (shuffle_key derived
-        # from bin_id), sequences inside a bin stay together — the padded
-        # -batch fine-tuning recipe. No prefix-sum scan, so no barrier
-        # persist is needed; the funnel's final metric still rides the
-        # caller's action.
-        from feature_extractor_spark.operators.packing import pack_bins
-
-        binned = _observe_packing(
-            pack_bins(
-                filtered, "seq_id", n_tok_col=n_tok_col,
-                capacity=context_len, n_shards=pack_n_shards,
-            ),
-            stage_counts,
-            n_tok_col,
-        )
-        out = deterministic_shuffle(binned, "bin_id", seed=seed)
-        return _count(out, "output")
-    shuffled = deterministic_shuffle(filtered, "seq_id", seed=seed)
-    # same two-phase-scan barrier as the text path (see curate): persist
-    # only when the funnel needs in-plan observe() nodes, GC-cleaned lazy
-    # localCheckpoint otherwise (r10); native (shuffle_key, seq_id)
-    # two-column order replaces the old composite string key (r8)
-    ordered = (
-        shuffled.persist()
-        if stage_counts is not None
-        else shuffled.localCheckpoint(eager=False)
+    return _shuffle_and_pack(
+        filtered, "seq_id", n_tok_col, packing, context_len, pack_n_shards,
+        seed, stage_counts,
     )
-    out = pack_sequences(
-        ordered, order_col=["shuffle_key", "seq_id"], n_tok_col=n_tok_col,
-        context_len=context_len,
-    )
-    return _count(out, "output")
 
 
 def run_curation(

@@ -27,6 +27,22 @@ def sf_mid():
     return f"{TESTDATA}/sf0.01"
 
 
+@pytest.fixture
+def small_range_sample(spark):
+    """Two sampled rows per range-exchange partition during the test, then
+    the previous setting: range bounds drawn by two separate exchanges then
+    differ at any core count, so a scan whose branches plan their own
+    exchange disagrees on which partition a row is in."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    yield
+    if prev is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prev)
+
+
 class JobCount:
     """``with JobCount(spark) as jobs: ...`` then ``jobs.n``: the Spark jobs
     run inside the block, tagged by a job group of their own (jobs started

@@ -5,6 +5,7 @@ import datetime as dt
 import math
 
 import numpy as np
+import pytest
 
 from feature_extractor_spark.functions.conditions import (
     cyclical_datetime_features,
@@ -93,19 +94,27 @@ def test_tokens_source_skew_and_monotonic_ts(spark):
     assert (np.concatenate(pdf["tokens"].to_numpy()) < 50257).all()
 
 
-def test_positional_encoding_global_scan_matches_window(spark):
+@pytest.mark.parametrize("n_rows", [500, 4000], ids=["500", "4000-wide-small-sample"])
+def test_positional_encoding_global_scan_matches_window(spark, request, n_rows):
     """The scan-based global position (partition_col=None) must equal a
-    naive global row_number ordering."""
+    naive global row_number ordering. The 4000-row case carries a wide
+    payload and samples two rows per range-exchange partition."""
     import datetime as _dt
     from pyspark.sql import functions as F
     from feature_extractor_spark.functions.conditions import positional_encoding
 
+    if n_rows > 500:
+        request.getfixturevalue("small_range_sample")
     t = _dt.datetime(2024, 1, 1)
-    rows = [(i, t + _dt.timedelta(minutes=7 * i)) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, ts timestamp").repartition(8)
+    rows = [(i, t + _dt.timedelta(minutes=7 * i)) for i in range(n_rows)]
+    df = (
+        spark.createDataFrame(rows, "id long, ts timestamp")
+        .withColumn("payload", F.repeat(F.lit("x"), 512))
+        .repartition(8)
+    )
     got = positional_encoding(df, "ts", d_model=4).orderBy("id").toPandas()
     import numpy as np
 
-    pos = np.arange(500, dtype=np.float64)  # id order == ts order
+    pos = np.arange(n_rows, dtype=np.float64)  # id order == ts order
     np.testing.assert_allclose(got["pe_sin_0"], np.sin(pos), rtol=1e-12)
     np.testing.assert_allclose(got["pe_cos_1"], np.cos(pos / 100.0), rtol=1e-12)

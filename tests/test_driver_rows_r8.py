@@ -42,6 +42,26 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _py_ffd(items, cap):
+    """(id -> (bin, fill, oversize)) first-fit-decreasing over (n desc, id
+    asc): the fit rule the best-fit oracle must tell apart."""
+    fills, out = [], {}
+    for i, n in sorted(items, key=lambda x: (-x[1], x[0])):
+        if n > cap:
+            out[i] = (len(fills), n, True)
+            fills.append(n)
+            continue
+        for b, f in enumerate(fills):
+            if f + n <= cap:
+                fills[b] = f + n
+                out[i] = (b, None, False)
+                break
+        else:
+            out[i] = (len(fills), None, False)
+            fills.append(n)
+    return {i: (b, fills[b] if f is None else f, o) for i, (b, f, o) in out.items()}, fills
+
+
 def test_pack_bins_bfd_row_matches_duckdb_recomputation(spark):
     got = _canon(pack_bins_bfd(spark, SF).toPandas())
     exp = _canon(_oracle())
@@ -73,7 +93,14 @@ def test_pack_bins_bfd_row_flips_red_on_capacity_and_fit(spark):
 
     wrong_cap = run(capacity=_PACK_CAP - 1)
     assert not wrong_cap.equals(exp)
-    wrong_fit = run(capacity=_PACK_CAP, fit="first")
+    # first fit on the same items and order: a different fit rule must
+    # give a different assignment than the oracle's best fit
+    items = list(exp[["doc_id", "n_tok"]].itertuples(index=False, name=None))
+    ffd, _ = _py_ffd(items, _PACK_CAP)
+    wrong_fit = _canon(pd.DataFrame(
+        [(i, n, *ffd[i]) for i, n in items],
+        columns=["doc_id", "n_tok", "bin_id", "bin_fill", "oversize"],
+    ))
     assert not wrong_fit.equals(exp)
 
 

@@ -15,6 +15,8 @@ from feature_extractor_spark.operators.asof import asof_join
 from feature_extractor_spark.operators.dedup import near_dup_clusters
 from feature_extractor_spark.operators.fused import windowed_encode
 from feature_extractor_spark.operators.skew import detect_heavy_hitters
+from feature_extractor_spark.plans.tokens_pipeline import curate_tokens
+from feature_extractor_spark.sources.tokens import synth_tokens
 from feature_extractor_spark.streaming.incremental_dedup import ingest_batch
 
 
@@ -109,3 +111,16 @@ def test_ingest_batch_index_path_job_ceiling(spark, tmp_path):
     # one hashing pass feeds pairs, lookup and index rows (61 jobs when
     # each of them hashed the batch itself)
     assert jobs.n <= 33
+
+
+def test_curate_tokens_job_ceiling(spark):
+    # plan build (LSH pairs, the CC closure, and the packing scan's range
+    # partitioning, which the checkpoint runs) plus the first action: 27 + 5
+    # on 300 synthetic sequences (34 when curate_tokens put its own barrier
+    # in front of a packing scan that drew its range bounds twice)
+    toks = synth_tokens(spark, n_rows=300, n_docs=20)
+    with JobCount(spark) as jobs:
+        curate_tokens(toks, context_len=256).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert jobs.n <= 32

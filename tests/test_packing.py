@@ -32,9 +32,24 @@ def _oracle(pdf: pd.DataFrame, ctx: int, by=None) -> pd.DataFrame:
     return pdf
 
 
-def test_global_packing_matches_pandas(spark, tok):
-    got = pack_sequences(tok, "k", "n_tok", context_len=512).orderBy("k").toPandas()
-    exp = _oracle(tok.toPandas(), 512)
+@pytest.fixture(params=["2000", "4000-wide-small-sample"])
+def packing_input(request, spark, tok):
+    if request.param == "2000":
+        return tok
+    request.getfixturevalue("small_range_sample")
+    # the token arrays ride along as a wide payload the offsets branch prunes
+    return synth_tokens(spark, n_rows=4000, n_docs=30, heavy_share=4).select(
+        "doc_id", F.unix_timestamp("ts").alias("k"), "n_tok", "source", "tokens"
+    )
+
+
+def test_global_packing_matches_pandas(spark, packing_input):
+    got = (
+        pack_sequences(packing_input, "k", "n_tok", context_len=512)
+        .orderBy("k")
+        .toPandas()
+    )
+    exp = _oracle(packing_input.drop("tokens").toPandas(), 512)
     for c in ["tok_start", "bin_id", "bin_pos"]:
         np.testing.assert_array_equal(got[c].to_numpy(), exp[c].to_numpy())
     assert got["spans_boundary"].tolist() == exp["spans_boundary"].tolist()
@@ -80,30 +95,12 @@ def test_interior_bins_exactly_full(spark, tok):
 
 
 # ---------------------------------------------------------------------------
-# r7: padding-aware FFD bin packing
-
-
-def _py_ffd(items, cap):
-    """(id -> (bin, fill)) oracle: FFD over (n desc, id asc)."""
-    fills, out = [], {}
-    for i, n in sorted(items, key=lambda x: (-x[1], x[0])):
-        if n > cap:
-            out[i] = (len(fills), n, True)
-            fills.append(n)
-            continue
-        for b, f in enumerate(fills):
-            if f + n <= cap:
-                fills[b] = f + n
-                out[i] = (b, None, False)
-                break
-        else:
-            out[i] = (len(fills), None, False)
-            fills.append(n)
-    return {i: (b, fills[b] if f is None else f, o) for i, (b, f, o) in out.items()}, fills
+# r7: padding-aware bin packing (best-fit-decreasing; ``packing="ffd"``
+# in the curation paths)
 
 
 def test_pack_bins_ffd_matches_python_oracle_single_shard(spark):
-    from feature_extractor_spark.operators.packing import pack_bins_ffd
+    from feature_extractor_spark.operators.packing import pack_bins
 
     items = [(f"s{i:03d}", n) for i, n in enumerate(
         [900, 100, 800, 300, 700, 650, 200, 2500, 60, 60, 60, 1024, 1024]
@@ -111,10 +108,9 @@ def test_pack_bins_ffd_matches_python_oracle_single_shard(spark):
     df = spark.createDataFrame(items, "sid string, n_tok int")
     got = {
         r["sid"]: (r["bin_id"], r["bin_fill"], r["oversize"])
-        for r in pack_bins_ffd(df, "sid", capacity=1024, n_shards=1).collect()
+        for r in pack_bins(df, "sid", capacity=1024, n_shards=1).collect()
     }
-    exp, _ = _py_ffd(items, 1024)
-    assert got == {i: (b, f, o) for i, (b, f, o) in exp.items()}
+    assert got == _py_bfd(items, 1024)
 
 
 def test_pack_bins_ffd_capacity_and_determinism(spark):
@@ -153,7 +149,7 @@ def test_pack_bins_ffd_capacity_and_determinism(spark):
         ).collect()
     }
     assert {r["sid"]: r["bin_id"] for r in out.collect()} == again
-    # packing efficiency: FFD with 8-64-token items into 128-slots should
+    # packing efficiency: best fit with 8-64-token items into 128-slots should
     # fill well past naive one-seq-per-bin; sanity-floor at 85%
     stats = bin_packing_stats(out).collect()[0]  # capacity from bin_capacity col
     assert stats["fill_ratio"] > 0.85
@@ -162,14 +158,14 @@ def test_pack_bins_ffd_capacity_and_determinism(spark):
 
 
 def test_pack_bins_ffd_oversize_singletons(spark):
-    from feature_extractor_spark.operators.packing import pack_bins_ffd
+    from feature_extractor_spark.operators.packing import pack_bins
 
     df = spark.createDataFrame(
         [("a", 10), ("big", 99), ("b", 12)], "sid string, n_tok int"
     )
     got = {
         r["sid"]: r
-        for r in pack_bins_ffd(df, "sid", capacity=32, n_shards=1).collect()
+        for r in pack_bins(df, "sid", capacity=32, n_shards=1).collect()
     }
     assert got["big"]["oversize"] and got["big"]["bin_fill"] == 99
     assert not got["a"]["oversize"] and got["a"]["bin_id"] == got["b"]["bin_id"]
@@ -181,33 +177,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    lengths=st.lists(st.integers(min_value=1, max_value=300), min_size=1, max_size=60),
-    cap=st.integers(min_value=16, max_value=256),
-)
-def test_pack_bins_ffd_property_matches_python(spark, lengths, cap):
-    """Property: single-shard pack_bins_ffd is EXACTLY Python FFD for any
-    length multiset and capacity (incl. oversize items)."""
-    from feature_extractor_spark.operators.packing import pack_bins_ffd
-
-    items = [(f"s{i:03d}", n) for i, n in enumerate(lengths)]
-    df = spark.createDataFrame(items, "sid string, n_tok int")
-    got = {
-        r["sid"]: (r["bin_id"], r["bin_fill"], r["oversize"])
-        for r in pack_bins_ffd(df, "sid", capacity=cap, n_shards=1).collect()
-    }
-    exp, _ = _py_ffd(items, cap)
-    assert got == exp
-
-
 def _py_bfd(items, cap):
     """Best-fit-decreasing oracle: smallest fitting remainder, ties to the
-    lowest bin id (mirrors pack_bins fit='best')."""
+    lowest bin id (mirrors pack_bins)."""
     fills, rems, out = [], [], {}
     for i, n in sorted(items, key=lambda x: (-x[1], x[0])):
         if n > cap:
@@ -238,7 +210,7 @@ def _py_bfd(items, cap):
     cap=st.integers(min_value=16, max_value=256),
 )
 def test_pack_bins_best_fit_property_matches_python(spark, lengths, cap):
-    """Property: single-shard pack_bins(fit='best') is EXACTLY Python
+    """Property: single-shard pack_bins is EXACTLY Python
     best-fit-decreasing (the O(n log n) scale path's bisect list must
     implement the same smallest-remainder/lowest-bin rule)."""
     from feature_extractor_spark.operators.packing import pack_bins
@@ -350,32 +322,3 @@ def test_pack_bins_null_and_duplicate_ids_raise(spark):
         pack_bins(dups, "sid", capacity=32, n_shards=2).collect()
 
 
-def test_ffd_shard_size_guard(spark):
-    """r9 (review r8 item 4): the documented FFD degeneration is loud —
-    a shard above max_ffd_shard_rows raises under fit="first" while the
-    O(n log n) best-fit path packs the same input unguarded."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from feature_extractor_spark.operators.packing import pack_bins
-
-    df = spark.range(50).select(
-        F.col("id").alias("seq_id"), (F.col("id") % 7 + 1).alias("n_tok")
-    )
-    with pytest.raises(Exception, match="max_ffd_shard_rows"):
-        pack_bins(
-            df, "seq_id", capacity=16, n_shards=1, fit="first",
-            max_ffd_shard_rows=10,
-        ).collect()
-    assert (
-        pack_bins(df, "seq_id", capacity=16, n_shards=1, fit="best").count()
-        == 50
-    )
-    # under the bound, FFD itself is unaffected
-    assert (
-        pack_bins(
-            df, "seq_id", capacity=16, n_shards=1, fit="first",
-            max_ffd_shard_rows=100,
-        ).count()
-        == 50
-    )

@@ -254,33 +254,28 @@ def test_duplicate_span_machinery_plan_shape(spark):
 
 
 def test_curate_pack_barrier_single_materialization(spark):
-    """curate's pre-pack persist barrier: pack_sequences' two branches
-    (full-width windows + pruned offsets aggregate) must BOTH read the
-    in-memory curated survivors — without the barrier, column pruning
-    makes the branches non-exchange-reusable and every action executes
-    the whole dedup/filter pipeline twice (r6 fix: 13.3 s -> 6.5 s on
-    the sf0.1 composed query)."""
+    """curate's packing scan has ONE barrier: pack_sequences' two branches
+    (full-width local window + pruned per-partition offsets) both read the
+    same checkpointed range partitioning. Two exchanges would draw two
+    range-bound samples and disagree on row partitions (overlapping
+    offsets), and a live parquet scan would mean the dedup/filter
+    pipeline re-executes per branch. Same with the stage_counts funnel,
+    whose observe() nodes report when the checkpoint runs its stages."""
     from feature_extractor_spark.plans.tokens_pipeline import curate
 
+    def rdd_scans(df):
+        leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        nodes = [leaves.apply(i) for i in range(leaves.size())]
+        return [
+            n.rdd().id() for n in nodes
+            if n.getClass().getSimpleName() == "RDDScanExec"
+        ]
+
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # default barrier (r10): lazy localCheckpoint — both branches read
-    # the checkpointed RDD (shown as Scan ExistingRDD); the dedup/filter
-    # pipeline (and its parquet scan) never re-executes post-barrier
-    out = curate(docs, context_len=512)
-    out.write.format("noop").mode("overwrite").save()
-    plan = _plan(out)
-    assert plan.count("Scan ExistingRDD") >= 2  # offsets + main branch
-    assert "Scan parquet" not in plan
-    # funnel form (stage_counts): persist barrier — observe() nodes must
-    # stay in-plan, so both branches read the SAME InMemoryRelation
-    counts: dict = {}
-    out2 = curate(docs, context_len=512, stage_counts=counts)
-    out2.write.format("noop").mode("overwrite").save()
-    plan2 = _plan(out2)
-    assert plan2.count("InMemoryTableScan") >= 2  # offsets + main branch
-    # the parquet source appears only inside the cached subtree, never as
-    # a live scan in the post-barrier execution
-    segments = [
-        seg for seg in plan2.split("InMemoryRelation")[:1]  # pre-cache part
-    ]
-    assert "Scan parquet" not in segments[0]
+    for counts in (None, {}):
+        out = curate(docs, context_len=512, stage_counts=counts)
+        out.write.format("noop").mode("overwrite").save()
+        scans = rdd_scans(out)
+        assert len(scans) == 2 and len(set(scans)) == 1, scans
+        assert "Scan parquet" not in _plan(out)
+        assert "InMemoryTableScan" not in _plan(out)

@@ -5,6 +5,7 @@ on the real sf0.001 documents table."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import JobCount
 from feature_extractor_spark.plans.tokens_pipeline import curate, run_curation
 
 SF_DOCS = "/root/testdata/sf0.001/documents.parquet"
@@ -120,6 +121,27 @@ def test_curate_tokens_input_hint_shape(spark):
     )
     prev = out.select("seq_id", "tok_start")
     assert prev.exceptAll(again).count() == 0 and again.exceptAll(prev).count() == 0
+
+
+def test_curate_tokens_offsets_gap_free_at_4000_rows(spark, small_range_sample):
+    """Packing offsets stay a gap-free prefix sum at a size where each
+    range partition outgrows its bound sample: 4000 sequences with their
+    token arrays as payload, two sampled rows per range partition."""
+    from feature_extractor_spark.plans.tokens_pipeline import curate_tokens
+    from feature_extractor_spark.sources.tokens import synth_tokens
+
+    toks = synth_tokens(spark, n_rows=4000, n_docs=40)
+    # collected at full width: a narrow select prunes both branches of the
+    # scan to the same columns, which hides a per-branch range exchange
+    pdf = (
+        curate_tokens(toks, context_len=256, min_tok=8)
+        .toPandas()
+        .sort_values("tok_start", kind="mergesort")
+    )
+    assert len(pdf) > 3500
+    starts, n_tok = pdf["tok_start"].to_numpy(), pdf["n_tok"].to_numpy()
+    assert starts[0] == 0
+    assert ((starts[1:] - starts[:-1]) == n_tok[:-1]).all()
 
 
 def test_curate_with_redaction(spark, docs):
@@ -271,7 +293,7 @@ def test_curate_stage_counts_observability(spark):
     n_out = out.count()  # the one action
     got = resolve_stage_counts(counts)
     # HLL distinct-ids: exact at this cardinality (and replay-idempotent
-    # under packing's two-phase scan — a plain count double-tallies)
+    # under the CC closure's eager jobs — a plain count double-tallies)
     assert abs(got["input"] - docs.count()) <= 5
     assert abs(got["output"] - n_out) <= 5
     funnel = [got[k] for k in
@@ -386,11 +408,11 @@ def test_curate_tokens_exact_dedup_windows_on_hash_key(spark):
     from feature_extractor_spark.sources.tokens import synth_tokens
 
     toks = synth_tokens(spark, n_rows=300, n_docs=20)
-    # stage_counts selects the persist barrier (r10): the default lazy
-    # localCheckpoint barrier hides the upstream subtree behind a Scan
-    # ExistingRDD in the plan STRING — the window-key shape this test
-    # pins is identical on both barrier forms
-    out = curate_tokens(toks, context_len=256, stage_counts={})
+    # packing="ffd": contiguous packing's scan checkpoints its range
+    # partitioning, which hides the upstream subtree behind a Scan
+    # ExistingRDD in the plan STRING; the exact-dedup stage this test
+    # pins is the same under either packing
+    out = curate_tokens(toks, context_len=256, packing="ffd")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # r10: the window's exchange is the user pre-repartition on the SAME
     # two xxhash64 keys (AQE-exempt, cluster-width — see curate_tokens);
@@ -450,8 +472,10 @@ def test_curate_tokens_ffd_packing_option(spark):
     assert abs(got["packing_fill_ratio"] - true_fill) < 1e-6
     out.unpersist()
 
-    with pytest.raises(ValueError, match="packing"):
+    # the bad value is rejected before any Spark job runs
+    with JobCount(spark) as jobs, pytest.raises(ValueError, match="packing"):
         curate_tokens(toks, packing="zip")
+    assert jobs.n == 0
 
 
 def test_curate_text_path_ffd_packing_option(spark, docs):
@@ -480,8 +504,9 @@ def test_curate_text_path_ffd_packing_option(spark, docs):
     )
     assert viol == 0
     out.unpersist()
-    with pytest.raises(ValueError, match="packing"):
+    with JobCount(spark) as jobs, pytest.raises(ValueError, match="packing"):
         curate(docs, packing="zip")
+    assert jobs.n == 0
 
 
 def test_exact_dedup_window_key_is_two_independent_hashes(spark):
@@ -494,9 +519,9 @@ def test_exact_dedup_window_key_is_two_independent_hashes(spark):
     from feature_extractor_spark.sources.tokens import synth_tokens
 
     toks = synth_tokens(spark, n_rows=200, n_docs=20)
-    # stage_counts selects the persist barrier so the upstream subtree
-    # stays visible in the plan string (see the hash-key pin above)
-    out = curate_tokens(toks, context_len=128, min_tok=1, stage_counts={})
+    # packing="ffd" keeps the upstream subtree visible in the plan string
+    # (see the hash-key pin above)
+    out = curate_tokens(toks, context_len=128, min_tok=1, packing="ffd")
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     lines = [
         l for l in plan.splitlines()
