@@ -21,26 +21,27 @@ Two strategies:
   plans a single sort + window; AQE handles partition sizing. Works for any
   key cardinality and is the 100 TB-safe default (sort-merge-shaped).
 
-- ``auto``: the skew-adaptive route. Heavy-hitter keys (``heavy_keys``, or
-  ``skew.detect_heavy_hitters`` when None) take a two-phase parallel
-  prefix scan over time chunks, so one Zipf-head key no longer serializes
-  into a single task; every other key takes ``union_locf``.
+- ``auto``: the skew-adaptive route, one two-phase parallel prefix scan.
+  Heavy-hitter keys (``heavy_keys``, or ``skew.detect_heavy_hitters`` when
+  None) are cut into time cells of ``skew.HEAVY_CELL_SECONDS``, the grid
+  the fused stage numbers heavy rows on; every other key is one cell. LOCF
+  runs inside each cell and the last value is carried across cells, so one
+  Zipf-head key no longer serializes into a single task, and a one-cell key
+  gets exactly the plain LOCF.
 
 A tolerance (max staleness) is supported in both.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.functions.timeutil import epoch_seconds
-from feature_extractor_spark.operators.skew import detect_heavy_hitters
-
-# ``auto``: a key is heavy above this share of the sampled left rows, and
-# each heavy key's time span is cut into this many chunks
-_HEAVY_SHARE = 0.02
-_TARGET_CHUNKS = 128
+from feature_extractor_spark.operators.skew import (
+    HEAVY_CELL_SECONDS,
+    detect_heavy_hitters,
+)
 
 
 def asof_join(
@@ -80,44 +81,96 @@ def _asof_auto(
     heavy_keys: list | None,
     direction: str,
 ) -> DataFrame:
-    """Skew-adaptive hybrid (the production default at scale).
+    """Skew-adaptive route (the production default at scale).
 
     The per-key union_locf is already parallel ACROSS keys; a key only hurts
-    when it alone dwarfs a task. So: route the keys holding more than
-    ``_HEAVY_SHARE`` of left rows through the chunked scan path, with chunk
-    width sized from their time span so each heavy key splits into
-    ~``_TARGET_CHUNKS`` parallel slices, and the rest through the plain
-    path. Fine-grained chunking of EVERY key would be wrong: the
-    chunk-domain table degenerates to ~|left| rows and the cross-chunk scan
-    becomes the new straggler (measured 3x slower than plain on 3k uniform
-    keys)."""
+    when it alone dwarfs a task. So the heavy keys' rows fall into
+    ``HEAVY_CELL_SECONDS`` time cells and every other key, NULL included,
+    is the single cell 0 of the same chunked scan: a one-cell key carries
+    nothing in, so its result is the plain LOCF. The grid is a constant,
+    so building the plan runs no Spark job. Cutting EVERY key into fine
+    cells would be wrong: the chunk-domain table degenerates to ~|left|
+    rows and the cross-chunk scan becomes the new straggler (measured 3x
+    slower than plain on 3k uniform keys). With no heavy key there is no
+    carry to build, and the plain scan runs."""
     heavy = heavy_keys
     if heavy is None:
-        heavy = detect_heavy_hitters(left, by, threshold_share=_HEAVY_SHARE)
+        heavy = detect_heavy_hitters(left, by)
     if not heavy:
         return _asof_union_locf(
             left, right, on, by, value_cols, tolerance_seconds, direction
         )
-    # null-keyed rows route to the light branch explicitly: a bare
-    # ~isin(heavy) evaluates to NULL for NULL keys, silently dropping them
-    # from BOTH branches (the plain paths keep them)
-    not_heavy = F.col(by).isNull() | ~F.col(by).isin(heavy)
-    l_heavy = left.filter(F.col(by).isin(heavy))
-    r_heavy = right.filter(F.col(by).isin(heavy))
-    l_light = left.filter(not_heavy)
-    r_light = right.filter(not_heavy)
-    span = l_heavy.agg(
-        epoch_seconds(F.min(on)).alias("lo"), epoch_seconds(F.max(on)).alias("hi")
-    ).first()
-    chunk_seconds = max(1, int((span["hi"] - span["lo"]) / _TARGET_CHUNKS) + 1)
-    light_out = _asof_union_locf(
-        l_light, r_light, on, by, value_cols, tolerance_seconds, direction
+    # isin is NULL for a NULL key, which otherwise() sends to cell 0
+    cell = F.when(
+        F.col(by).isin(heavy),
+        F.floor(epoch_seconds(F.col(on)) / F.lit(HEAVY_CELL_SECONDS)),
+    ).otherwise(F.lit(0))
+    return _asof_union_locf_chunked(
+        left, right, on, by, value_cols, tolerance_seconds, cell, direction
     )
-    heavy_out = _asof_union_locf_chunked(
-        l_heavy, r_heavy, on, by, value_cols, tolerance_seconds, chunk_seconds,
-        direction,
+
+
+def _tagged(
+    left: DataFrame, right: DataFrame, on: str, by: str, value_cols: list[str]
+) -> DataFrame:
+    """Left probes (``__side`` 1) and right state rows (``__side`` 0) in one
+    frame: the left's columns plus ``__r_<c>`` per value column and the
+    right row's ts as ``__r_ts``, NULL where a side lacks them."""
+    r_tagged = right.select(
+        by,
+        on,
+        F.lit(0).alias("__side"),
+        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
+        F.col(on).alias("__r_ts"),
     )
-    return light_out.unionByName(heavy_out)
+    return left.withColumn("__side", F.lit(1)).unionByName(
+        r_tagged, allowMissingColumns=True
+    )
+
+
+def _local_locf(
+    tagged: DataFrame, partition_cols: list[str], on: str, value_cols: list[str],
+    fwd: bool,
+) -> DataFrame:
+    """The left rows of ``tagged``, each with the last right row's ts
+    (``__ts``) and the last non-null of every value column (``__v_<c>``)
+    in its partition. side 0 sorts right-side state BEFORE left probes at
+    equal ts, so an exact-ts right row is visible to the left row at the
+    same instant (merge_asof semantics: <= backward, >= forward). Forward
+    (next observation) is the same scan over time REVERSED: order by ts
+    desc and the running last(ignorenulls) carries the NEXT right row
+    back."""
+    w = (
+        Window.partitionBy(*partition_cols)
+        .orderBy(F.col(on).desc() if fwd else F.col(on).asc(), F.col("__side").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return tagged.select(
+        "*",
+        F.last("__r_ts", ignorenulls=True).over(w).alias("__ts"),
+        *[
+            F.last(f"__r_{c}", ignorenulls=True).over(w).alias(f"__v_{c}")
+            for c in value_cols
+        ],
+    ).filter(F.col("__side") == 1)
+
+
+def _project(
+    df: DataFrame, left_cols: list[str], on: str, value_cols: list[str],
+    carried_ts: Column, values: list[Column], tolerance_seconds: int | None,
+    fwd: bool,
+) -> DataFrame:
+    """The left columns plus one carried value per value column, NULL where
+    the carried right ROW's ts (row-level, even when a value came from an
+    earlier row) is more than ``tolerance_seconds`` away."""
+    gap = epoch_seconds(F.col(on)) - epoch_seconds(carried_ts)
+    staleness = -gap if fwd else gap
+    out = []
+    for c, v in zip(value_cols, values):
+        if tolerance_seconds is not None:
+            v = F.when(staleness <= F.lit(tolerance_seconds), v)
+        out.append(v.alias(c))
+    return df.select(*left_cols, *out)
 
 
 def _asof_union_locf(
@@ -129,50 +182,13 @@ def _asof_union_locf(
     tolerance_seconds: int | None,
     direction: str = "backward",
 ) -> DataFrame:
-    left_cols = left.columns
-    # side=0 sorts right-side state BEFORE left probes at equal ts, so an
-    # exact-ts right row is visible to the left row at the same instant
-    # (merge_asof semantics: <= backward, >= forward). Forward (next
-    # observation) is the same scan over time REVERSED: order by ts desc
-    # and the running last(ignorenulls) carries the NEXT right row back.
-    l_tagged = left.select(
-        *left_cols,
-        F.lit(1).alias("__side"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(None).cast(right.schema[on].dataType).alias("__r_ts"),
+    fwd = direction == "forward"
+    local = _local_locf(
+        _tagged(left, right, on, by, value_cols), [by], on, value_cols, fwd
     )
-    r_tagged = right.select(
-        F.col(by),
-        F.col(on),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in (by, on)],
-        F.lit(0).alias("__side"),
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.col(on).alias("__r_ts"),
-    ).select(*l_tagged.columns)
-
-    ts_ord = F.col(on).asc() if direction == "backward" else F.col(on).desc()
-    w = (
-        Window.partitionBy(by)
-        .orderBy(ts_ord, F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = l_tagged.unionByName(r_tagged)
-    out_vals = []
-    carried_ts = F.last("__r_ts", ignorenulls=True).over(w)
-    staleness = (
-        epoch_seconds(F.col(on)) - epoch_seconds(carried_ts)
-        if direction == "backward"
-        else epoch_seconds(carried_ts) - epoch_seconds(F.col(on))
-    )
-    for c in value_cols:
-        v = F.last(f"__r_{c}", ignorenulls=True).over(w)
-        if tolerance_seconds is not None:
-            v = F.when(staleness <= F.lit(tolerance_seconds), v)
-        out_vals.append(v.alias(c))
-    return (
-        filled.select(*left_cols, F.col("__side"), *out_vals)
-        .filter(F.col("__side") == 1)
-        .drop("__side")
+    return _project(
+        local, left.columns, on, value_cols, F.col("__ts"),
+        [F.col(f"__v_{c}") for c in value_cols], tolerance_seconds, fwd,
     )
 
 
@@ -183,12 +199,14 @@ def _asof_union_locf_chunked(
     by: str,
     value_cols: list[str],
     tolerance_seconds: int | None,
-    chunk_seconds: int,
+    chunk: Column,
     direction: str = "backward",
 ) -> DataFrame:
     """Skew-proof LOCF: the plain union_locf partitions by key, so one
     heavy-hitter key serializes into a single task. This variant is the
-    classic two-phase parallel prefix scan over time chunks:
+    classic two-phase parallel prefix scan over time chunks, ``chunk``
+    being each row's chunk number (an expression over ``by`` and ``on``
+    that grows with ts within a key):
 
       phase 1: local LOCF within (key, time-chunk) — parallel across chunks
                of the same key
@@ -205,49 +223,10 @@ def _asof_union_locf_chunked(
     non-null per column, and the carry window walks chunks in descending
     order (next observation carried backward)."""
     fwd = direction == "forward"
-    left_cols = left.columns
-    chunk = lambda c: F.floor(epoch_seconds(c) / F.lit(chunk_seconds))  # noqa: E731
-
-    l_tagged = left.select(
-        *left_cols,
-        F.lit(1).alias("__side"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in value_cols],
-        F.lit(None).cast(right.schema[on].dataType).alias("__r_ts"),
-    )
-    r_tagged = right.select(
-        F.col(by),
-        F.col(on),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in (by, on)],
-        F.lit(0).alias("__side"),
-        *[F.col(c).alias(f"__r_{c}") for c in value_cols],
-        F.col(on).alias("__r_ts"),
-    ).select(*l_tagged.columns)
-    unioned = l_tagged.unionByName(r_tagged).withColumn("__chunk", chunk(F.col(on)))
-    # three consumers (local LOCF, summaries, chunk domain): an explicit
-    # exchange on (key, chunk) lets Catalyst plan ONE shuffle and feed all
-    # three subtrees from it (ReusedExchange) — upstream scan/feature
-    # expressions run once, with no cache memory held
-    unioned = unioned.repartition(F.col(by), F.col("__chunk"))
+    tagged = _tagged(left, right, on, by, value_cols).withColumn("__chunk", chunk)
 
     # phase 1: local LOCF inside each (key, chunk)
-    w_local = (
-        Window.partitionBy(by, "__chunk")
-        .orderBy(
-            F.col(on).desc() if fwd else F.col(on).asc(),
-            F.col("__side").asc(),
-        )
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = unioned.select(
-        *left_cols,
-        "__side",
-        "__chunk",
-        F.last("__r_ts", ignorenulls=True).over(w_local).alias("__loc_ts"),
-        *[
-            F.last(f"__r_{c}", ignorenulls=True).over(w_local).alias(f"__loc_{c}")
-            for c in value_cols
-        ],
-    ).filter(F.col("__side") == 1)
+    local = _local_locf(tagged, [by, "__chunk"], on, value_cols, fwd)
 
     # phase 2: per-chunk summaries of the right side, then cross-chunk scan.
     # PER-COLUMN summaries, not row-level: plain union_locf carries each
@@ -256,60 +235,43 @@ def _asof_union_locf_chunked(
     # (Row-level max(struct(ts, values)) diverged exactly there.) The ts
     # carried for the tolerance check stays ROW-level (last right row's ts),
     # matching union_locf's carried_ts.
-    agg_ts = F.min("__r_ts") if fwd else F.max("__r_ts")
-    agg_struct = F.min if fwd else F.max
+    agg = F.min if fwd else F.max
     summary = (
-        unioned.filter(F.col("__side") == 0)
+        tagged.filter(F.col("__side") == 0)
         .groupBy(by, "__chunk")
         .agg(
-            agg_ts.alias("__last_ts"),
+            agg("__r_ts").alias("__last_ts"),
             *[
-                agg_struct(
+                agg(
                     F.when(
                         F.col(f"__r_{c}").isNotNull(),
-                        F.struct(
-                            F.col("__r_ts").alias("ts"),
-                            F.col(f"__r_{c}").alias("v"),
-                        ),
+                        F.struct(F.col("__r_ts").alias("ts"), F.col(f"__r_{c}").alias("v")),
                     )
                 ).alias(f"__last_{c}")
                 for c in value_cols
             ],
         )
     )
-    domain = unioned.select(by, "__chunk").distinct()
+    domain = tagged.select(by, "__chunk").distinct()
     w_carry = (
         Window.partitionBy(by)
         .orderBy(F.col("__chunk").desc() if fwd else F.col("__chunk").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    carry = (
-        domain.join(summary, [by, "__chunk"], "left")
-        .select(
-            by,
-            "__chunk",
-            F.last("__last_ts", ignorenulls=True).over(w_carry).alias("__carry_ts"),
-            *[
-                F.last(f"__last_{c}", ignorenulls=True)
-                .over(w_carry)
-                .alias(f"__carry_{c}")
-                for c in value_cols
-            ],
-        )
+    carry = domain.join(summary, [by, "__chunk"], "left").select(
+        by,
+        "__chunk",
+        F.last("__last_ts", ignorenulls=True).over(w_carry).alias("__carry_ts"),
+        *[
+            F.last(f"__last_{c}", ignorenulls=True).over(w_carry).alias(f"__carry_{c}")
+            for c in value_cols
+        ],
     )
 
     # phase 3: stitch
-    out = local.join(carry, [by, "__chunk"], "left")
-    carried_ts = F.coalesce(F.col("__loc_ts"), F.col("__carry_ts"))
-    staleness = (
-        epoch_seconds(F.col(on)) - epoch_seconds(carried_ts)
-        if not fwd
-        else epoch_seconds(carried_ts) - epoch_seconds(F.col(on))
+    return _project(
+        local.join(carry, [by, "__chunk"], "left"), left.columns, on, value_cols,
+        F.coalesce(F.col("__ts"), F.col("__carry_ts")),
+        [F.coalesce(F.col(f"__v_{c}"), F.col(f"__carry_{c}.v")) for c in value_cols],
+        tolerance_seconds, fwd,
     )
-    vals = []
-    for c in value_cols:
-        v = F.coalesce(F.col(f"__loc_{c}"), F.col(f"__carry_{c}.v"))
-        if tolerance_seconds is not None:
-            v = F.when(staleness <= F.lit(tolerance_seconds), v)
-        vals.append(v.alias(c))
-    return out.select(*left_cols, *vals)

@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from feature_extractor_spark.encoder.forward import encoder_forward
 from feature_extractor_spark.functions.timeutil import epoch_seconds
+from feature_extractor_spark.operators.skew import HEAVY_CELL_SECONDS
 
 
 def _scan_row_numbers(
@@ -68,16 +69,12 @@ def _scan_row_numbers(
 
 
 def _chunk_assign(
-    src: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    W: int,
-    rows_per_chunk: int,
-    rn_ts_chunk_seconds: int,
+    src: DataFrame, entity_col: str, ts_col: str, W: int, rows_per_chunk: int
 ) -> DataFrame:
-    """Scan-based row numbers -> row-count chunks -> W-1 context rows
-    replicated into the next chunk (single pass, inline)."""
-    base = _scan_row_numbers(src, entity_col, ts_col, rn_ts_chunk_seconds)
+    """Scan-based row numbers over ``HEAVY_CELL_SECONDS`` time cells ->
+    row-count chunks -> W-1 context rows replicated into the next chunk
+    (single pass, inline)."""
+    base = _scan_row_numbers(src, entity_col, ts_col, HEAVY_CELL_SECONDS)
     chunk = F.floor(F.col("__rn") / rows_per_chunk)
     assign = F.when(
         F.pmod(F.col("__rn"), F.lit(rows_per_chunk)) >= rows_per_chunk - (W - 1),
@@ -139,7 +136,6 @@ def windowed_encode(
     weights: dict[str, np.ndarray],
     h_dim: int = 4,
     rows_per_chunk: int = 8192,
-    rn_ts_chunk_seconds: int = 6 * 3600,
     sub_batch: int = 128,
     out_col: str = "z_mean",
     heavy_keys: list | None = None,
@@ -160,7 +156,9 @@ def windowed_encode(
     (scan row numbers + context replication + (entity, chunk) shuffle);
     everything else groups whole entities in one exchange with no row
     numbering at all — the chunked machinery exists for entities too big
-    for one task, which by definition is just the Zipf head."""
+    for one task, which by definition is just the Zipf head. Chunked rows
+    are numbered within ``skew.HEAVY_CELL_SECONDS`` time cells, the grid
+    the ``auto`` as-of join cuts heavy keys on."""
     W = window_size
     if rows_per_chunk < W:
         raise ValueError("rows_per_chunk must be >= window_size")
@@ -197,12 +195,10 @@ def windowed_encode(
             )
         )
         heavy_src = src.filter(F.col(entity_col).isin(heavy_keys))
-        heavy = _chunk_assign(heavy_src, entity_col, ts_col, W, rows_per_chunk,
-                              rn_ts_chunk_seconds)
+        heavy = _chunk_assign(heavy_src, entity_col, ts_col, W, rows_per_chunk)
         both = light.unionByName(heavy)
     else:
-        both = _chunk_assign(src, entity_col, ts_col, W, rows_per_chunk,
-                             rn_ts_chunk_seconds)
+        both = _chunk_assign(src, entity_col, ts_col, W, rows_per_chunk)
 
     sc = df.sparkSession.sparkContext
     bw = sc.broadcast(dict(weights))

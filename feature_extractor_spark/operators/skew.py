@@ -28,16 +28,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# heavy keys are cut into time cells of this width: the as-of scan's
+# chunks and the fused stage's row-number cells are one grid
+HEAVY_CELL_SECONDS = 6 * 3600
+
+
 def detect_heavy_hitters(
-    df: DataFrame,
-    key_col: str,
-    threshold_share: float = 0.05,
-    sample_fraction: float | None = 0.1,
+    df: DataFrame, key_col: str, threshold_share: float = 0.02
 ) -> list[str]:
-    """Keys holding more than ``threshold_share`` of (sampled) rows."""
-    sampled = df.select(key_col)
-    if sample_fraction is not None and sample_fraction < 1.0:
-        sampled = sampled.sample(fraction=sample_fraction, seed=42)
+    """Keys holding more than ``threshold_share`` of a 10 % row sample."""
+    sampled = df.select(key_col).sample(fraction=0.1, seed=42)
     counts = sampled.groupBy(key_col).count()
     total = counts.agg(F.sum("count")).first()[0] or 0
     if total == 0:

@@ -37,12 +37,9 @@ def encoder_pipeline(
     aux_df: DataFrame | None = None,
     aux_value_cols: list[str] | None = None,
     weights: dict | None = None,
-    heavy_share: float = 0.02,
 ) -> DataFrame:
     """The §3.2 dataflow with skew-adaptive physical strategies."""
-    heavy = detect_heavy_hitters(
-        input_df, entity_col, threshold_share=heavy_share
-    )
+    heavy = detect_heavy_hitters(input_df, entity_col)
     df = input_df
     feats = list(feature_cols)
     if aux_df is not None:

@@ -7,7 +7,9 @@ import datetime as dt
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from feature_extractor_spark.functions.timeutil import epoch_seconds
 from feature_extractor_spark.operators.asof import (
     _asof_union_locf_chunked,
     asof_join,
@@ -31,13 +33,18 @@ def _fixtures(spark, seed=7, n_left=120, n_right=40, keys=("a", "b", "c")):
     return left, right
 
 
-def _pandas_oracle(left, right, tolerance=None):
+def _cells(width):
+    """Chunk column of ``width``-second time cells for the chunked scan."""
+    return F.floor(epoch_seconds(F.col("ts")) / width)
+
+
+def _pandas_oracle(left, right, tolerance=None, direction="backward"):
     lp = left.toPandas().sort_values(["ts"], kind="mergesort")
     rp = right.toPandas().sort_values(["ts"], kind="mergesort")
     tol = pd.Timedelta(seconds=tolerance) if tolerance else None
     out = pd.merge_asof(
         lp, rp[["doc_id", "ts", "aux"]], on="ts", by="doc_id",
-        direction="backward", tolerance=tol,
+        direction=direction, tolerance=tol,
     )
     return out.sort_values(["doc_id", "ts"]).reset_index(drop=True)
 
@@ -84,8 +91,6 @@ def test_asof_exact_ts_visible(spark):
 def test_asof_zero_temporal_leakage(spark):
     """Perturbing right rows with ts > t never changes output at ts <= t."""
     left, right = _fixtures(spark)
-    from pyspark.sql import functions as F
-
     cut = dt.datetime(2024, 1, 3)
     perturbed = right.withColumn(
         "aux", F.when(F.col("ts") > cut, F.lit(-1e9)).otherwise(F.col("aux"))
@@ -116,6 +121,49 @@ def test_asof_auto_keeps_null_keys(spark):
     assert got.filter("doc_id IS NULL").count() == 3
 
 
+def _cells_fixtures(spark):
+    """Heavy keys h and g over eight 6 h cells: h has right rows only in its
+    first two cells and g only in its last two, so a value crosses empty
+    cells backward (h) and forward (g). Light keys a, b, c (c has no right
+    rows) and NULL keys on both sides."""
+    base = dt.datetime(2024, 1, 1)  # on a 6 h cell boundary
+
+    def at(minutes):
+        return base + dt.timedelta(minutes=minutes)
+
+    left = [(k, at(m), float(m)) for k in "hg" for m in range(0, 48 * 60, 20)]
+    left += [(k, at(60 * h), float(h)) for k in "abc" for h in range(1, 48, 7)]
+    left += [(None, at(60 * h), -float(h)) for h in (2, 11, 20, 29, 38)]
+    right = [("h", at(60 * h), 10.0 * h) for h in (1, 4, 8)]
+    right += [("g", at(60 * h), 10.0 * h) for h in (38, 41, 46)]
+    right += [("b", at(180), 3.0), ("b", at(1500), 25.0)]
+    right += [(None, at(300), -5.0), (None, at(1800), -30.0)]
+    return (
+        spark.createDataFrame(left, "doc_id string, ts timestamp, lval double"),
+        spark.createDataFrame(right, "doc_id string, ts timestamp, aux double"),
+    )
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("tol", [None, 8 * 3600], ids=["no-tol", "tol-8h"])
+def test_asof_auto_cells_match_pandas(spark, direction, tol):
+    """The auto route's one chunked scan (heavy keys in 6 h cells, every
+    other key, NULL included, in cell 0) == pandas merge_asof, which also
+    matches NULL keys to each other. An 8 h tolerance cuts values carried
+    across cells in both directions."""
+    left, right = _cells_fixtures(spark)
+    got = asof_join(
+        left, right, on="ts", by="doc_id", direction=direction,
+        tolerance_seconds=tol, strategy="auto", heavy_keys=["h", "g"],
+    ).toPandas()
+    got = got.sort_values(["doc_id", "ts"]).reset_index(drop=True)
+    exp = _pandas_oracle(left, right, tolerance=tol, direction=direction)
+    assert got["doc_id"].isna().sum() == 5
+    pd.testing.assert_frame_equal(
+        got[["doc_id", "ts", "lval", "aux"]], exp[["doc_id", "ts", "lval", "aux"]]
+    )
+
+
 def test_asof_chunked_nulls_in_values_match_plain(spark):
     """Per-column LOCF semantics: a later right row with NULL in one value
     column must not mask an earlier non-null value (chunked == plain even
@@ -142,7 +190,7 @@ def test_asof_chunked_nulls_in_values_match_plain(spark):
     )
     plain = asof_join(left, right, on="ts", by="doc_id", strategy="union_locf")
     chunked = _asof_union_locf_chunked(
-        left, right, "ts", "doc_id", ["aux1", "aux2"], None, 4 * 3600
+        left, right, "ts", "doc_id", ["aux1", "aux2"], None, _cells(4 * 3600)
     )
     pa = plain.orderBy("ts").toPandas()
     pb = chunked.orderBy("ts").toPandas()
@@ -174,22 +222,11 @@ def test_asof_chunked_nulls_with_tolerance_match_plain(spark):
             tolerance_seconds=tol,
         )
         chunked = _asof_union_locf_chunked(
-            left, right, "ts", "doc_id", ["aux"], tol, 6 * 3600
+            left, right, "ts", "doc_id", ["aux"], tol, _cells(6 * 3600)
         )
         pd.testing.assert_frame_equal(
             plain.orderBy("ts").toPandas(), chunked.orderBy("ts").toPandas()
         )
-
-
-def _pandas_oracle_fwd(left, right, tolerance=None):
-    lp = left.toPandas().sort_values(["ts"], kind="mergesort")
-    rp = right.toPandas().sort_values(["ts"], kind="mergesort")
-    tol = pd.Timedelta(seconds=tolerance) if tolerance else None
-    out = pd.merge_asof(
-        lp, rp[["doc_id", "ts", "aux"]], on="ts", by="doc_id",
-        direction="forward", tolerance=tol,
-    )
-    return out.sort_values(["doc_id", "ts"]).reset_index(drop=True)
 
 
 @pytest.mark.parametrize("strategy", ["union_locf", "auto"])
@@ -208,7 +245,7 @@ def test_asof_forward_matches_pandas(spark, strategy, tol):
         .toPandas()
         .reset_index(drop=True)
     )
-    exp = _pandas_oracle_fwd(left, right, tolerance=tol)
+    exp = _pandas_oracle(left, right, tolerance=tol, direction="forward")
     pd.testing.assert_frame_equal(
         got[["doc_id", "ts", "lval", "aux"]], exp[["doc_id", "ts", "lval", "aux"]]
     )
@@ -226,7 +263,7 @@ def test_asof_forward_chunked_and_auto_match_plain(spark):
     )
     for out in (
         _asof_union_locf_chunked(
-            left, right, "ts", "doc_id", ["aux"], None, 3600, "forward"
+            left, right, "ts", "doc_id", ["aux"], None, _cells(3600), "forward"
         ),
         asof_join(
             left, right, on="ts", by="doc_id", direction="forward",
@@ -270,7 +307,7 @@ def test_asof_forward_nulls_in_values_match_plain_chunked(spark):
         left, right, on="ts", by="doc_id", direction="forward"
     ).orderBy("ts").toPandas()
     chunked = _asof_union_locf_chunked(
-        left, right, "ts", "doc_id", ["aux"], None, 6 * 3600, "forward"
+        left, right, "ts", "doc_id", ["aux"], None, _cells(6 * 3600), "forward"
     ).orderBy("ts").toPandas()
     pd.testing.assert_frame_equal(plain, chunked)
     # rows at/before h=5 see the h=20 value (null at h=5 does not mask)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.encoder import init_weights
+from feature_extractor_spark.functions.timeutil import epoch_seconds
 from feature_extractor_spark.operators.asof import (
     _asof_union_locf_chunked,
     asof_join,
@@ -93,7 +94,8 @@ def test_chunked_locf_matches_plain(spark, chunk_seconds, tolerance):
     )
     chunked = (
         _asof_union_locf_chunked(
-            left, right, "ts", "doc_id", ["aux"], tolerance, chunk_seconds
+            left, right, "ts", "doc_id", ["aux"], tolerance,
+            F.floor(epoch_seconds(F.col("ts")) / chunk_seconds),
         )
         .orderBy("doc_id", "ts")
         .toPandas()

@@ -71,8 +71,7 @@ def test_fused_matches_unfused(spark, rows_per_chunk, batch_rows, null_entity,
     try:
         fused = windowed_encode(
             src, "doc_id", "ts", ["f1", "f2"], COND, W, weights,
-            rows_per_chunk=rows_per_chunk, rn_ts_chunk_seconds=3600,
-            heavy_keys=heavy_keys,
+            rows_per_chunk=rows_per_chunk, heavy_keys=heavy_keys,
         ).orderBy("doc_id", "ts").toPandas()
     finally:
         spark.conf.set(conf, old)
@@ -115,11 +114,9 @@ def test_fused_instage_conditions_match_jvm_conditions(spark):
                            conditioning_dim=10, latent_dim=8)
     a = windowed_encode(
         src, "doc_id", "ts", ["f1", "f2"], COND, W, weights,
-        rn_ts_chunk_seconds=3600,
     ).orderBy("doc_id", "ts").toPandas()
     b = windowed_encode(
         src, "doc_id", "ts", ["f1", "f2"], None, W, weights,
-        rn_ts_chunk_seconds=3600,
     ).orderBy("doc_id", "ts").toPandas()
     za = np.asarray([np.asarray(v) for v in a["z_mean"]])
     zb = np.asarray([np.asarray(v) for v in b["z_mean"]])
@@ -136,11 +133,11 @@ def test_fused_heavy_keys_split_matches(spark):
                            conditioning_dim=10, latent_dim=8)
     a = windowed_encode(
         src, "doc_id", "ts", ["f1", "f2"], None, W, weights,
-        rows_per_chunk=64, rn_ts_chunk_seconds=3600,
+        rows_per_chunk=64,
     ).orderBy("doc_id", "ts").toPandas()
     b = windowed_encode(
         src, "doc_id", "ts", ["f1", "f2"], None, W, weights,
-        rows_per_chunk=64, rn_ts_chunk_seconds=3600, heavy_keys=["d0"],
+        rows_per_chunk=64, heavy_keys=["d0"],
     ).orderBy("doc_id", "ts").toPandas()
     assert len(a) == len(b) > 0
     assert a["ts"].tolist() == b["ts"].tolist()

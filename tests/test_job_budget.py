@@ -10,10 +10,12 @@ from pyspark.sql import functions as F
 
 from conftest import JobCount
 from feature_extractor_spark.encoder import init_weights
+from feature_extractor_spark.functions.conditions import positional_encoding
 from feature_extractor_spark.functions.text import encode_bpe
 from feature_extractor_spark.operators.asof import asof_join
 from feature_extractor_spark.operators.dedup import near_dup_clusters
 from feature_extractor_spark.operators.fused import windowed_encode
+from feature_extractor_spark.operators.packing import pack_sequences
 from feature_extractor_spark.operators.skew import detect_heavy_hitters
 from feature_extractor_spark.plans.tokens_pipeline import curate_tokens
 from feature_extractor_spark.sources.tokens import synth_tokens
@@ -53,11 +55,29 @@ def test_asof_union_locf_plan_runs_no_job(spark, events, purchases):
 
 
 def test_asof_auto_job_ceiling(spark, events, purchases):
-    # the heavy-key time span (.first()) sizes the chunks
+    # a fixed cell width, not one sized from the heavy keys' time span (2
+    # jobs for its .first())
     with JobCount(spark) as jobs:
         asof_join(events, purchases, on="ts", by="doc_id", strategy="auto",
                   heavy_keys=["h"])
-    assert jobs.n <= 2
+    assert jobs.n == 0
+
+
+def test_routed_featurize_job_ceiling(spark, events, purchases):
+    # detection, the auto as-of join, the fused stage and the write: 21 (24
+    # when the as-of join sized its chunks with a .first() and ran light
+    # and heavy keys as two plans)
+    w = init_weights(window_size=8, n_features=2, latent_dim=4)
+    with JobCount(spark) as jobs:
+        heavy = detect_heavy_hitters(events, "doc_id", threshold_share=0.2)
+        joined = asof_join(events, purchases, on="ts", by="doc_id",
+                           strategy="auto", heavy_keys=heavy).na.fill({"aux": 0.0})
+        windowed_encode(joined, "doc_id", "ts", ["value", "aux"], None, 8, w,
+                        heavy_keys=heavy).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert heavy == ["h"]
+    assert jobs.n <= 21
 
 
 def test_detect_heavy_hitters_job_ceiling(spark, events):
@@ -65,6 +85,19 @@ def test_detect_heavy_hitters_job_ceiling(spark, events):
         heavy = detect_heavy_hitters(events, "doc_id", threshold_share=0.2)
     assert heavy == ["h"]
     assert jobs.n <= 5
+
+
+@pytest.mark.parametrize("op", ["pack_sequences", "positional_encoding"])
+def test_global_scan_plan_job_ceiling(spark, op):
+    # the scan's lazy checkpoint runs its range sampling and shuffle while
+    # the plan is built under AQE
+    toks = synth_tokens(spark, n_rows=300, n_docs=20)
+    with JobCount(spark) as jobs:
+        if op == "pack_sequences":
+            pack_sequences(toks, ["doc_id", "ts"], context_len=256)
+        else:
+            positional_encoding(toks, "ts")
+    assert jobs.n <= 2
 
 
 def test_encode_bpe_plan_over_shuffled_input_runs_no_job(spark):

@@ -241,7 +241,7 @@ def pipeline(spark, heavy=None):
         joined, "doc_id", "ts", ["f_len", "f_mean_tok", "aux"], None, W, weights,
         # chunk ~ the light entities' group size: a heavy chunk bigger than
         # the average task creates a straggler tail (measured 40% idle)
-        rows_per_chunk=1024, rn_ts_chunk_seconds=6 * 3600, heavy_keys=heavy,
+        rows_per_chunk=1024, heavy_keys=heavy,
     )
 
 
