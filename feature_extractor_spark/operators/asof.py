@@ -23,11 +23,11 @@ Two strategies:
 
 - ``auto``: the skew-adaptive route, one two-phase parallel prefix scan.
   Heavy-hitter keys (``heavy_keys``, or ``skew.detect_heavy_hitters`` when
-  None) are cut into time cells of ``skew.HEAVY_CELL_SECONDS``, the grid
-  the fused stage numbers heavy rows on; every other key is one cell. LOCF
-  runs inside each cell and the last value is carried across cells, so one
-  Zipf-head key no longer serializes into a single task, and a one-cell key
-  gets exactly the plain LOCF.
+  None) are cut into time cells by ``skew.heavy_cell``, the rule the fused
+  stage numbers rows on; every other key is one NULL cell. LOCF runs
+  inside each cell and the last value is carried across the heavy keys'
+  cells, so one Zipf-head key no longer serializes into a single task, and
+  a NULL-cell key gets exactly the plain LOCF.
 
 A tolerance (max staleness) is supported in both.
 """
@@ -38,10 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.functions.timeutil import epoch_seconds
-from feature_extractor_spark.operators.skew import (
-    HEAVY_CELL_SECONDS,
-    detect_heavy_hitters,
-)
+from feature_extractor_spark.operators.skew import detect_heavy_hitters, heavy_cell
 
 
 def asof_join(
@@ -85,8 +82,8 @@ def _asof_auto(
 
     The per-key union_locf is already parallel ACROSS keys; a key only hurts
     when it alone dwarfs a task. So the heavy keys' rows fall into
-    ``HEAVY_CELL_SECONDS`` time cells and every other key, NULL included,
-    is the single cell 0 of the same chunked scan: a one-cell key carries
+    ``skew.heavy_cell`` time cells and every other key, NULL included, is
+    the one NULL cell of the same chunked scan: a NULL cell carries
     nothing in, so its result is the plain LOCF. The grid is a constant,
     so building the plan runs no Spark job. Cutting EVERY key into fine
     cells would be wrong: the chunk-domain table degenerates to ~|left|
@@ -100,13 +97,9 @@ def _asof_auto(
         return _asof_union_locf(
             left, right, on, by, value_cols, tolerance_seconds, direction
         )
-    # isin is NULL for a NULL key, which otherwise() sends to cell 0
-    cell = F.when(
-        F.col(by).isin(heavy),
-        F.floor(epoch_seconds(F.col(on)) / F.lit(HEAVY_CELL_SECONDS)),
-    ).otherwise(F.lit(0))
     return _asof_union_locf_chunked(
-        left, right, on, by, value_cols, tolerance_seconds, cell, direction
+        left, right, on, by, value_cols, tolerance_seconds,
+        heavy_cell(by, on, heavy), direction,
     )
 
 
@@ -218,10 +211,12 @@ def _asof_union_locf_chunked(
 
     Exact for ANY chunking — a right value carries across arbitrarily many
     empty chunks through the summary scan. Same semantics as union_locf
-    (verified in tests). ``direction="forward"`` is the time-mirrored
-    scan: local pass ordered desc, per-chunk summaries keep the EARLIEST
-    non-null per column, and the carry window walks chunks in descending
-    order (next observation carried backward)."""
+    (verified in tests). A row whose ``chunk`` is NULL is in its key's one
+    NULL chunk: it gets phase 1 only, and phases 2 and 3 never see it.
+    ``direction="forward"`` is the time-mirrored scan: local pass ordered
+    desc, per-chunk summaries keep the EARLIEST non-null per column, and
+    the carry window walks chunks in descending order (next observation
+    carried backward)."""
     fwd = direction == "forward"
     tagged = _tagged(left, right, on, by, value_cols).withColumn("__chunk", chunk)
 
@@ -234,25 +229,24 @@ def _asof_union_locf_chunked(
     # row with a NULL in column c must NOT mask an earlier non-null c.
     # (Row-level max(struct(ts, values)) diverged exactly there.) The ts
     # carried for the tolerance check stays ROW-level (last right row's ts),
-    # matching union_locf's carried_ts.
-    agg = F.min if fwd else F.max
+    # matching union_locf's carried_ts. max_by/min_by keep a fixed-width
+    # buffer, so the summary is a hash aggregate.
+    agg, agg_by = (F.min, F.min_by) if fwd else (F.max, F.max_by)
+    cells = tagged.filter(F.col("__chunk").isNotNull())
     summary = (
-        tagged.filter(F.col("__side") == 0)
+        cells.filter(F.col("__side") == 0)
         .groupBy(by, "__chunk")
         .agg(
             agg("__r_ts").alias("__last_ts"),
             *[
-                agg(
-                    F.when(
-                        F.col(f"__r_{c}").isNotNull(),
-                        F.struct(F.col("__r_ts").alias("ts"), F.col(f"__r_{c}").alias("v")),
-                    )
+                agg_by(
+                    f"__r_{c}", F.when(F.col(f"__r_{c}").isNotNull(), F.col("__r_ts"))
                 ).alias(f"__last_{c}")
                 for c in value_cols
             ],
         )
     )
-    domain = tagged.select(by, "__chunk").distinct()
+    domain = cells.select(by, "__chunk").distinct()
     w_carry = (
         Window.partitionBy(by)
         .orderBy(F.col("__chunk").desc() if fwd else F.col("__chunk").asc())
@@ -268,10 +262,10 @@ def _asof_union_locf_chunked(
         ],
     )
 
-    # phase 3: stitch
+    # phase 3: stitch; a NULL chunk matches no carry row
     return _project(
         local.join(carry, [by, "__chunk"], "left"), left.columns, on, value_cols,
         F.coalesce(F.col("__ts"), F.col("__carry_ts")),
-        [F.coalesce(F.col(f"__v_{c}"), F.col(f"__carry_{c}.v")) for c in value_cols],
+        [F.coalesce(F.col(f"__v_{c}"), F.col(f"__carry_{c}")) for c in value_cols],
         tolerance_seconds, fwd,
     )

@@ -8,15 +8,21 @@ consumed by exactly one reader (the encoder).
 
 This operator never materializes windows outside a NumPy view:
 
-  raw rows -> scan-based per-entity row numbers (no serial pass)
-           -> chunk assignment + W-1 context-row replication (explode)
+  raw rows -> per-entity row numbers within (entity, skew.heavy_cell):
+              heavy entities in parallel time cells plus prefix offsets,
+              every other entity as one NULL cell
+           -> chunks of rows_per_chunk rows + W-1 context-row replication
+              (explode)
            -> ONE shuffle of raw rows on (entity, chunk) into one partition
               per core, sorted by (entity, chunk, row number, ts)
            -> mapInPandas, one vectorized kernel call per Arrow batch:
-                group boundaries and in-group positions in NumPy, one
+                owned rows (not context, row number >= W-1) in NumPy, one
                 np.sliding_window_view (zero-copy) over the batch, encoder
                 forward in sub-batches, emit (entity, ts, z_mean); the
                 batch's last group is carried into the next batch
+
+Every row takes this one route; the heavy keys only change how the row
+numbers are computed, never which path a row goes down.
 
 Parity vs the unfused path is allclose(rtol=1e-5) (tests); throughput and
 scaling are the reason it exists (see BENCH.md).
@@ -34,47 +40,40 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_extractor_spark.encoder.forward import encoder_forward
-from feature_extractor_spark.functions.timeutil import epoch_seconds
-from feature_extractor_spark.operators.skew import HEAVY_CELL_SECONDS
-
-
-def _scan_row_numbers(
-    src: DataFrame, entity_col: str, ts_col: str, ts_chunk_seconds: int
-) -> DataFrame:
-    """Global per-entity 0-based __rn without a per-entity serial sort:
-    row_number within (entity, time-chunk) + prefix-sum of chunk counts."""
-    tchunk = F.floor(epoch_seconds(F.col(ts_col)) / F.lit(ts_chunk_seconds))
-    marked = src.withColumn("__tc", tchunk)
-    w_local = Window.partitionBy(entity_col, "__tc").orderBy(ts_col)
-    local = marked.withColumn("__lrn", F.row_number().over(w_local) - 1)
-    w_off = (
-        Window.partitionBy(entity_col)
-        .orderBy("__tc")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        marked.groupBy(entity_col, "__tc")
-        .agg(F.count(F.lit(1)).alias("__cnt"))
-        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)))
-        .select(F.col(entity_col).alias("__oe"), F.col("__tc").alias("__otc"), "__off")
-    )
-    # NULL-safe on the entity: a plain equi-join drops NULL-keyed rows, which
-    # Window.partitionBy above keeps as one entity
-    on = F.col(entity_col).eqNullSafe(F.col("__oe")) & (F.col("__tc") == F.col("__otc"))
-    return (
-        local.join(offsets, on)
-        .withColumn("__rn", (F.col("__lrn") + F.col("__off")).cast("long"))
-        .drop("__tc", "__lrn", "__oe", "__otc", "__off")
-    )
+from feature_extractor_spark.operators.skew import heavy_cell
 
 
 def _chunk_assign(
-    src: DataFrame, entity_col: str, ts_col: str, W: int, rows_per_chunk: int
+    src: DataFrame, entity_col: str, ts_col: str, W: int, rows_per_chunk: int,
+    heavy_keys: list | None,
 ) -> DataFrame:
-    """Scan-based row numbers over ``HEAVY_CELL_SECONDS`` time cells ->
-    row-count chunks -> W-1 context rows replicated into the next chunk
-    (single pass, inline)."""
-    base = _scan_row_numbers(src, entity_col, ts_col, HEAVY_CELL_SECONDS)
+    """Per-entity 0-based ``__rn`` in ts order -> row-count chunks -> W-1
+    context rows replicated into the next chunk (single pass, inline).
+
+    ``__rn`` is a row_number within (entity, ``skew.heavy_cell``): a heavy
+    entity is numbered in parallel across its time cells, then shifted by
+    the prefix sum of its earlier cells' counts; every other entity is one
+    NULL cell, numbered whole, with no offset to add."""
+    marked = src.withColumn("__cell", heavy_cell(entity_col, ts_col, heavy_keys))
+    w_local = Window.partitionBy(entity_col, "__cell").orderBy(ts_col)
+    base = marked.withColumn("__rn", F.row_number().over(w_local) - 1)
+    if heavy_keys:
+        w_off = (
+            Window.partitionBy(entity_col)
+            .orderBy("__cell")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offsets = (
+            marked.filter(F.col("__cell").isNotNull())
+            .groupBy(entity_col, "__cell")
+            .count()
+            .select(entity_col, "__cell", F.sum("count").over(w_off).alias("__off"))
+        )
+        # a NULL cell (light or NULL entity) matches no offset row, and an
+        # entity's first cell has no earlier cells to sum
+        base = base.join(offsets, [entity_col, "__cell"], "left").withColumn(
+            "__rn", F.col("__rn") + F.coalesce(F.col("__off"), F.lit(0))
+        )
     chunk = F.floor(F.col("__rn") / rows_per_chunk)
     assign = F.when(
         F.pmod(F.col("__rn"), F.lit(rows_per_chunk)) >= rows_per_chunk - (W - 1),
@@ -85,7 +84,7 @@ def _chunk_assign(
     ).otherwise(
         F.array(F.struct(chunk.alias("__chunk"), F.lit(False).alias("__ctx")))
     )
-    return base.select("*", F.inline(assign), F.lit(False).alias("__local"))
+    return base.select(*src.columns, "__rn", F.inline(assign))
 
 
 def _cyclical_np(ts: pd.Series) -> np.ndarray:
@@ -152,13 +151,12 @@ def windowed_encode(
     friendly and 128 is the measured sweet spot: 618k windows/s at 32
     procs vs 316k at sub=32 (tiny GEMMs) and flat beyond 128.
 
-    ``heavy_keys``: when given, ONLY those entities take the chunked path
-    (scan row numbers + context replication + (entity, chunk) shuffle);
-    everything else groups whole entities in one exchange with no row
-    numbering at all — the chunked machinery exists for entities too big
-    for one task, which by definition is just the Zipf head. Chunked rows
-    are numbered within ``skew.HEAVY_CELL_SECONDS`` time cells, the grid
-    the ``auto`` as-of join cuts heavy keys on."""
+    ``heavy_keys`` (None and ``[]`` alike mean none): the entities whose
+    rows are numbered within ``skew.heavy_cell`` time cells, the cells the
+    ``auto`` as-of join cuts them on, so numbering a Zipf-head entity is
+    not one serial task. Every entity, heavy or not, is then cut into
+    chunks of ``rows_per_chunk`` rows, each led by the W-1 rows before it,
+    and shuffled once on (entity, chunk)."""
     W = window_size
     if rows_per_chunk < W:
         raise ValueError("rows_per_chunk must be >= window_size")
@@ -171,34 +169,7 @@ def windowed_encode(
 
     in_stage_conds = cond_cols is None
     src = df.select(entity_col, ts_col, *feature_cols, *(cond_cols or []))
-
-    def _whole_entity(df_):
-        return df_.select(
-            "*",
-            F.lit(0).cast("long").alias("__rn"),
-            F.lit(0).cast("long").alias("__chunk"),
-            F.lit(False).alias("__ctx"),
-            F.lit(True).alias("__local"),
-        )
-
-    if heavy_keys is not None and not heavy_keys:
-        # detection ran and found nothing: pure whole-entity path — no
-        # union with an empty chunk-assign branch (its row-number windows,
-        # groupBy and join add ~8 empty stages of pure scheduling latency)
-        both = _whole_entity(src)
-    elif heavy_keys is not None:
-        # isNull() branch: ~isin is NULL for NULL entity keys, which would
-        # silently drop them from both branches
-        light = _whole_entity(
-            src.filter(
-                F.col(entity_col).isNull() | ~F.col(entity_col).isin(heavy_keys)
-            )
-        )
-        heavy_src = src.filter(F.col(entity_col).isin(heavy_keys))
-        heavy = _chunk_assign(heavy_src, entity_col, ts_col, W, rows_per_chunk)
-        both = light.unionByName(heavy)
-    else:
-        both = _chunk_assign(src, entity_col, ts_col, W, rows_per_chunk)
+    rows = _chunk_assign(src, entity_col, ts_col, W, rows_per_chunk, heavy_keys)
 
     sc = df.sparkSession.sparkContext
     bw = sc.broadcast(dict(weights))
@@ -217,16 +188,10 @@ def windowed_encode(
         if n < W:
             return
         ent = pdf[entity_col].to_numpy()
-        start = _group_starts(ent, pdf["__chunk"].to_numpy())
-        first = np.flatnonzero(start)
-        pos = np.arange(n) - first[np.cumsum(start) - 1]  # in-group position
-        # a window needs W rows of its own group; whole-entity groups own
-        # every row, chunked ones only rows that are not context and have
-        # W-1 predecessors in the whole entity
-        owned = (pos >= W - 1) & (
-            pdf["__local"].to_numpy()
-            | (~pdf["__ctx"].to_numpy() & (pdf["__rn"].to_numpy() >= W - 1))
-        )
+        # a group owns the windows ending at its non-context rows with W-1
+        # predecessors in the entity; those predecessors are in the group,
+        # as its own rows or the W-1 context rows that lead it
+        owned = ~pdf["__ctx"].to_numpy() & (pdf["__rn"].to_numpy() >= W - 1)
         idx = np.flatnonzero(owned)
         if not len(idx):
             return
@@ -291,7 +256,7 @@ def windowed_encode(
     # shuffle bytes and would starve this compute-bound stage. The __rn
     # tiebreak orders equal-ts context and owned rows the same on every run.
     return (
-        both.repartition(sc.defaultParallelism, F.col(entity_col), F.col("__chunk"))
+        rows.repartition(sc.defaultParallelism, F.col(entity_col), F.col("__chunk"))
         .sortWithinPartitions(entity_col, "__chunk", "__rn", ts_col)
         .mapInPandas(kernel, schema)
     )

@@ -27,10 +27,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from feature_extractor_spark.functions.timeutil import epoch_seconds
+
 
 # heavy keys are cut into time cells of this width: the as-of scan's
 # chunks and the fused stage's row-number cells are one grid
 HEAVY_CELL_SECONDS = 6 * 3600
+
+
+def heavy_cell(key: str, ts: str, heavy_keys: list | None) -> Column:
+    """The cell rule both skew routes cut rows on: a heavy key's row gets
+    ``floor(epoch_seconds(ts) / HEAVY_CELL_SECONDS)``, every other key,
+    NULL included, gets NULL, which stands for one cell per key with
+    nothing carried across cells. A heavy key's NULL-ts rows get the
+    lowest cell, ahead of every other, where a nulls-first sort on ts puts
+    them."""
+    if not heavy_keys:
+        return F.lit(None).cast("long")
+    cell = F.floor(epoch_seconds(ts) / F.lit(HEAVY_CELL_SECONDS))
+    # isin is NULL for a NULL key, so when() leaves it NULL too
+    return F.when(
+        F.col(key).isin(heavy_keys), F.coalesce(cell, F.lit(-(2**63)))
+    )
 
 
 def detect_heavy_hitters(

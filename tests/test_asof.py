@@ -148,7 +148,7 @@ def _cells_fixtures(spark):
 @pytest.mark.parametrize("tol", [None, 8 * 3600], ids=["no-tol", "tol-8h"])
 def test_asof_auto_cells_match_pandas(spark, direction, tol):
     """The auto route's one chunked scan (heavy keys in 6 h cells, every
-    other key, NULL included, in cell 0) == pandas merge_asof, which also
+    other key, NULL included, in one NULL cell) == pandas merge_asof, which also
     matches NULL keys to each other. An 8 h tolerance cuts values carried
     across cells in both directions."""
     left, right = _cells_fixtures(spark)

@@ -48,14 +48,17 @@ def _assert_same_latents(a, b):
 
 @pytest.mark.parametrize("rows_per_chunk", [16, 33, 1000])
 def test_chunked_windows_match_plain(spark, rows_per_chunk):
-    """Every entity chunked (chunks of exactly W rows, unaligned, and one
-    chunk per entity) == every entity whole in one group."""
+    """Entities cut into chunks (of exactly W rows, unaligned, and one per
+    entity), numbered whole or on the heavy keys' 6 h cells (34 per
+    entity here) == every entity in one chunk."""
     df = _series(spark)
     w = 16
-    plain = _fused(df, w, heavy_keys=[])
-    chunked = _fused(df, w, rows_per_chunk=rows_per_chunk)
-    assert len(plain) == len(chunked) == 2 * (200 - w + 1)
-    _assert_same_latents(plain, chunked)
+    plain = _fused(df, w)
+    assert len(plain) == 2 * (200 - w + 1)
+    for heavy in (None, ["a", "b"]):
+        chunked = _fused(df, w, rows_per_chunk=rows_per_chunk, heavy_keys=heavy)
+        assert len(chunked) == len(plain)
+        _assert_same_latents(plain, chunked)
 
 
 def test_chunked_windows_rejects_tiny_chunks(spark):
@@ -115,29 +118,39 @@ def _skewed(spark, n_heavy=3000, n_light=50, n_entities=20):
 
 
 def test_auto_windows_match_plain_on_skew(spark):
-    """The production route: detected heavy hitters take the chunked path
-    (12 chunks of the heavy entity), the rest whole entities."""
+    """The production route: detected heavy hitters numbered on their time
+    cells, 256-row chunks (12 of the heavy entity) == one chunk each."""
     df = _skewed(spark)
     w = 16
     heavy = detect_heavy_hitters(df, "doc_id", threshold_share=0.02)
     assert "heavy" in heavy
-    plain = _fused(df, w, heavy_keys=[])
+    plain = _fused(df, w)
     auto = _fused(df, w, heavy_keys=heavy, rows_per_chunk=256)
     assert len(plain) == len(auto) == (3000 - w + 1) + 20 * (50 - w + 1)
     _assert_same_latents(plain, auto)
 
 
 def test_scan_row_numbers_match_global(spark):
-    from feature_extractor_spark.operators.fused import _scan_row_numbers
+    """The fused stage's row numbers == a global per-entity row_number: a
+    heavy entity over seven 6 h cells (one row with a NULL ts), light
+    entities as one NULL cell each, and a NULL entity."""
+    from feature_extractor_spark.operators.fused import _chunk_assign
     from pyspark.sql import Window as W
 
-    df = _skewed(spark, n_heavy=500, n_light=30, n_entities=5)
-    got = _scan_row_numbers(df, "doc_id", "ts", ts_chunk_seconds=3600)
+    base = dt.datetime(2024, 1, 1)
+    rows = [("heavy", base + dt.timedelta(minutes=5 * i)) for i in range(500)]
+    rows.append(("heavy", None))
+    for e in ("light_0", "light_1", None):
+        rows += [(e, base + dt.timedelta(minutes=7 * i)) for i in range(30)]
+    df = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(rows)], "i long, doc_id string, ts timestamp"
+    )
+    got = _chunk_assign(df, "doc_id", "ts", 16, 64, ["heavy"]).filter(~F.col("__ctx"))
     w = W.partitionBy("doc_id").orderBy("ts")
-    exp = df.withColumn("__rn_exp", F.row_number().over(w) - 1)
-    joined = got.join(exp, ["doc_id", "ts", "value"])
-    assert joined.filter(F.col("__rn") != F.col("__rn_exp")).count() == 0
-    assert joined.count() == df.count()
+    exp = df.select("i", (F.row_number().over(w) - 1).alias("__rn_exp"))
+    joined = got.join(exp, "i")
+    assert joined.filter(~F.col("__rn").eqNullSafe(F.col("__rn_exp"))).count() == 0
+    assert joined.count() == got.count() == df.count()
 
 
 def test_auto_asof_matches_plain_on_skew(spark):

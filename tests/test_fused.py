@@ -48,12 +48,13 @@ def _src(spark, n=300, entities=4, null_entity=False):
         pytest.param(64, None, False, None, id="64"),
         pytest.param(8192, None, False, None, id="8192"),
         # rows_per_chunk == W: all but the first row of a chunk are context
-        # rows of the next
-        pytest.param(16, None, False, None, id="16"),
+        # rows of the next; d0 is numbered on its 6 h cells
+        pytest.param(16, None, False, ["d0"], id="16"),
         # Arrow batches shorter than W: chunk groups and their context rows
         # straddle batches, so the kernel's carry must join them
-        pytest.param(64, 7, False, None, id="64-batch7"),
-        # a NULL entity key spanning many batches, chunked and whole-entity
+        pytest.param(64, 7, False, ["d0", "d1"], id="64-batch7"),
+        # a NULL entity key spanning many batches, chunked by rows, with no
+        # heavy key and beside a heavy one
         pytest.param(64, 7, True, None, id="null-chunked-batch7"),
         pytest.param(64, 7, True, [0], id="null-light-batch7"),
     ],
@@ -125,25 +126,26 @@ def test_fused_instage_conditions_match_jvm_conditions(spark):
 
 
 def test_fused_heavy_keys_split_matches(spark):
-    """heavy_keys routing (light whole-entity groups + heavy chunked) must
-    equal the all-chunked path exactly."""
+    """Numbering d0 on its time cells == numbering every entity whole, with
+    every entity cut into 64-row chunks, and == every entity in one chunk."""
     W = 16
     src = _src(spark, n=120, entities=3)
     weights = init_weights(window_size=W, n_features=2, rnn_hidden_dim=4,
                            conditioning_dim=10, latent_dim=8)
-    a = windowed_encode(
-        src, "doc_id", "ts", ["f1", "f2"], None, W, weights,
-        rows_per_chunk=64,
-    ).orderBy("doc_id", "ts").toPandas()
-    b = windowed_encode(
-        src, "doc_id", "ts", ["f1", "f2"], None, W, weights,
-        rows_per_chunk=64, heavy_keys=["d0"],
-    ).orderBy("doc_id", "ts").toPandas()
-    assert len(a) == len(b) > 0
-    assert a["ts"].tolist() == b["ts"].tolist()
-    za = np.asarray([np.asarray(v) for v in a["z_mean"]])
-    zb = np.asarray([np.asarray(v) for v in b["z_mean"]])
-    assert np.allclose(za, zb, rtol=1e-5, atol=1e-6)
+
+    def run(**kw):
+        return windowed_encode(
+            src, "doc_id", "ts", ["f1", "f2"], None, W, weights, **kw
+        ).orderBy("doc_id", "ts").toPandas()
+
+    a = run(rows_per_chunk=64)
+    assert len(a) > 0
+    for b in (run(rows_per_chunk=64, heavy_keys=["d0"]), run()):
+        assert len(a) == len(b)
+        assert a["ts"].tolist() == b["ts"].tolist()
+        za = np.asarray([np.asarray(v) for v in a["z_mean"]])
+        zb = np.asarray([np.asarray(v) for v in b["z_mean"]])
+        assert np.allclose(za, zb, rtol=1e-5, atol=1e-6)
 
 
 def test_fused_with_vae_small_plugin(spark, sf_small):

@@ -64,9 +64,10 @@ def test_asof_auto_job_ceiling(spark, events, purchases):
 
 
 def test_routed_featurize_job_ceiling(spark, events, purchases):
-    # detection, the auto as-of join, the fused stage and the write: 21 (24
-    # when the as-of join sized its chunks with a .first() and ran light
-    # and heavy keys as two plans)
+    # detection, the auto as-of join, the fused stage and the write: 17 (21
+    # when the fused stage split light and heavy keys into two branches,
+    # each planning the as-of join again; 24 when the as-of join also sized
+    # its chunks with a .first() and ran light and heavy keys as two plans)
     w = init_weights(window_size=8, n_features=2, latent_dim=4)
     with JobCount(spark) as jobs:
         heavy = detect_heavy_hitters(events, "doc_id", threshold_share=0.2)
@@ -77,7 +78,19 @@ def test_routed_featurize_job_ceiling(spark, events, purchases):
             "overwrite"
         ).save()
     assert heavy == ["h"]
-    assert jobs.n <= 21
+    assert jobs.n <= 17
+
+
+def test_windowed_encode_no_heavy_key_job_ceiling(spark, events):
+    # the plan build (0 jobs) and the write: the row-number shuffle and the
+    # (entity, chunk) shuffle, 3 jobs (2 when light entities went whole
+    # into one chunk with no row numbers)
+    w = init_weights(window_size=8, n_features=1, latent_dim=4)
+    with JobCount(spark) as jobs:
+        windowed_encode(events, "doc_id", "ts", ["value"], None, 8, w).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    assert jobs.n <= 3
 
 
 def test_detect_heavy_hitters_job_ceiling(spark, events):

@@ -279,3 +279,60 @@ def test_curate_pack_barrier_single_materialization(spark):
         assert len(scans) == 2 and len(set(scans)) == 1, scans
         assert "Scan parquet" not in _plan(out)
         assert "InMemoryTableScan" not in _plan(out)
+
+
+def _routed_featurize_inputs(spark, path):
+    """Parquet events (key h holds half the rows) and purchases."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [("h" if i % 2 else f"k{i % 13}", t + dt.timedelta(minutes=i), float(i))
+         for i in range(600)],
+        "doc_id string, ts timestamp, value double",
+    ).write.parquet(f"{path}/events")
+    spark.createDataFrame(
+        [("h" if i % 2 else f"k{i % 13}", t + dt.timedelta(minutes=7 * i), 1.0)
+         for i in range(60)],
+        "doc_id string, ts timestamp, aux double",
+    ).write.parquet(f"{path}/purchases")
+    return spark.read.parquet(f"{path}/events"), spark.read.parquet(f"{path}/purchases")
+
+
+def test_routed_featurize_static_plan_scan_count(spark, tmp_path):
+    """The auto as-of join and the fused stage with a heavy key scan the
+    parquet inputs 6 times: both in the local LOCF, both again (heavy rows
+    only) in the chunk domain, purchases in the summary, and events (heavy
+    rows only) in the fused stage's cell offsets. A light/heavy split
+    above the as-of join plans its whole subtree once per branch (10)."""
+    from feature_extractor_spark.encoder import init_weights
+    from feature_extractor_spark.operators.asof import asof_join
+    from feature_extractor_spark.operators.fused import windowed_encode
+
+    ev, pu = _routed_featurize_inputs(spark, tmp_path)
+    w = init_weights(window_size=8, n_features=2, latent_dim=4)
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        # AQE off: the static plan, as written, before any stage runs
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        joined = asof_join(ev, pu, on="ts", by="doc_id", strategy="auto",
+                           heavy_keys=["h"]).na.fill({"aux": 0.0})
+        z = windowed_encode(joined, "doc_id", "ts", ["value", "aux"], None, 8, w,
+                            heavy_keys=["h"])
+        plan = _plan(z)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    assert plan.count("FileScan") <= 6, plan
+
+
+def test_asof_auto_summary_is_hash_aggregate(spark, tmp_path):
+    """The per-cell summary keeps fixed-width max_by buffers, so it is a
+    hash aggregate; a struct-valued max(struct(ts, v)) plans a sort
+    aggregate."""
+    from feature_extractor_spark.operators.asof import asof_join
+
+    ev, pu = _routed_featurize_inputs(spark, tmp_path)
+    got = asof_join(ev, pu, on="ts", by="doc_id", strategy="auto", heavy_keys=["h"])
+    assert got.count() == 600
+    plan = _plan(got)
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
