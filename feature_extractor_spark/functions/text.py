@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_extractor_spark.session import path_exists
+
 # tiny per-language function-word lexicons for the n-gram/stopword heuristic
 LANG_LEXICONS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "as"],
@@ -1296,13 +1298,10 @@ def load_tokenizer(spark, dir_path: str) -> "tuple[DataFrame, DataFrame]":
     ``encode_bpe`` / ``decode_bpe``. A missing artifact RAISES by name
     (a silent empty merges table would degrade every word to byte
     fallback / UNK and look like a data problem downstream)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    missing = []
-    for sub in ("merges", "vocab"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{dir_path}/{sub}")
-        if not p.getFileSystem(conf).exists(p):
-            missing.append(sub)
+    missing = [
+        sub for sub in ("merges", "vocab")
+        if not path_exists(spark, f"{dir_path}/{sub}")
+    ]
     if missing:
         raise FileNotFoundError(
             f"load_tokenizer: {dir_path!r} is missing tables {missing}; "

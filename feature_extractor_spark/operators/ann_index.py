@@ -41,14 +41,7 @@ from feature_extractor_spark.operators.similarity import (
     _pq_sample,
     kmeans_centroids,
 )
-
-
-
-def _path_exists(spark, path: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+from feature_extractor_spark.session import overwrite_partitions, path_exists
 
 
 def _require_index(spark, index_dir: str) -> None:
@@ -58,7 +51,7 @@ def _require_index(spark, index_dir: str) -> None:
     missing = [
         sub
         for sub in ("meta", "centroids", "codebooks", "codes")
-        if not _path_exists(spark, f"{index_dir}/{sub}")
+        if not path_exists(spark, f"{index_dir}/{sub}")
     ]
     if missing:
         raise FileNotFoundError(
@@ -180,11 +173,9 @@ def build_ann_index(
     # old meta FIRST: any crash between here and the final meta write
     # leaves the index meta-less, so _require_index fails loudly and
     # the operator re-runs the build — never a silently mixed model.
-    if _path_exists(spark, f"{index_dir}/meta"):
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/meta")
-        p.getFileSystem(conf).delete(p, True)
+    meta = spark._jvm.org.apache.hadoop.fs.Path(f"{index_dir}/meta")
+    # a missing meta (first build) deletes nothing
+    meta.getFileSystem(spark._jsc.hadoopConfiguration()).delete(meta, True)
     n_corpus = None
     if n_lists is None:
         # one count job, driver-side arithmetic only (auto-size)
@@ -220,22 +211,18 @@ def build_ann_index(
     ).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
 
     codes = _encode_with(corpus, C, books, id_col, vec_col, residual)
-    from feature_extractor_spark.session import restore_conf
-
-    # STATIC overwrite pinned explicitly: under a session-wide dynamic
-    # partitionOverwriteMode (the very conf ann_index_append toggles), a
-    # rebuild over an existing index would replace only batch_id=0 and
-    # leave stale batch_id>0 partitions encoded with the OLD model —
-    # silently wrong neighbors. Static overwrite truncates the table.
-    with restore_conf(
-        spark, "spark.sql.sources.partitionOverwriteMode", "static"
-    ):
-        (
-            codes.withColumn("batch_id", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{index_dir}/codes")
-        )
+    # STATIC overwrite pinned on this write: under a session-wide dynamic
+    # partitionOverwriteMode, a rebuild over an existing index would
+    # replace only batch_id=0 and leave stale batch_id>0 partitions encoded
+    # with the OLD model — silently wrong neighbors. Static overwrite
+    # truncates the table.
+    (
+        codes.withColumn("batch_id", F.lit(0))
+        .write.option("partitionOverwriteMode", "static")
+        .mode("overwrite")
+        .partitionBy("batch_id")
+        .parquet(f"{index_dir}/codes")
+    )
     n = spark.read.parquet(f"{index_dir}/codes").count()
     # meta is written LAST: its presence marks a completed build (a crash
     # mid-build leaves no meta — the old meta is deleted FIRST at build
@@ -287,17 +274,10 @@ def ann_index_append(
     codes = _encode_with(
         new_vectors, C, books, id_col, vec_col, bool(meta["residual"])
     )
-    from feature_extractor_spark.session import restore_conf
-
-    with restore_conf(
-        spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    ):
-        (
-            codes.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{index_dir}/codes")
-        )
+    overwrite_partitions(
+        codes.withColumn("batch_id", F.lit(int(batch_id))),
+        f"{index_dir}/codes", "batch_id",
+    )
     return int(
         spark.read.parquet(f"{index_dir}/codes")
         .filter(F.col("batch_id") == int(batch_id))

@@ -218,10 +218,19 @@ def _asof_union_locf_chunked(
     the carry window walks chunks in descending order (next observation
     carried backward)."""
     fwd = direction == "forward"
-    tagged = _tagged(left, right, on, by, value_cols).withColumn("__chunk", chunk)
+    tagged = _tagged(left, right, on, by, value_cols)
 
-    # phase 1: local LOCF inside each (key, chunk)
-    local = _local_locf(tagged, [by, "__chunk"], on, value_cols, fwd)
+    # phase 1: local LOCF inside each (key, chunk). The exchange is on the
+    # chunk EXPRESSION, which survives _project, so a consumer that
+    # recomputes the same chunk (fused.windowed_encode's row numbers over
+    # skew.heavy_cell) reuses this shuffle. Only this branch is
+    # repartitioned: the summary and domain branches partially aggregate
+    # before their own exchanges, which a full-row shuffle ahead of the
+    # split would replace.
+    local = _local_locf(
+        tagged.repartition(F.col(by), chunk).withColumn("__chunk", chunk),
+        [by, "__chunk"], on, value_cols, fwd,
+    )
 
     # phase 2: per-chunk summaries of the right side, then cross-chunk scan.
     # PER-COLUMN summaries, not row-level: plain union_locf carries each
@@ -232,7 +241,7 @@ def _asof_union_locf_chunked(
     # matching union_locf's carried_ts. max_by/min_by keep a fixed-width
     # buffer, so the summary is a hash aggregate.
     agg, agg_by = (F.min, F.min_by) if fwd else (F.max, F.max_by)
-    cells = tagged.filter(F.col("__chunk").isNotNull())
+    cells = tagged.withColumn("__chunk", chunk).filter(F.col("__chunk").isNotNull())
     summary = (
         cells.filter(F.col("__side") == 0)
         .groupBy(by, "__chunk")

@@ -57,10 +57,11 @@ def detect_heavy_hitters(
     """Keys holding more than ``threshold_share`` of a 10 % row sample."""
     sampled = df.select(key_col).sample(fraction=0.1, seed=42)
     counts = sampled.groupBy(key_col).count()
-    total = counts.agg(F.sum("count")).first()[0] or 0
-    if total == 0:
-        return []
-    heavy = counts.filter(F.col("count") > threshold_share * total)
+    # one action: each key's count beside the one-row sample total
+    total = counts.agg(F.sum("count").alias("__total"))
+    heavy = counts.crossJoin(total).filter(
+        F.col("count") > F.lit(threshold_share) * F.col("__total")
+    )
     return [r[key_col] for r in heavy.collect()]
 
 

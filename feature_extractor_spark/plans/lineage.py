@@ -23,12 +23,24 @@ multi-table transaction).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from feature_extractor_spark.session import overwrite_partitions
+
+_MANIFEST_SCHEMA = (
+    "stage string, unit string, rows long, bytes long, "
+    "n_files long, wall_sec double, committed_at timestamp, run_id string"
+)
+
+# pending units commit in batches of this many, one write job per batch, so
+# job-launch latency does not multiply with the unit count
+UNITS_PER_JOB = 16
 
 
 class CheckpointLog:
@@ -41,14 +53,11 @@ class CheckpointLog:
         os.makedirs(self.manifest_dir, exist_ok=True)
 
     def read(self) -> DataFrame:
-        schema = (
-            "stage string, unit string, rows long, bytes long, "
-            "n_files long, wall_sec double, committed_at timestamp, run_id string"
+        # the directory exists from __init__, and an empty one reads as no
+        # rows, so a failing read is a real failure and propagates
+        return self.spark.read.schema(_MANIFEST_SCHEMA).parquet(
+            self.manifest_dir
         )
-        try:
-            return self.spark.read.schema(schema).parquet(self.manifest_dir)
-        except Exception:
-            return self.spark.createDataFrame([], schema)
 
     def completed_units(self, stage: str) -> set[str]:
         return {
@@ -73,8 +82,7 @@ class CheckpointLog:
                 )
                 for r in records
             ],
-            "stage string, unit string, rows long, bytes long, n_files long, "
-            "wall_sec double, committed_at timestamp, run_id string",
+            _MANIFEST_SCHEMA,
         )
         # one small commit file per append; readers union all files
         pdf.coalesce(1).write.mode("append").parquet(self.manifest_dir)
@@ -105,10 +113,9 @@ def run_stage_with_resume(
     output_dir: str,
     checkpoint_dir: str,
     fail_after_units: int | None = None,
-    units_per_job: int = 16,
     units: list[str] | None = None,
 ) -> dict:
-    """Run ``transform(df_slice)`` for every pending unit and commit output +
+    """Run ``transform`` over every pending unit and commit output +
     lineage. Units already in the manifest are skipped (resume = anti-join).
 
     Granularity contract: ``unit_col`` is COARSE by design — pick it like an
@@ -116,16 +123,17 @@ def run_stage_with_resume(
     units, not millions). The distinct unit list is collected to the driver,
     and each unit's slice must fit a dynamic partition.
 
-    Job shape: pending units are grouped into batches of ``units_per_job``;
-    each batch is ONE Spark job — the per-unit transformed slices are
-    unioned and committed with a single dynamic-partition overwrite, so job
-    count is ceil(pending/units_per_job) instead of |pending| (job-launch
-    latency stops multiplying with unit count). ``transform`` still sees
-    exactly one unit's slice per call, so per-unit aggregation semantics
-    are unchanged, and each branch's filter pushes down to the scan.
-    Per-unit row metrics come from per-branch ``observe()`` nodes riding
-    the one write action — the transform executes exactly ONCE per unit
-    (a count() before the write would re-run the whole plan).
+    Job shape: pending units are grouped into batches of ``UNITS_PER_JOB``;
+    each batch is ONE branch, ``transform(input_df.filter(unit_col IN
+    batch))``, committed with one dynamic-partition overwrite, so the write
+    stage runs one task per input partition however many units the batch
+    holds. ``transform`` must keep ``unit_col`` (ValueError otherwise) and
+    must not mix units: row-wise, or grouped by ``unit_col``. Per-unit row
+    counts come from one ``observe()`` node riding the write action, one
+    ``count_if(unit_col = u)`` per unit — the transform executes exactly
+    ONCE (a count() before the write would re-run the whole plan). A unit
+    with no rows writes no files and still gets its manifest row, with
+    ``rows == 0``.
 
     Crash contract: outputs commit first (idempotent overwrite), manifest
     rows append second, per BATCH — a crash mid-batch re-runs that whole
@@ -136,10 +144,6 @@ def run_stage_with_resume(
 
     Returns {"processed": [...], "skipped": [...]}.
     """
-    import datetime as dt
-
-    from pyspark.sql import Observation
-
     log = CheckpointLog(spark, checkpoint_dir)
     done = log.completed_units(stage_name)
     # pass `units` when the unit universe is known from a cheaper source
@@ -158,66 +162,47 @@ def run_stage_with_resume(
 
     fail_at = fail_after_units if fail_after_units is not None else len(pending)
     runnable = pending[:fail_at]
-    batches = [
-        runnable[i : i + units_per_job]
-        for i in range(0, len(runnable), units_per_job)
-    ]
-
-    from feature_extractor_spark.session import restore_conf
-
+    unit = F.col(unit_col).cast("string")
     processed = []
-    with restore_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        _run_batches(
-            batches, input_df, transform, unit_col, stage_name, run_id,
-            output_dir, log, processed,
-        )
-    if fail_after_units is not None and len(pending) > fail_after_units:
-        raise RuntimeError(f"injected failure after {fail_after_units} units")
-    return {"processed": processed, "skipped": sorted(done)}
-
-
-def _run_batches(
-    batches, input_df, transform, unit_col, stage_name, run_id, output_dir,
-    log, processed,
-) -> None:
-    import datetime as dt
-
-    from pyspark.sql import Observation
-
-    for batch in batches:
+    for i in range(0, len(runnable), UNITS_PER_JOB):
+        batch = runnable[i : i + UNITS_PER_JOB]
         t0 = time.time()
-        observations: dict[str, Observation] = {}
-        out = None
-        for unit in batch:
-            df_slice = input_df.filter(F.col(unit_col).cast("string") == unit)
-            branch = transform(df_slice)
-            if unit_col not in branch.columns:
-                branch = branch.withColumn(unit_col, F.lit(unit))
-            obs = Observation(f"{stage_name}_{unit}_{run_id}")
-            observations[unit] = obs
-            branch = branch.observe(obs, F.count(F.lit(1)).alias("rows"))
-            out = branch if out is None else out.unionByName(branch)
+        out = transform(input_df.filter(unit.isin(batch)))
+        if unit_col not in out.columns:
+            raise ValueError(
+                f"run_stage_with_resume: the transform of stage {stage_name!r} "
+                f"dropped the unit column {unit_col!r}"
+            )
+        obs = Observation()
+        out = out.observe(
+            obs,
+            *[F.count_if(unit == u).alias(f"rows_{k}") for k, u in enumerate(batch)],
+        )
         # output first (idempotent dynamic-partition overwrite, one job)...
-        out.write.mode("overwrite").partitionBy(unit_col).parquet(output_dir)
+        overwrite_partitions(out, output_dir, unit_col)
         batch_wall = max(time.time() - t0, 1e-6)
+        rows = obs.get
         stats = _partition_stats(output_dir, unit_col, batch)
         # ...manifest second (commit point), one row per unit
         log.append(
             [
                 {
                     "stage": stage_name,
-                    "unit": unit,
-                    "rows": observations[unit].get["rows"],
-                    "bytes": stats[unit][0],
-                    "n_files": stats[unit][1],
+                    "unit": u,
+                    "rows": rows[f"rows_{k}"],
+                    "bytes": stats[u][0],
+                    "n_files": stats[u][1],
                     "wall_sec": batch_wall / len(batch),
                     "committed_at": dt.datetime.utcnow(),
                     "run_id": run_id,
                 }
-                for unit in batch
+                for k, u in enumerate(batch)
             ]
         )
         processed.extend(batch)
+    if fail_after_units is not None and len(pending) > fail_after_units:
+        raise RuntimeError(f"injected failure after {fail_after_units} units")
+    return {"processed": processed, "skipped": sorted(done)}
 
 
 # ---------------------------------------------------------------------------

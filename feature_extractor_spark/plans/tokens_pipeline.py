@@ -745,10 +745,9 @@ def run_curation(
     from feature_extractor_spark.plans.lineage import run_stage_with_resume
 
     docs = spark.read.parquet(input_path)
-    # materialize the curated frame ONCE: the resume loop slices it per
-    # unit inside batched union branches, and without a persist each
-    # branch would re-execute the whole dedup/filter/pack pipeline
-    # (units x the most expensive stage). MEMORY_AND_DISK: curated output
+    # materialize the curated frame ONCE: the resume loop reads it once
+    # per batch of units, and without a persist each batch would
+    # re-execute the whole dedup/filter/pack pipeline. MEMORY_AND_DISK: curated output
     # is much smaller than the input and spills instead of recomputing.
     curated = curate(docs, **curate_kwargs).persist()
     # unit universe from the cheap raw scan, not from a full execution of

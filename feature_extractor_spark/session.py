@@ -8,9 +8,8 @@ multi-executor cluster via spark-submit --conf.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager as _contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def machine_cores() -> int:
@@ -104,22 +103,21 @@ def get_spark(
     return spark
 
 
-@_contextmanager
-def restore_conf(spark: SparkSession, key: str, value: str):
-    """Set a session conf key for the duration of a block, then restore the
-    previous value (or unset). Use around writes that need e.g. dynamic
-    partition-overwrite so the mode does not leak into the shared session,
-    where a later static ``mode("overwrite").partitionBy(...)`` write would
-    silently preserve stale partitions."""
-    try:
-        prev = spark.conf.get(key, None)
-    except Exception:
-        prev = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
+    """Write ``df`` partitioned ``by`` over ``path``, replacing only the
+    partitions it holds rows for (a replayed batch or unit rewrites its own
+    partition, every other one stays). The mode is an option of this one
+    write, which takes precedence over the session conf: no write in this
+    package sets ``spark.sql.sources.partitionOverwriteMode`` on the shared
+    session, so concurrent writers cannot leak it into each other."""
+    df.write.option("partitionOverwriteMode", "dynamic").mode(
+        "overwrite"
+    ).partitionBy(by).parquet(path)
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, probed through the Hadoop FileSystem API (any
+    scheme the session can read). Callers let only a missing path soften
+    their behaviour; every other failure propagates."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)

@@ -51,7 +51,7 @@ from feature_extractor_spark.operators.dedup import (
     near_dup_clusters,
     signature_bands,
 )
-from feature_extractor_spark.session import restore_conf
+from feature_extractor_spark.session import overwrite_partitions, path_exists
 
 
 def _hash_batch(
@@ -141,23 +141,6 @@ def flag_against_index(
     )
 
 
-def _index_exists(spark, index_dir: str) -> bool:
-    """True iff both index tables exist. An EXPLICIT existence probe via
-    the Hadoop FileSystem API (works for any scheme the session can read):
-    'index missing' is the only condition that may soften cross-batch
-    dedup into a no-op. Any OTHER failure while reading or probing the
-    index (corrupt files, transient storage errors, OOM) must PROPAGATE so
-    the stream retries the batch — swallowing it would silently admit
-    duplicates with no signal."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for sub in ("bands", "shingles"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/{sub}")
-        if not p.getFileSystem(conf).exists(p):
-            return False
-    return True
-
-
 def write_stats_row(spark, stats_dir: str, batch_id: int, row: dict) -> None:
     """Shared per-batch funnel writer (text + semantic ingests): one
     all-long row under a ``batch_id`` dynamic-partition overwrite, so a
@@ -167,12 +150,10 @@ def write_stats_row(spark, stats_dir: str, batch_id: int, row: dict) -> None:
         [tuple(int(v) for v in row.values())],
         ", ".join(f"{k} long" for k in row),
     )
-    with restore_conf(
-        spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-    ):
-        stats_row.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(stats_dir)
+    overwrite_partitions(
+        stats_row.withColumn("batch_id", F.lit(int(batch_id))), stats_dir,
+        "batch_id",
+    )
 
 
 def ingest_batch(
@@ -258,10 +239,11 @@ def ingest_batch(
         clusters = near_dup_clusters(pairs, batch_df, id_col)
         unique = clusters.filter(F.col(id_col) == F.col("canonical_id"))
         # 2. against the existing index. Only a MISSING index (first
-        # batch, probed explicitly) skips the cross-batch check; read or
-        # compute failures propagate so the stream retries the batch.
+        # batch, both tables probed explicitly) skips the cross-batch
+        # check; read or compute failures propagate so the stream retries
+        # the batch: swallowing them would admit duplicates silently.
         # flags: one materialized row per within-batch survivor
-        if _index_exists(spark, index_dir):
+        if all(path_exists(spark, f"{index_dir}/{sub}") for sub in index_rows):
             # exclude this batch's OWN index partitions (r9, mirroring the
             # semantic ingest's hardened replay contract): a replayed
             # batch previously matched its own docs at jaccard 1.0 via the
@@ -336,13 +318,8 @@ def ingest_batch(
             for sub, df in index_rows.items()
         }
         bid = F.lit(int(batch_id))
-        with restore_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            for out, df in rows.items():
-                df.withColumn("batch_id", bid).write.mode(
-                    "overwrite"
-                ).partitionBy("batch_id").parquet(out)
+        for out, df in rows.items():
+            overwrite_partitions(df.withColumn("batch_id", bid), out, "batch_id")
         if stats_dir is not None:
             # per-batch funnel row (replay-idempotent: overwrites its own
             # batch_id partition), counted in ONE query over frames that
@@ -385,46 +362,33 @@ def ingest_batch(
         batch_df.unpersist()
 
 
-def stream_dedup_ingest(
-    stream_docs: DataFrame,
-    index_dir: str,
-    accepted_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    threshold: float = 0.9,
-    benchmark: DataFrame | None = None,
-    decontam_n: int = 13,
-    stats_dir: str | None = None,
-    quality_classifier: "tuple | None" = None,
-    classifier_alpha: float = 2.0,
-    classifier_seed: int = 101,
+def _foreach_batch(
+    stream: DataFrame, checkpoint_dir: str, ingest, *args, **kwargs
 ):
-    """Wire ``ingest_batch`` into a Structured Streaming query. Returns
-    the DataStreamWriter (caller starts it, typically with
-    ``.trigger(availableNow=True)`` for backfills). ``benchmark`` adds
-    per-batch decontamination; ``stats_dir`` the per-batch funnel;
-    ``quality_classifier`` the map-side quality keep (see
-    ingest_batch)."""
+    """The DataStreamWriter that calls ``ingest(batch_df, batch_id, *args,
+    **kwargs)`` on every non-empty micro-batch. The caller starts it,
+    typically with ``.trigger(availableNow=True)`` for backfills."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(
-            batch_df, batch_id, index_dir, accepted_dir,
-            id_col, text_col, num_hashes, bands, shingle_n, threshold,
-            benchmark=benchmark, decontam_n=decontam_n, stats_dir=stats_dir,
-            quality_classifier=quality_classifier,
-            classifier_alpha=classifier_alpha,
-            classifier_seed=classifier_seed,
-        )
+        if not batch_df.isEmpty():
+            ingest(batch_df, batch_id, *args, **kwargs)
 
-    return (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+
+
+def stream_dedup_ingest(
+    stream_docs: DataFrame, index_dir: str, accepted_dir: str,
+    checkpoint_dir: str, **kwargs,
+):
+    """Wire ``ingest_batch`` into a Structured Streaming query; ``kwargs``
+    are its options (``benchmark`` adds per-batch decontamination,
+    ``stats_dir`` the per-batch funnel, ``quality_classifier`` the
+    map-side quality keep). Returns the unstarted DataStreamWriter."""
+    return _foreach_batch(
+        stream_docs, checkpoint_dir, ingest_batch, index_dir, accepted_dir,
+        **kwargs,
     )
 
 
@@ -487,7 +451,8 @@ def ingest_lines_batch(
         )
         freqs_path = f"{index_dir}/line_freqs"
         total = batch_freqs
-        if _line_index_exists(spark, index_dir):
+        # only a MISSING index softens the merge into batch-only counting
+        if path_exists(spark, freqs_path):
             prior = (
                 spark.read.parquet(freqs_path)
                 # exclude THIS batch's own partition so a replay reads
@@ -506,54 +471,21 @@ def ingest_lines_batch(
             batch_df, common, id_col, text_col, sep=sep
         )
         bid = F.lit(int(batch_id))
-        with restore_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            cleaned.withColumn("batch_id", bid).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(cleaned_dir)
-            batch_freqs.withColumn("batch_id", bid).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(freqs_path)
+        for out, df in ((cleaned_dir, cleaned), (freqs_path, batch_freqs)):
+            overwrite_partitions(df.withColumn("batch_id", bid), out, "batch_id")
     finally:
         batch_df.unpersist()
 
 
-def _line_index_exists(spark, index_dir: str) -> bool:
-    """Existence probe for the line-frequency index (same contract as
-    _index_exists: only a MISSING index may soften the cross-batch merge
-    into batch-only counting; any other failure propagates)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/line_freqs")
-    return p.getFileSystem(conf).exists(p)
-
-
 def stream_line_dedup_ingest(
-    stream_docs: DataFrame,
-    index_dir: str,
-    cleaned_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 3,
-    sep: str = "\n",
+    stream_docs: DataFrame, index_dir: str, cleaned_dir: str,
+    checkpoint_dir: str, **kwargs,
 ):
-    """Wire ``ingest_lines_batch`` into a Structured Streaming query
-    (foreachBatch; caller starts it, typically with
-    ``.trigger(availableNow=True)``)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_lines_batch(
-            batch_df, batch_id, index_dir, cleaned_dir,
-            id_col, text_col, min_docs, sep,
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    """Wire ``ingest_lines_batch`` into a Structured Streaming query;
+    ``kwargs`` are its options. Returns the unstarted DataStreamWriter."""
+    return _foreach_batch(
+        stream_docs, checkpoint_dir, ingest_lines_batch, index_dir,
+        cleaned_dir, **kwargs,
     )
 
 

@@ -44,11 +44,14 @@ from pyspark.sql import functions as F
 
 from feature_extractor_spark.operators.ann_index import (
     _load_model,
-    _path_exists,
     _require_index,
     ann_index_append,
 )
-from feature_extractor_spark.session import restore_conf
+from feature_extractor_spark.session import overwrite_partitions, path_exists
+from feature_extractor_spark.streaming.incremental_dedup import (
+    _foreach_batch,
+    write_stats_row,
+)
 
 
 def _probe_cells(df: DataFrame, C, vec_col: str, id_col: str, n_probe: int):
@@ -377,7 +380,7 @@ def ann_semantic_ingest_batch(
         from feature_extractor_spark.operators.similarity import cosine_topk
 
         n_raw_dup = 0
-        if _path_exists(spark, accepted_dir):
+        if path_exists(spark, accepted_dir):
             # filter out this batch's OWN partition (review r8): a replay
             # would otherwise self-match every previously-accepted row at
             # cosine 1.0, empty the survivors, skip the code append, and
@@ -428,12 +431,10 @@ def ann_semantic_ingest_batch(
         # append. Checkpointing severs the parquet lineage first.
         accepted = survivors.localCheckpoint(eager=True)
         # 3. accepted vectors + their index codes, idempotent per batch
-        with restore_conf(
-            spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        ):
-            accepted.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(accepted_dir)
+        overwrite_partitions(
+            accepted.withColumn("batch_id", F.lit(int(batch_id))),
+            accepted_dir, "batch_id",
+        )
         n_accepted = accepted.count()
         if n_accepted > 0:
             ann_index_append(
@@ -444,10 +445,6 @@ def ann_semantic_ingest_batch(
             # per-batch funnel row (replay-idempotent: overwrites its own
             # batch_id partition via the shared writer). flags is eagerly
             # checkpointed, so the two counts over it are cheap re-reads.
-            from feature_extractor_spark.streaming.incremental_dedup import (
-                write_stats_row,
-            )
-
             n_input = batch_df.count()
             n_unique = flags.count()  # one row per within-batch survivor
             n_index_dup = flags.filter(F.col("is_dup")).count()
@@ -466,32 +463,13 @@ def ann_semantic_ingest_batch(
 
 
 def stream_semantic_ingest(
-    stream_vectors: DataFrame,
-    index_dir: str,
-    accepted_dir: str,
-    checkpoint_dir: str,
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_probe: int = 4,
-    max_cell_rows: int = 20_000,
-    max_unindexed_frac: float | None = 0.5,
-    stats_dir: str | None = None,
+    stream_vectors: DataFrame, index_dir: str, accepted_dir: str,
+    checkpoint_dir: str, **kwargs,
 ):
     """Wire ``ann_semantic_ingest_batch`` into a Structured Streaming
-    query. Returns the DataStreamWriter (caller starts it, typically with
-    ``.trigger(availableNow=True)`` for backfills)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ann_semantic_ingest_batch(
-            batch_df, batch_id, index_dir, accepted_dir,
-            vec_col=vec_col, threshold=threshold, n_probe=n_probe,
-            max_cell_rows=max_cell_rows,
-            max_unindexed_frac=max_unindexed_frac, stats_dir=stats_dir,
-        )
-
-    return (
-        stream_vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    query; ``kwargs`` are its options. Returns the unstarted
+    DataStreamWriter."""
+    return _foreach_batch(
+        stream_vectors, checkpoint_dir, ann_semantic_ingest_batch, index_dir,
+        accepted_dir, **kwargs,
     )

@@ -153,3 +153,46 @@ def test_batched_commit_runs_few_jobs(spark, tmp_path):
     # per-unit manifest rows survive batching
     m = CheckpointLog(spark, str(tmp_path / "ckpt")).read().toPandas()
     assert len(m) == 10 and (m["rows"] == 100).all()
+
+
+def test_batch_commits_as_one_branch(spark, tmp_path):
+    """A batch of k units over a p-partition input is one filtered branch
+    with one write stage of p tasks (k*p when each unit was its own union
+    branch scanning every partition). A listed unit with no rows still
+    gets its manifest row."""
+    from conftest import JobCount
+
+    from feature_extractor_spark.plans.lineage import UNITS_PER_JOB
+
+    p = 3
+    df = spark.range(0, 160, numPartitions=p).select(
+        (F.col("id") % UNITS_PER_JOB).cast("string").alias("bucket"),
+        F.col("id").cast("double").alias("value"),
+    )
+    # the 16 digit units sort first, so "none" is a batch of its own
+    units = [str(u) for u in range(UNITS_PER_JOB)] + ["none"]
+    with JobCount(spark) as jobs:
+        run_stage_with_resume(
+            spark, "branch", df, "bucket", _transform, str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), units=units,
+        )
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sorted(
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(jobs.group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    # two write stages; the manifest read and appends run one task each
+    assert [n for n in tasks if n > 1] == [p, p], tasks
+    m = CheckpointLog(spark, str(tmp_path / "ckpt")).read().toPandas()
+    rows = dict(zip(m["unit"], m["rows"]))
+    assert rows.pop("none") == 0
+    assert set(rows.values()) == {160 // UNITS_PER_JOB} and len(rows) == UNITS_PER_JOB
+
+
+def test_transform_must_keep_the_unit_column(spark, tmp_path):
+    with pytest.raises(ValueError, match="bucket"):
+        run_stage_with_resume(
+            spark, "drop", _input(spark), "bucket", lambda df: df.drop("bucket"),
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        )

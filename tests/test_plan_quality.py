@@ -7,6 +7,8 @@ window stacks reuse one shuffle, and the hot relational path stays inside
 whole-stage codegen. A refactor that silently de-optimizes any of these
 still passes value tests — this file is what catches it."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -299,12 +301,9 @@ def _routed_featurize_inputs(spark, path):
     return spark.read.parquet(f"{path}/events"), spark.read.parquet(f"{path}/purchases")
 
 
-def test_routed_featurize_static_plan_scan_count(spark, tmp_path):
-    """The auto as-of join and the fused stage with a heavy key scan the
-    parquet inputs 6 times: both in the local LOCF, both again (heavy rows
-    only) in the chunk domain, purchases in the summary, and events (heavy
-    rows only) in the fused stage's cell offsets. A light/heavy split
-    above the as-of join plans its whole subtree once per branch (10)."""
+def _routed_featurize_static_plan(spark, tmp_path):
+    """The executed plan, AQE off, of the auto as-of join and the fused
+    stage with heavy key h over the parquet inputs."""
     from feature_extractor_spark.encoder import init_weights
     from feature_extractor_spark.operators.asof import asof_join
     from feature_extractor_spark.operators.fused import windowed_encode
@@ -319,10 +318,29 @@ def test_routed_featurize_static_plan_scan_count(spark, tmp_path):
                            heavy_keys=["h"]).na.fill({"aux": 0.0})
         z = windowed_encode(joined, "doc_id", "ts", ["value", "aux"], None, 8, w,
                             heavy_keys=["h"])
-        plan = _plan(z)
+        return _plan(z)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_routed_featurize_static_plan_scan_count(spark, tmp_path):
+    """The routed featurize plan scans the parquet inputs 6 times: both in
+    the local LOCF, both again (heavy rows only) in the chunk domain,
+    purchases in the summary, and events (heavy rows only) in the fused
+    stage's cell offsets. A light/heavy split above the as-of join plans
+    its whole subtree once per branch (10)."""
+    plan = _routed_featurize_static_plan(spark, tmp_path)
     assert plan.count("FileScan") <= 6, plan
+
+
+def test_routed_featurize_row_numbers_reuse_asof_shuffle(spark, tmp_path):
+    """The as-of LOCF exchange is on the heavy-cell expression, so the
+    fused stage's row-number window over the same cells needs no shuffle
+    of its own: 10 exchanges, none on an (entity, __cell) alias (11 when
+    that window shuffled every row again)."""
+    plan = _routed_featurize_static_plan(spark, tmp_path)
+    assert plan.count("Exchange") <= 10, plan
+    assert not re.search(r"hashpartitioning\(doc_id#\d+, __cell", plan), plan
 
 
 def test_asof_auto_summary_is_hash_aggregate(spark, tmp_path):
