@@ -13,21 +13,25 @@ strategies. Forward reads the future BY DESIGN: it is for label/target
 construction (e.g. "next price after t"), never for features at t —
 keep feature pipelines on backward, where the no-leakage property holds.
 
-Two strategies:
+One scan, the two-phase parallel prefix scan of ``_asof_union_locf_chunked``;
+the strategy only picks the time cells it runs on:
 
-- ``union_locf`` (default): union(left-probe, right-state) tagged, one
-  window pass ``last(value, ignorenulls=True) over (partition by key
-  order by ts, side)``. One shuffle on the key, no join at all — Catalyst
-  plans a single sort + window; AQE handles partition sizing. Works for any
-  key cardinality and is the 100 TB-safe default (sort-merge-shaped).
+- ``union_locf`` (default): no cell. One window pass ``last(value,
+  ignorenulls=True) over (partition by key order by ts, side)`` over the
+  tagged union of left probes and right state, one shuffle on the key and
+  no join: Catalyst folds the cross-cell branch away. Works for any key
+  cardinality and is the 100 TB-safe default (sort-merge-shaped).
 
-- ``auto``: the skew-adaptive route, one two-phase parallel prefix scan.
-  Heavy-hitter keys (``heavy_keys``, or ``skew.detect_heavy_hitters`` when
-  None) are cut into time cells by ``skew.heavy_cell``, the rule the fused
-  stage numbers rows on; every other key is one NULL cell. LOCF runs
-  inside each cell and the last value is carried across the heavy keys'
-  cells, so one Zipf-head key no longer serializes into a single task, and
-  a NULL-cell key gets exactly the plain LOCF.
+- ``auto``: the skew-adaptive route. Heavy-hitter keys (``heavy_keys``, or
+  ``skew.detect_heavy_hitters`` when None) are cut into time cells by
+  ``skew.heavy_cell``, the rule the fused stage numbers rows on; every
+  other key is one NULL cell. LOCF runs inside each cell and the last value
+  is carried across the heavy keys' cells, so one Zipf-head key no longer
+  serializes into a single task, and a NULL-cell key gets exactly the plain
+  LOCF. With no heavy key it is ``union_locf``. Only heavy keys get cells:
+  cutting EVERY key into fine cells makes the cell summary ~|left| rows
+  and its carry scan the new straggler (measured 3x slower than plain on
+  3k uniform keys).
 
 A tolerance (max staleness) is supported in both.
 """
@@ -52,54 +56,23 @@ def asof_join(
     strategy: str = "union_locf",
     heavy_keys: list | None = None,
 ) -> DataFrame:
+    """The left rows, each with the right row's ``value_cols`` as of its
+    ``on`` within its ``by`` key (see the module docstring). The plan is
+    built without a Spark job, except ``strategy="auto"`` with
+    ``heavy_keys=None``: it runs ``skew.detect_heavy_hitters`` on ``left``
+    first, one top-k collect (2 jobs)."""
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward or forward, got {direction!r}")
+    if strategy not in ("union_locf", "auto"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in (on, by)]
-    if strategy == "union_locf":
-        return _asof_union_locf(
-            left, right, on, by, value_cols, tolerance_seconds, direction
-        )
-    if strategy == "auto":
-        return _asof_auto(
-            left, right, on, by, value_cols, tolerance_seconds, heavy_keys,
-            direction,
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
-
-
-def _asof_auto(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    value_cols: list[str],
-    tolerance_seconds: int | None,
-    heavy_keys: list | None,
-    direction: str,
-) -> DataFrame:
-    """Skew-adaptive route (the production default at scale).
-
-    The per-key union_locf is already parallel ACROSS keys; a key only hurts
-    when it alone dwarfs a task. So the heavy keys' rows fall into
-    ``skew.heavy_cell`` time cells and every other key, NULL included, is
-    the one NULL cell of the same chunked scan: a NULL cell carries
-    nothing in, so its result is the plain LOCF. The grid is a constant,
-    so building the plan runs no Spark job. Cutting EVERY key into fine
-    cells would be wrong: the chunk-domain table degenerates to ~|left|
-    rows and the cross-chunk scan becomes the new straggler (measured 3x
-    slower than plain on 3k uniform keys). With no heavy key there is no
-    carry to build, and the plain scan runs."""
-    heavy = heavy_keys
+    heavy = heavy_keys if strategy == "auto" else []
     if heavy is None:
         heavy = detect_heavy_hitters(left, by)
-    if not heavy:
-        return _asof_union_locf(
-            left, right, on, by, value_cols, tolerance_seconds, direction
-        )
     return _asof_union_locf_chunked(
         left, right, on, by, value_cols, tolerance_seconds,
-        heavy_cell(by, on, heavy), direction,
+        heavy_cell(by, on, heavy) if heavy else None, direction,
     )
 
 
@@ -166,25 +139,6 @@ def _project(
     return df.select(*left_cols, *out)
 
 
-def _asof_union_locf(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    by: str,
-    value_cols: list[str],
-    tolerance_seconds: int | None,
-    direction: str = "backward",
-) -> DataFrame:
-    fwd = direction == "forward"
-    local = _local_locf(
-        _tagged(left, right, on, by, value_cols), [by], on, value_cols, fwd
-    )
-    return _project(
-        local, left.columns, on, value_cols, F.col("__ts"),
-        [F.col(f"__v_{c}") for c in value_cols], tolerance_seconds, fwd,
-    )
-
-
 def _asof_union_locf_chunked(
     left: DataFrame,
     right: DataFrame,
@@ -192,14 +146,13 @@ def _asof_union_locf_chunked(
     by: str,
     value_cols: list[str],
     tolerance_seconds: int | None,
-    chunk: Column,
+    chunk: Column | None,
     direction: str = "backward",
 ) -> DataFrame:
-    """Skew-proof LOCF: the plain union_locf partitions by key, so one
-    heavy-hitter key serializes into a single task. This variant is the
-    classic two-phase parallel prefix scan over time chunks, ``chunk``
-    being each row's chunk number (an expression over ``by`` and ``on``
-    that grows with ts within a key):
+    """LOCF as the classic two-phase parallel prefix scan over time chunks,
+    ``chunk`` being each row's chunk number (an expression over ``by`` and
+    ``on`` that grows with ts within a key), so one heavy-hitter key need
+    not serialize into a single task:
 
       phase 1: local LOCF within (key, time-chunk) — parallel across chunks
                of the same key
@@ -210,40 +163,48 @@ def _asof_union_locf_chunked(
                final = coalesce(local, carry_in)
 
     Exact for ANY chunking — a right value carries across arbitrarily many
-    empty chunks through the summary scan. Same semantics as union_locf
-    (verified in tests). A row whose ``chunk`` is NULL is in its key's one
-    NULL chunk: it gets phase 1 only, and phases 2 and 3 never see it.
+    empty chunks through the summary scan. A row whose ``chunk`` is NULL is
+    in its key's one NULL chunk: it gets phase 1 only, and phases 2 and 3
+    never see it. ``chunk=None`` puts every row there: the plain LOCF, one
+    shuffle on the key, and Catalyst prunes phases 2 and 3 from the plan.
     ``direction="forward"`` is the time-mirrored scan: local pass ordered
     desc, per-chunk summaries keep the EARLIEST non-null per column, and
     the carry window walks chunks in descending order (next observation
     carried backward)."""
     fwd = direction == "forward"
     tagged = _tagged(left, right, on, by, value_cols)
+    # no cell: every row is in its key's NULL cell, shuffled on the key
+    parts = [F.col(by)] if chunk is None else [F.col(by), chunk]
+    if chunk is None:
+        chunk = F.lit(None).cast("long")
 
     # phase 1: local LOCF inside each (key, chunk). The exchange is on the
     # chunk EXPRESSION, which survives _project, so a consumer that
     # recomputes the same chunk (fused.windowed_encode's row numbers over
     # skew.heavy_cell) reuses this shuffle. Only this branch is
-    # repartitioned: the summary and domain branches partially aggregate
-    # before their own exchanges, which a full-row shuffle ahead of the
-    # split would replace.
+    # repartitioned: the summary branch partially aggregates before its
+    # own exchange, which a full-row shuffle ahead of the split would
+    # replace.
     local = _local_locf(
-        tagged.repartition(F.col(by), chunk).withColumn("__chunk", chunk),
+        tagged.repartition(*parts).withColumn("__chunk", chunk),
         [by, "__chunk"], on, value_cols, fwd,
     )
 
     # phase 2: per-chunk summaries of the right side, then cross-chunk scan.
-    # PER-COLUMN summaries, not row-level: plain union_locf carries each
-    # value column independently with last(ignorenulls), so a later right
-    # row with a NULL in column c must NOT mask an earlier non-null c.
-    # (Row-level max(struct(ts, values)) diverged exactly there.) The ts
-    # carried for the tolerance check stays ROW-level (last right row's ts),
-    # matching union_locf's carried_ts. max_by/min_by keep a fixed-width
-    # buffer, so the summary is a hash aggregate.
+    # The summary groups every row of a non-NULL chunk, left probes too:
+    # their __r_* are NULL, which max/max_by skip, so its group keys are
+    # exactly the chunk domain the carry walks. PER-COLUMN summaries, not
+    # row-level: plain LOCF carries each value column independently with
+    # last(ignorenulls), so a later right row with a NULL in column c must
+    # NOT mask an earlier non-null c. (Row-level max(struct(ts, values))
+    # diverged exactly there.) The ts carried for the tolerance check stays
+    # ROW-level (last right row's ts), matching the local pass's __ts.
+    # max_by/min_by keep a fixed-width buffer, so the summary is a hash
+    # aggregate.
     agg, agg_by = (F.min, F.min_by) if fwd else (F.max, F.max_by)
-    cells = tagged.withColumn("__chunk", chunk).filter(F.col("__chunk").isNotNull())
     summary = (
-        cells.filter(F.col("__side") == 0)
+        tagged.withColumn("__chunk", chunk)
+        .filter(F.col("__chunk").isNotNull())
         .groupBy(by, "__chunk")
         .agg(
             agg("__r_ts").alias("__last_ts"),
@@ -255,13 +216,12 @@ def _asof_union_locf_chunked(
             ],
         )
     )
-    domain = cells.select(by, "__chunk").distinct()
     w_carry = (
         Window.partitionBy(by)
         .orderBy(F.col("__chunk").desc() if fwd else F.col("__chunk").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    carry = domain.join(summary, [by, "__chunk"], "left").select(
+    carry = summary.select(
         by,
         "__chunk",
         F.last("__last_ts", ignorenulls=True).over(w_carry).alias("__carry_ts"),

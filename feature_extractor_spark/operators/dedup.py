@@ -778,15 +778,16 @@ def near_dup_clusters(
 
     Two paths, identical output (r7):
 
-    - **Bounded driver union-find** when the (already materialized,
-      distinct) edge set holds at most ``driver_max_edges`` rows: one
-      collect + classic union-find + min-relabel, then the same
-      node-universe join as the distributed path. Near-dup edge sets are
-      the verified MINORITY of a deduplicated corpus — at the default
-      1M-edge bound the collect is tens of MB, while the distributed
-      loop pays 4+ eager jobs PER ROUND of pure scheduler latency on a
-      graph that fits in one task. This is the documented bounded-collect
-      contract (the count gates it; the fallback is automatic).
+    - **Bounded driver union-find** when the distinct edge set holds at
+      most ``driver_max_edges`` rows: one collect of at most
+      ``driver_max_edges + 1`` rows + classic union-find + min-relabel,
+      then the same node-universe join as the distributed path. Near-dup
+      edge sets are the verified MINORITY of a deduplicated corpus — at
+      the default 1M-edge bound the collect is tens of MB, while the
+      distributed loop pays 4+ eager jobs PER ROUND of pure scheduler
+      latency on a graph that fits in one task. This is the documented
+      bounded-collect contract (the collect's size gates it; the fallback
+      is automatic).
     - **Alternating large-star / small-star** (Kiveris et al., SOCC'14)
       above the bound — each round is two grouped-min shuffles over the
       current edge set, round count O(log n) on real graphs (vs graph
@@ -809,26 +810,27 @@ def near_dup_clusters(
     (one round = large-star + small-star; the driver path reports
     rounds=0).
     """
-    # localCheckpoint (not persist) each round: iterative self-referencing
-    # plans double in size per round (sym embeds the edge plan twice), so
-    # without lineage TRUNCATION Catalyst re-analysis cost grows
-    # exponentially with round count — caching alone does not stop that
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_edges = edges.count()  # cheap: counts the materialized checkpoint
+    if driver_max_edges > 0:
+        # one bounded collect both decides the path and feeds it
+        rows = edges.limit(int(driver_max_edges) + 1).collect()
+        if len(rows) <= driver_max_edges:
+            if stats is not None:
+                stats.update(n_edges=len(rows), rounds=0, path="driver")
+            return _driver_union_find(rows, nodes, id_col)
+    # localCheckpoint (not persist) each round: iterative self-referencing
+    # plans double in size per round (sym embeds the edge plan twice), so
+    # without lineage TRUNCATION Catalyst re-analysis cost grows
+    # exponentially with round count — caching alone does not stop that
+    edges = edges.localCheckpoint(eager=True)
     if stats is not None:
-        stats["n_edges"] = n_edges
-    if n_edges <= int(driver_max_edges):
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["path"] = "driver"
-        return _driver_union_find(edges, nodes, id_col, n_edges)
-    if stats is not None:
+        stats["n_edges"] = edges.count()  # cheap: counts the checkpoint
         stats["path"] = "distributed"
+
     def _canonical(e: DataFrame) -> DataFrame:
         return e.select(
             F.greatest("src", "dst").alias("src"),
@@ -909,19 +911,14 @@ def _assign_to_universe(
     )
 
 
-def _driver_union_find(
-    edges: DataFrame, nodes: DataFrame, id_col: str, n_edges: int
-) -> DataFrame:
-    """Bounded-edge fast path of ``near_dup_clusters``: collect the
-    materialized edge set (the caller verified ``n_edges`` is within the
-    documented bound), run path-compressed union-find, relabel every
-    component by its MINIMUM member (identical survivor convention to the
-    star-contraction fixpoint), and join the (node -> min) star edges
-    back against the node universe. One collect + one createDataFrame +
-    the same broadcast-friendly universe join — versus 4+ eager jobs per
-    star-contraction round."""
-    rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    assert len(rows) == n_edges  # the bound the caller checked
+def _driver_union_find(rows: list, nodes: DataFrame, id_col: str) -> DataFrame:
+    """Bounded-edge fast path of ``near_dup_clusters``: over the collected
+    (src, dst) edge rows (within the documented bound), run path-compressed
+    union-find, relabel every component by its MINIMUM member (identical
+    survivor convention to the star-contraction fixpoint), and join the
+    (node -> min) star edges back against the node universe. One collect +
+    one createDataFrame + the same broadcast-friendly universe join —
+    versus 4+ eager jobs per star-contraction round."""
     parent: dict = {}
 
     def find(x):
@@ -949,7 +946,7 @@ def _driver_union_find(
     star = [
         (x, comp_min[rt]) for x, rt in node_root.items() if x != comp_min[rt]
     ]
-    spark = edges.sparkSession
+    spark = nodes.sparkSession
     id_type = nodes.schema[id_col].dataType
     from pyspark.sql import types as T
 

@@ -2,7 +2,7 @@
 
 Heavy-hitter doc_ids (Zipf head) overload single tasks in groupBy/join.
 Strategy:
-- detection: sampled count per key (approximate, one cheap pass)
+- detection: sampled count per key (approximate, one top-k action)
 - salting: ``salt = pmod(xxhash64(stable row columns), K)`` appended to the
   key for heavy keys only, so light keys keep a 1-task group and heavy keys
   fan out K ways
@@ -24,7 +24,9 @@ the same salt, so retries are idempotent.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from feature_extractor_spark.functions.timeutil import epoch_seconds
@@ -54,15 +56,24 @@ def heavy_cell(key: str, ts: str, heavy_keys: list | None) -> Column:
 def detect_heavy_hitters(
     df: DataFrame, key_col: str, threshold_share: float = 0.02
 ) -> list[str]:
-    """Keys holding more than ``threshold_share`` of a 10 % row sample."""
-    sampled = df.select(key_col).sample(fraction=0.1, seed=42)
-    counts = sampled.groupBy(key_col).count()
-    # one action: each key's count beside the one-row sample total
-    total = counts.agg(F.sum("count").alias("__total"))
-    heavy = counts.crossJoin(total).filter(
-        F.col("count") > F.lit(threshold_share) * F.col("__total")
+    """Keys holding more than ``threshold_share`` of a 10 % row sample,
+    most frequent first. One action: fewer than ``1 / threshold_share``
+    keys can each hold more than that share, so the top
+    ``ceil(1 / threshold_share)`` counts hold them all, and an observed
+    row count of the same sample gives the total."""
+    if not 0 < threshold_share <= 1:
+        raise ValueError(f"threshold_share must be in (0, 1], got {threshold_share!r}")
+    rows = Observation()
+    top = (
+        df.select(key_col).sample(fraction=0.1, seed=42)
+        .observe(rows, F.count(F.lit(1)).alias("n"))
+        .groupBy(key_col).count()
+        .orderBy(F.desc("count"))
+        .limit(math.ceil(1 / threshold_share))
+        .collect()
     )
-    return [r[key_col] for r in heavy.collect()]
+    total = rows.get["n"]
+    return [r[key_col] for r in top if r["count"] > threshold_share * total]
 
 
 def _content_salt(

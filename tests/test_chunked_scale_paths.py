@@ -245,3 +245,35 @@ def test_salt_is_deterministic_across_evaluations(spark):
     # every bucket is actually used (the salt does spread rows)
     used = {r["__salt"] for r in a}
     assert used == set(range(8))
+
+
+def test_detect_heavy_hitters_top_k_is_exact(spark):
+    """More distinct keys than the top-k bound ceil(1 / threshold_share):
+    the top-k collect returns exactly the keys a full count over the same
+    sample finds above the share, most frequent first."""
+    # 30 %, 20 % and 10 % of the rows, the rest over 97 light keys
+    bucket = F.col("id") % 20
+    df = spark.range(0, 4000, numPartitions=4).select(
+        F.when(bucket < 6, F.lit("h0"))
+        .when(bucket < 10, F.lit("h1"))
+        .when(bucket < 12, F.lit("h2"))
+        .otherwise(F.concat(F.lit("k"), (F.col("id") % 97).cast("string")))
+        .alias("doc_id")
+    )
+    share = 0.05  # the top 20 keys
+    sample = df.sample(fraction=0.1, seed=42)
+    counts = {r["doc_id"]: r["count"] for r in sample.groupBy("doc_id").count().collect()}
+    assert len(counts) > 20
+    total = sum(counts.values())
+    want = sorted((k for k, n in counts.items() if n > share * total),
+                  key=lambda k: -counts[k])
+    assert want == ["h0", "h1", "h2"]
+    assert detect_heavy_hitters(df, "doc_id", threshold_share=share) == want
+
+
+def test_detect_heavy_hitters_share_is_strict(spark):
+    """A key at exactly the threshold share is not heavy: the only key
+    holds all of the sample, and the share 1 asks for more than that."""
+    df = spark.range(0, 500).select(F.lit("only").alias("doc_id"))
+    assert detect_heavy_hitters(df, "doc_id", threshold_share=1.0) == []
+    assert detect_heavy_hitters(df, "doc_id", threshold_share=0.99) == ["only"]

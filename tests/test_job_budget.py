@@ -63,9 +63,20 @@ def test_asof_auto_job_ceiling(spark, events, purchases):
     assert jobs.n == 0
 
 
+def test_asof_auto_detection_job_ceiling(spark, events, purchases):
+    # with heavy_keys=None the plan build runs detection's one top-k
+    # collect: 2 jobs (4 when detection cross-joined the counts with their
+    # total)
+    with JobCount(spark) as jobs:
+        asof_join(events, purchases, on="ts", by="doc_id", strategy="auto")
+    assert jobs.n <= 2
+
+
 def test_routed_featurize_job_ceiling(spark, events, purchases):
-    # detection, the auto as-of join, the fused stage and the write: 15 (17
-    # when detection ran two actions and the fused row numbers shuffled
+    # detection, the auto as-of join, the fused stage and the write: 11 (15
+    # when detection cross-joined the counts with their total and the as-of
+    # summary joined a separate chunk domain; 17 when detection ran two
+    # actions and the fused row numbers shuffled
     # again on the as-of cells; 21 when the fused stage split light and
     # heavy keys into two branches, each planning the as-of join again; 24
     # when the as-of join also sized its chunks with a .first() and ran
@@ -80,7 +91,7 @@ def test_routed_featurize_job_ceiling(spark, events, purchases):
             "overwrite"
         ).save()
     assert heavy == ["h"]
-    assert jobs.n <= 15
+    assert jobs.n <= 11
 
 
 def test_windowed_encode_no_heavy_key_job_ceiling(spark, events):
@@ -96,12 +107,22 @@ def test_windowed_encode_no_heavy_key_job_ceiling(spark, events):
 
 
 def test_detect_heavy_hitters_job_ceiling(spark, events):
-    # one collect of the counts beside their total (5 with a .first() for
-    # the total and a second collect for the keys)
+    # one top-k collect, the total observed on the same pass: 2 jobs, the
+    # aggregate's shuffle and the take (4 for one collect of the counts
+    # cross-joined with their total, 5 with a .first() for the total and a
+    # second collect for the keys)
     with JobCount(spark) as jobs:
         heavy = detect_heavy_hitters(events, "doc_id", threshold_share=0.2)
     assert heavy == ["h"]
-    assert jobs.n <= 4
+    assert jobs.n <= 2
+
+
+@pytest.mark.parametrize("share", [0.0, -0.1, 1.5, float("nan")])
+def test_detect_heavy_hitters_rejects_share_before_any_job(spark, events, share):
+    with JobCount(spark) as jobs:
+        with pytest.raises(ValueError, match="threshold_share"):
+            detect_heavy_hitters(events, "doc_id", threshold_share=share)
+    assert jobs.n == 0
 
 
 @pytest.mark.parametrize("op", ["pack_sequences", "positional_encoding"])
@@ -132,7 +153,8 @@ def test_encode_bpe_plan_over_shuffled_input_runs_no_job(spark):
 
 
 def test_near_dup_clusters_driver_path_job_ceiling(spark):
-    # edge checkpoint, its count and the union-find collect
+    # one bounded collect of the distinct edges (5 for the edge checkpoint,
+    # its count and the union-find collect)
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e")], "id_a string, id_b string"
     )
@@ -141,7 +163,7 @@ def test_near_dup_clusters_driver_path_job_ceiling(spark):
     with JobCount(spark) as jobs:
         near_dup_clusters(pairs, nodes, stats=stats)
     assert stats["path"] == "driver"
-    assert jobs.n <= 5
+    assert jobs.n <= 2
 
 
 def test_ingest_batch_index_path_job_ceiling(spark, tmp_path):
@@ -158,9 +180,11 @@ def test_ingest_batch_index_path_job_ceiling(spark, tmp_path):
     with JobCount(spark) as jobs:
         ingest_batch(b1, 1, idx, acc, stats_dir=stats)
     assert {r["doc_id"] for r in spark.read.parquet(f"{acc}/batch_id=1").collect()} == {"c1"}
-    # one hashing pass feeds pairs, lookup and index rows (61 jobs when
-    # each of them hashed the batch itself)
-    assert jobs.n <= 33
+    # one hashing pass feeds pairs, lookup and index rows, and the
+    # within-batch clusters are one bounded collect: 30 jobs (33 when the
+    # clusters checkpointed and counted their edges first, 61 when each of
+    # them hashed the batch itself)
+    assert jobs.n <= 30
 
 
 def test_curate_tokens_job_ceiling(spark):

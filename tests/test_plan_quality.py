@@ -324,22 +324,24 @@ def _routed_featurize_static_plan(spark, tmp_path):
 
 
 def test_routed_featurize_static_plan_scan_count(spark, tmp_path):
-    """The routed featurize plan scans the parquet inputs 6 times: both in
-    the local LOCF, both again (heavy rows only) in the chunk domain,
-    purchases in the summary, and events (heavy rows only) in the fused
-    stage's cell offsets. A light/heavy split above the as-of join plans
-    its whole subtree once per branch (10)."""
+    """The routed featurize plan scans the parquet inputs 5 times: both in
+    the local LOCF, both again (heavy rows only) in the cell summary, which
+    is its own chunk domain, and events (heavy rows only) in the fused
+    stage's cell offsets. A separate chunk domain scanned both inputs once
+    more (6); a light/heavy split above the as-of join plans its whole
+    subtree once per branch (10)."""
     plan = _routed_featurize_static_plan(spark, tmp_path)
-    assert plan.count("FileScan") <= 6, plan
+    assert plan.count("FileScan") <= 5, plan
 
 
 def test_routed_featurize_row_numbers_reuse_asof_shuffle(spark, tmp_path):
     """The as-of LOCF exchange is on the heavy-cell expression, so the
     fused stage's row-number window over the same cells needs no shuffle
-    of its own: 10 exchanges, none on an (entity, __cell) alias (11 when
-    that window shuffled every row again)."""
+    of its own: 8 exchanges, none on an (entity, __cell) alias (10 while a
+    chunk domain was aggregated apart from the summary and joined to it, 11
+    when that window shuffled every row again)."""
     plan = _routed_featurize_static_plan(spark, tmp_path)
-    assert plan.count("Exchange") <= 10, plan
+    assert plan.count("Exchange") <= 8, plan
     assert not re.search(r"hashpartitioning\(doc_id#\d+, __cell", plan), plan
 
 
@@ -354,3 +356,30 @@ def test_asof_auto_summary_is_hash_aggregate(spark, tmp_path):
     assert got.count() == 600
     plan = _plan(got)
     assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
+def test_asof_no_cell_plan_is_one_window_over_one_shuffle(spark, tmp_path):
+    """With no heavy key the as-of scan runs on no cell: union_locf and
+    auto with ``[]`` plan the same single shuffle on the key and one
+    window, and Catalyst prunes the cell summary, its carry and the stitch
+    join (no aggregate, no join)."""
+    from feature_extractor_spark.operators.asof import asof_join
+
+    ev, pu = _routed_featurize_inputs(spark, tmp_path)
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plans = [
+            _plan(asof_join(ev, pu, on="ts", by="doc_id", **kw))
+            for kw in ({"strategy": "union_locf"}, {"strategy": "auto", "heavy_keys": []})
+        ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert re.search(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", plan), plan
+        assert plan.count("Window ") == 1, plan
+        assert "Aggregate" not in plan and "Join" not in plan, plan
+    # the same plan up to expression and plan ids
+    plain, auto = (re.sub(r"#\d+|plan_id=\d+", "", p) for p in plans)
+    assert plain == auto, (plain, auto)
