@@ -148,9 +148,9 @@ def token_repetition_signals(
     """Repetition filters for PRE-TOKENIZED sequences (the input_hint
     payload) — the token-space twin of ``repetition_signals``: loops and
     boilerplate show up as repeated token n-grams without any text to
-    inspect. Gram hashes are the same fixed affine combine the token
-    minhash dedup uses, so a sequence these signals flag is exactly the
-    kind the dedup stage would bucket. Adds:
+    inspect. Gram hashes are the token minhash dedup's own
+    (``token_hashes`` + ``combine_word_hashes``), so a sequence these
+    signals flag is exactly the kind the dedup stage would bucket. Adds:
 
     - ``dup_gram_frac``: fraction of token n-grams that repeat an earlier
       identical gram (1 - distinct/total),
@@ -158,35 +158,19 @@ def token_repetition_signals(
       single most frequent n-gram (array_sort + linear run-scan on LONGS —
       no strings anywhere).
     """
-    _M31 = (1 << 31) - 1
+    from feature_extractor_spark.operators.dedup import (
+        combine_word_hashes,
+        token_hashes,
+    )
+
     t = F.col(tokens_col)
     n = F.size(t)
-    hashed = F.transform(
-        t,
-        lambda tok: F.pmod(
-            tok.cast("long") * F.lit(2654435761) + F.lit(40503), F.lit(_M31)
-        ),
+    # materialize the token hashes and the grams as columns: an inline
+    # array subtree is re-evaluated per element_at (the
+    # combine_word_hashes trap)
+    df = df.withColumn("__th", token_hashes(t)).withColumn(
+        "__g", combine_word_hashes(F.col("__th"), gram_n)
     )
-    mults = [536870909, 402653171, 268435399, 134217689, 67108859]
-    count = n - (gram_n - 1)
-    grams = F.when(
-        count > 0,
-        F.transform(
-            F.sequence(F.lit(1), count),
-            lambda i: F.pmod(
-                sum(
-                    F.pmod(
-                        F.element_at(hashed, i + j) * F.lit(mults[j]), F.lit(_M31)
-                    )
-                    for j in range(gram_n)
-                ),
-                F.lit(_M31),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    # materialize grams once: every consumer below re-evaluates an inline
-    # subtree per element otherwise (the combine_word_hashes trap)
-    df = df.withColumn("__g", grams)
     g = F.col("__g")
     n_grams = F.size(g)
     dup_frac = F.when(
@@ -224,7 +208,7 @@ def token_repetition_signals(
     return (
         df.withColumn("dup_gram_frac", dup_frac)
         .withColumn("top_gram_frac", top_frac)
-        .drop("__g")
+        .drop("__th", "__g")
     )
 
 

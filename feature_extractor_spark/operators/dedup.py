@@ -13,6 +13,12 @@
   grows with collisions, not with N^2.
 - simhash: 64-bit SimHash fingerprint from per-token hashes; near-dup =
   Hamming distance <= k (exposed as fingerprint + band keys).
+
+Text and token-id rows differ only in how a row becomes an element-hash
+array in [0, 2^31-1): ``word_hashes`` (xxhash64 per word) or
+``token_hashes`` (a fixed affine map per token id). Everything after it is
+written once for both: the n-gram combine, MinHash/LSH with its verify
+tail, and the exact-substring span removal pass (``_span_removal_pass``).
 """
 
 from __future__ import annotations
@@ -216,6 +222,18 @@ def word_hashes(words_col):
     return F.transform(words_col, lambda w: F.pmod(F.xxhash64(w), F.lit(_M31)))
 
 
+def token_hashes(tokens_col):
+    """Per-token hash in [0, 2^31-1) for token-id arrays: a fixed affine
+    map (Knuth multiplicative constant), no string hashing at all. A token
+    id < 2^31 keeps the product < 2^63 (ANSI overflow throws)."""
+    return F.transform(
+        tokens_col,
+        lambda tok: F.pmod(
+            tok.cast("long") * F.lit(2654435761) + F.lit(40503), F.lit(_M31)
+        ),
+    )
+
+
 _COMBINE_MULTS = {
     0: [536870909, 402653171, 268435399, 134217689, 67108859],
     # independent second family (variant=1): pairing two 31-bit combines
@@ -356,19 +374,13 @@ def minhash_lsh_pairs_tokens(
     """MinHash/LSH near-dup pairs over PRE-TOKENIZED sequences — the
     input_hint payload (doc_id, tokens:array<int>): real LLM dedup runs on
     token n-grams, not reconstructed text. Token ids map to [0, 2^31-1)
-    via a fixed affine hash (no string hashing at all), n-grams combine
+    via ``token_hashes`` (no string hashing at all), n-grams combine
     exactly like the text path's hashed shingles, and the banding /
     candidate-only exact-Jaccard verification is the shared scale plan.
     Jaccard is over hashed token-n-gram SETS."""
-    t = F.transform(
-        F.col(tokens_col),
-        # Knuth multiplicative constant; token < 2^31 keeps the product
-        # < 2^63 (ANSI overflow throws, so stay inside long range)
-        lambda tok: F.pmod(
-            tok.cast("long") * F.lit(2654435761) + F.lit(40503), F.lit(_M31)
-        ),
+    wh_tbl, docs = _grams_from_word_hashes(
+        df, id_col, tokens_col, token_hashes(F.col(tokens_col)), gram_n
     )
-    wh_tbl, docs = _grams_from_word_hashes(df, id_col, tokens_col, t, gram_n)
     return _lsh_pairs_from_grams(wh_tbl, docs, id_col, num_hashes, bands, threshold)
 
 
@@ -1334,7 +1346,14 @@ def remove_duplicate_spans(
         raise ValueError(
             f"remove_duplicate_spans: max_passes must be >= 1, got {max_passes}"
         )
-    joined = _span_removal_pass(df, id_col, text_col, L, min_count, out_col)
+
+    def one_pass(d: DataFrame, src: str) -> DataFrame:
+        return _span_removal_pass(
+            d, id_col, src, words(F.col(src)), word_hashes, L, min_count,
+            out_col, finish=lambda ws: F.array_join(ws, " "),
+        )
+
+    joined = one_pass(df, text_col)
     passes = 1
     residual: int | None = None
     while True:
@@ -1348,7 +1367,7 @@ def remove_duplicate_spans(
             "n_removed_tokens", "__prev_removed"
         ).withColumnRenamed("n_dup_spans", "__prev_spans")
         joined = (
-            _span_removal_pass(prev, id_col, out_col, L, min_count, out_col)
+            one_pass(prev, out_col)
             .withColumn(
                 "n_removed_tokens",
                 F.col("__prev_removed") + F.col("n_removed_tokens"),
@@ -1368,28 +1387,33 @@ def remove_duplicate_spans(
 def _span_removal_pass(
     df: DataFrame,
     id_col: str,
-    text_col: str,
+    src_col: str,
+    elems,
+    hashes,
     L: int,
     min_count: int,
     out_col: str,
+    finish=None,
 ) -> DataFrame:
-    """One mark/merge/rebuild pass of ``remove_duplicate_spans`` (its
-    docstring describes the dataflow); returns the input rows with
-    ``out_col``, ``n_removed_tokens`` and ``n_dup_spans`` for THIS pass,
-    localCheckpointed (each pass is a fixpoint-loop iterate — same
-    lineage-truncation reasoning as near_dup_clusters)."""
+    """One mark/merge/rebuild pass of exact-substring span removal (the
+    ``remove_duplicate_spans`` docstring describes the dataflow) over
+    ``elems``, the element array of ``src_col`` (``words(text)`` or the
+    token array), hashed per element by ``hashes`` (``word_hashes`` or
+    ``token_hashes``). Returns the input rows with ``out_col`` (the
+    surviving elements, through ``finish`` when given, e.g. an
+    ``array_join`` back to text), ``n_removed_tokens`` and ``n_dup_spans``
+    for THIS pass; rows without a duplicated span keep ``src_col``
+    untouched. localCheckpointed (each pass is a fixpoint-loop iterate —
+    same lineage-truncation reasoning as near_dup_clusters)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    # persist at the word level: the array feeds gram hashing AND the
+    # persist at the element level: the array feeds gram hashing AND the
     # rebuild, and the barrier stops CollapseProject from re-tokenizing
     # per element (same reasoning as _hashed_shingle_table)
     wh_tbl = (
-        df.select(id_col, text_col)
+        df.select(id_col, src_col)
         .repartition(par)
-        .select(
-            F.col(id_col),
-            words(F.col(text_col)).alias("__ws"),
-        )
-        .withColumn("__wh", word_hashes(F.col("__ws")))
+        .select(F.col(id_col), elems.alias("__ws"))
+        .withColumn("__wh", hashes(F.col("__ws")))
         .persist()
     )
     pos_grams = wh_tbl.select(
@@ -1406,18 +1430,16 @@ def _span_removal_pass(
         ).alias("__pos", "__g"),
     )
     span_arr = _duplicate_span_arrays(pos_grams, id_col, L, min_count)
+    clean = F.filter(
+        F.col("__ws"),
+        lambda e, i: ~F.exists(
+            F.col("__spans"),
+            lambda s: (i >= s.getField("__s")) & (i < s.getField("__e")),
+        ),
+    )
     rebuilt = wh_tbl.join(span_arr, id_col).select(
         F.col(id_col),
-        F.array_join(
-            F.filter(
-                F.col("__ws"),
-                lambda word, i: ~F.exists(
-                    F.col("__spans"),
-                    lambda s: (i >= s.getField("__s")) & (i < s.getField("__e")),
-                ),
-            ),
-            " ",
-        ).alias("__clean"),
+        (finish(clean) if finish is not None else clean).alias("__clean"),
         F.aggregate(
             F.col("__spans"),
             F.lit(0),
@@ -1427,7 +1449,7 @@ def _span_removal_pass(
     )
     joined = (
         df.join(rebuilt, id_col, "left")
-        .withColumn(out_col, F.coalesce(F.col("__clean"), F.col(text_col)))
+        .withColumn(out_col, F.coalesce(F.col("__clean"), F.col(src_col)))
         .withColumn("n_removed_tokens", F.coalesce("n_removed_tokens", F.lit(0)))
         .withColumn("n_dup_spans", F.coalesce("n_dup_spans", F.lit(0)))
         .drop("__clean")
@@ -1450,10 +1472,8 @@ def remove_duplicate_spans_tokens(
     2022 run ExactSubstr on token streams with a 50-token threshold
     (§4.1), which is exactly this variant: any token span of >= min_len
     occurring >= min_count times corpus-wide is cut from every sequence.
-    No text anywhere: token ids map to [0, 2^31) via the same fixed
-    affine hash as minhash_lsh_pairs_tokens, n-grams combine like the
-    hashed shingles, and the mark/merge/rebuild plan is shared
-    (_duplicate_span_arrays).
+    No text anywhere: token ids hash via ``token_hashes``, and the
+    mark/merge/rebuild pass is the text path's (``_span_removal_pass``).
 
     Returns the input rows with ``tokens_col`` rebuilt (element type
     preserved), ``n_removed_tokens``, ``n_dup_spans``, and ``n_tok_col``
@@ -1465,60 +1485,12 @@ def remove_duplicate_spans_tokens(
         raise ValueError(
             f"remove_duplicate_spans_tokens: min_len must be >= 2, got {L}"
         )
-    th = F.transform(
-        F.col(tokens_col),
-        lambda tok: F.pmod(
-            tok.cast("long") * F.lit(2654435761) + F.lit(40503), F.lit(_M31)
-        ),
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    wh_tbl = (
-        df.select(id_col, tokens_col)
-        .repartition(par)
-        .select(F.col(id_col), F.col(tokens_col), th.alias("__wh"))
-        .persist()
-    )
-    pos_grams = wh_tbl.select(
-        F.col(id_col),
-        # gram key = PAIR of independent 31-bit combines (~62-bit): span
-        # marking removes on hash equality with NO verify stage, so the
-        # single 31-bit combine the verified minhash path uses would
-        # false-remove at scale (observed 2 collisions in 500 docs)
-        F.posexplode(
-            F.arrays_zip(
-                combine_word_hashes(F.col("__wh"), L).alias("g1"),
-                combine_word_hashes(F.col("__wh"), L, variant=1).alias("g2"),
-            )
-        ).alias("__pos", "__g"),
-    )
-    span_arr = _duplicate_span_arrays(pos_grams, id_col, L, min_count)
-    rebuilt = wh_tbl.join(span_arr, id_col).select(
-        F.col(id_col),
-        F.filter(
-            F.col(tokens_col),
-            lambda tok, i: ~F.exists(
-                F.col("__spans"),
-                lambda s: (i >= s.getField("__s")) & (i < s.getField("__e")),
-            ),
-        ).alias("__clean"),
-        F.aggregate(
-            F.col("__spans"),
-            F.lit(0),
-            lambda acc, s: acc + (s.getField("__e") - s.getField("__s")),
-        ).alias("n_removed_tokens"),
-        "n_dup_spans",
-    )
-    joined = (
-        df.join(rebuilt, id_col, "left")
-        .withColumn(tokens_col, F.coalesce(F.col("__clean"), F.col(tokens_col)))
-        .withColumn("n_removed_tokens", F.coalesce("n_removed_tokens", F.lit(0)))
-        .withColumn("n_dup_spans", F.coalesce("n_dup_spans", F.lit(0)))
-        .drop("__clean")
+    joined = _span_removal_pass(
+        df, id_col, tokens_col, F.col(tokens_col), token_hashes, L, min_count,
+        tokens_col,
     )
     if n_tok_col is not None and n_tok_col in df.columns:
         joined = joined.withColumn(
             n_tok_col, F.size(tokens_col).cast(df.schema[n_tok_col].dataType)
         )
-    joined = joined.localCheckpoint(eager=True)
-    wh_tbl.unpersist()
     return joined

@@ -16,6 +16,14 @@ only COMPOSES them, so the pipeline inherits their scale contracts:
 - the write commits per-source dynamic partitions in batched jobs with
   per-unit lineage metrics (plans/lineage.py).
 
+Two front ends share one dedup stage: ``curate`` (text) and
+``curate_tokens`` (pre-tokenized sequences) differ only in how a row
+becomes its exact-dedup key (md5 of the normalized text, or two seeded
+xxhash64s of the token array) and its element-hash array for MinHash
+(``dedup.word_hashes`` / ``dedup.token_hashes``). The exact -> near-dup
+stage after that is written once (``_exact_dedup``, ``_drop_near_dups``),
+and so is the shuffle/pack tail (``_shuffle_and_pack``).
+
 CLI (spark-submit --py-files dist/feature_extractor_spark.zip):
 
     python -m feature_extractor_spark.plans.tokens_pipeline \
@@ -36,10 +44,7 @@ from feature_extractor_spark.functions.text import (
     repetition_signals,
     token_counts,
 )
-from feature_extractor_spark.operators.dedup import (
-    minhash_lsh_pairs,
-    near_dup_clusters,
-)
+from feature_extractor_spark.operators import dedup
 from feature_extractor_spark.operators.packing import pack_sequences
 from feature_extractor_spark.operators.sampling import (
     deterministic_shuffle,
@@ -107,6 +112,76 @@ def _pair_guard(
             f"boilerplate (line/span dedup), or lift the cap deliberately."
         )
     return ckpt
+
+
+def _exact_dedup(df: DataFrame, id_col: str, key: list) -> DataFrame:
+    """Exact dedup of both front ends: one row per distinct ``key`` (a
+    list of Columns, the row's content digest), the min-``id_col``
+    survivor. Same survivor rule as operators/dedup.exact_dedup, but as a
+    rank-1 window instead of groupBy+self-join: ONE scan and ONE
+    key-hashed shuffle where the join form re-scans the (by now branched,
+    pruned-differently, non-exchange-reusable) input subtree twice and
+    shuffles it again by id."""
+    from pyspark.sql import Window
+
+    # r10: pre-repartition on the window's own key at cluster width. AQE
+    # coalesces the window exchange by shuffle BYTES (a 50k-doc corpus
+    # compresses to a few MB -> ~11 partitions), but the per-row work in
+    # the stage it feeds — the digest, the rank window, the keep-join
+    # probe — is compute AQE cannot see: the stage ran 11 tasks of ~1.6 s
+    # while 21 cores idled (event-log profile, local[32]). A user
+    # repartition on the identical expressions is exempt from coalescing
+    # and satisfies the window's ClusteredDistribution, so no second
+    # exchange appears (tests/test_plan_quality.py pins one Exchange and
+    # one Window). Same fix family as the repartition in _drop_near_dups.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    w = Window.partitionBy(*key).orderBy(id_col)
+    return (
+        df.repartition(par, *key)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _drop_near_dups(
+    survivors: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    stage_counts: dict | None,
+    max_pairs_per_doc: int | None,
+) -> DataFrame:
+    """Transitive near-dup dedup of both front ends: the verified pairs
+    (pair density recorded / guarded by ``_pair_guard``) -> star-
+    contraction closure -> keep each component's minimum id. Counts
+    ``near_dup_dedup`` and, with ``stage_counts`` set, the closure
+    telemetry ``cc_path``/``cc_rounds``/``cc_n_edges`` (plain ints).
+    ``dedup.near_dup_clusters`` is looked up on its module at call time
+    (a traced perfbench run wraps it there)."""
+    pairs = _pair_guard(pairs, id_col, stage_counts, max_pairs_per_doc)
+    cc_stats: dict = {}
+    clusters = dedup.near_dup_clusters(pairs, survivors, id_col, stats=cc_stats)
+    if stage_counts is not None:
+        stage_counts["cc_path"] = cc_stats.get("path")
+        stage_counts["cc_rounds"] = int(cc_stats.get("rounds", 0))
+        stage_counts["cc_n_edges"] = int(cc_stats.get("n_edges", 0))
+    keep = clusters.filter(F.col(id_col) == F.col("canonical_id")).select(id_col)
+    survivors = _funnel_count(
+        survivors.join(keep, id_col), stage_counts, "near_dup_dedup", id_col
+    )
+    # r10: explicit repartition before the filter tail. AQE coalesces the
+    # keep-join's output by SHUFFLE BYTES (the curated survivors compress
+    # to a few MB -> ONE partition), but everything downstream of that
+    # exchange — quality_score's ngram sort/aggregate expressions,
+    # repetition_signals, token_counts' regexp passes, the token filters
+    # and chunking — is per-row compute AQE cannot see: the whole text
+    # tail ran as a single 20 s task while the rest of the cluster idled
+    # (event-log profile, local[32]). A user repartition is exempt from
+    # AQE coalescing and spreads the tail across the cluster (same fix,
+    # same reasoning as operators/fused.windowed_encode's group
+    # repartition).
+    par = survivors.sparkSession.sparkContext.defaultParallelism
+    return survivors.repartition(par)
 
 
 def curate(
@@ -182,9 +257,7 @@ def curate(
 
         docs = normalize_unicode(docs, text_col, form=unicode_norm)
     if line_dedup_min_docs is not None:
-        from feature_extractor_spark.operators.dedup import line_dedup_corpus
-
-        docs = line_dedup_corpus(
+        docs = dedup.line_dedup_corpus(
             docs, id_col, text_col, min_docs=line_dedup_min_docs
         ).drop("n_removed_lines")
     if c4_rules:
@@ -200,9 +273,7 @@ def curate(
         # Lee et al. ExactSubstr removal — also BEFORE dedup identity, so
         # removing a big shared span can legitimately turn two docs into
         # exact/near dups that the dedup stages then collapse
-        from feature_extractor_spark.operators.dedup import remove_duplicate_spans
-
-        docs = remove_duplicate_spans(
+        docs = dedup.remove_duplicate_spans(
             docs, id_col, text_col, min_len=exact_span_min_len
         ).drop("n_removed_tokens", "n_dup_spans")
 
@@ -211,69 +282,22 @@ def curate(
 
     docs = _count(docs, "input")
 
-    # 1. exact dedup: identical normalized text -> keep min-id survivor.
-    #    Same digest + survivor rule as operators/dedup.exact_dedup, but
-    #    as a rank-1 window instead of groupBy+self-join: ONE scan and
-    #    ONE digest-keyed shuffle where the join form re-scans the (by
-    #    now branched, pruned-differently, non-exchange-reusable) input
-    #    subtree twice and shuffles it again by id
-    from pyspark.sql import Window
-
-    from feature_extractor_spark.operators.dedup import _norm_text
-
-    # r10: pre-repartition on the window's own key at cluster width. AQE
-    # coalesces the window exchange by shuffle BYTES (a 50k-doc corpus
-    # compresses to a few MB -> ~11 partitions), but the per-row work in
-    # the stage it feeds — the md5 digest, the rank window, the keep-join
-    # probe — is compute AQE cannot see: the stage ran 11 tasks of ~1.6 s
-    # while 21 cores idled (event-log profile, local[32]). A user
-    # repartition on the identical expression is exempt from coalescing
-    # and satisfies the window's ClusteredDistribution, so no second
-    # exchange appears (plan-verified). Same fix family as the post-join
-    # repartition below.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    w_exact = Window.partitionBy(F.md5(_norm_text(text_col))).orderBy(id_col)
-    survivors = (
-        docs.repartition(par, F.md5(_norm_text(text_col)))
-        .withColumn("__rn", F.row_number().over(w_exact))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    # 1. exact dedup: identical normalized text (md5 digest) -> min-id
+    #    survivor
+    survivors = _count(
+        _exact_dedup(docs, id_col, [F.md5(dedup._norm_text(text_col))]),
+        "exact_dedup",
     )
-    survivors = _count(survivors, "exact_dedup")
 
     # 2. transitive near-dup dedup: banded MinHash candidates -> verified
-    #    Jaccard pairs -> star-contraction closure -> keep component minima.
-    #    _pair_guard (VERDICT r6 item 2) records pair count + max per-doc
-    #    degree into the funnel and RAISES on max_pairs_per_doc blowup.
-    # the verified pairs are materialized inside the LSH call and its
-    # word-hash/gram caches released there (r10: persists left alive leak
-    # for the session's lifetime — the CacheManager holds strong refs)
-    pairs = minhash_lsh_pairs(
+    #    Jaccard pairs (materialized inside the LSH call, its word-hash/
+    #    gram caches released there) -> closure -> component minima
+    pairs = dedup.minhash_lsh_pairs(
         survivors, id_col, text_col, threshold=near_dup_threshold
     )
-    pairs = _pair_guard(pairs, id_col, stage_counts, max_pairs_per_doc)
-    cc_stats: dict = {}
-    clusters = near_dup_clusters(pairs, survivors, id_col, stats=cc_stats)
-    if stage_counts is not None:
-        # closure telemetry rides the same funnel dict (plain ints):
-        # which path ran, how many rounds, how many distinct edges
-        stage_counts["cc_path"] = cc_stats.get("path")
-        stage_counts["cc_rounds"] = int(cc_stats.get("rounds", 0))
-        stage_counts["cc_n_edges"] = int(cc_stats.get("n_edges", 0))
-    keep = clusters.filter(F.col(id_col) == F.col("canonical_id")).select(id_col)
-    survivors = survivors.join(keep, id_col)
-    survivors = _count(survivors, "near_dup_dedup")
-    # r10: explicit repartition before the scoring/filter tail. AQE
-    # coalesces the keep-join's output by SHUFFLE BYTES (the curated
-    # survivors compress to a few MB -> ONE partition), but everything
-    # downstream of that exchange — quality_score's ngram sort/aggregate
-    # expressions, repetition_signals, token_counts' regexp passes — is
-    # per-doc compute AQE cannot see: the whole tail ran as a single
-    # 20 s task while the rest of the cluster idled (event-log profile,
-    # local[32]). A user repartition is exempt from AQE coalescing and
-    # spreads the tail across the cluster (same fix, same reasoning as
-    # operators/fused.windowed_encode's group repartition).
-    survivors = survivors.repartition(par)
+    survivors = _drop_near_dups(
+        survivors, pairs, id_col, stage_counts, max_pairs_per_doc
+    )
 
     # 3. quality + Gopher repetition filters (all map-side expressions)
     scored = repetition_signals(quality_score(survivors, text_col), text_col)
@@ -329,9 +353,7 @@ def curate(
     #     text would hide grams the original shares with the benchmark): drop docs sharing any
     #     decontam_n-gram with the (small, broadcast) eval set
     if benchmark is not None:
-        from feature_extractor_spark.operators.dedup import contamination_flags
-
-        flags = contamination_flags(
+        flags = dedup.contamination_flags(
             filtered, benchmark, id_col, text_col, id_col, text_col,
             n=decontam_n,
         )
@@ -563,19 +585,15 @@ def curate_tokens(
 ) -> DataFrame:
     """Curation twin for the PRE-TOKENIZED input (BASELINE.json
     input_hint: ``doc_id:string, tokens:array<int32>, n_tok:int32,
-    source:string``): no text anywhere — dedup runs on token n-grams
+    source:string``): no text anywhere — the text path's exact ->
+    near-dup stage on a token-array key and token n-grams
     (``minhash_lsh_pairs_tokens``), filtering on token counts, then the
-    same deterministic sample / stable shuffle / packing tail as the text
-    path. Each ROW is one training sequence; a synthetic ``seq_id``
+    same deterministic sample / stable shuffle / packing tail. Each ROW is one training sequence; a synthetic ``seq_id``
     (xxhash64 of doc id + ts) keys dedup, sampling, and the shuffle.
     ``stage_counts`` works as in ``curate`` (replay-idempotent HLL
     distinct-seq_id metric via observe; resolve_stage_counts after an
     action)."""
     _check_packing("curate_tokens", packing)
-    from feature_extractor_spark.operators.dedup import (
-        minhash_lsh_pairs_tokens,
-        near_dup_clusters,
-    )
 
     def _count(df: DataFrame, stage: str) -> DataFrame:
         return _funnel_count(df, stage_counts, stage, "seq_id")
@@ -590,11 +608,7 @@ def curate_tokens(
         # text path's pre-cleaning. Keyed on seq_id: doc_id repeats
         # across a doc's sequences, and the rebuild join needs the
         # unique per-row key.
-        from feature_extractor_spark.operators.dedup import (
-            remove_duplicate_spans_tokens,
-        )
-
-        seqs = remove_duplicate_spans_tokens(
+        seqs = dedup.remove_duplicate_spans_tokens(
             seqs,
             "seq_id",
             tokens_col,
@@ -603,68 +617,33 @@ def curate_tokens(
         ).drop("n_removed_tokens", "n_dup_spans")
     seqs = _count(seqs, "input")
 
-    # 1. exact dedup: identical token arrays -> min-seq_id survivor
-    #    (rank-1 window — same shape as the text path's exact stage).
-    #    The window keys on a HASH of the tokens, NOT the raw array
-    #    (VERDICT r6 item 4): partitioning on the array makes every
-    #    multi-KB payload both the shuffle key and the sort key — hashed
-    #    and compared in full at every exchange/sort touch — where 16
-    #    bytes of longs carry the same grouping. The key is TWO
-    #    independently-seeded xxhash64 values (effective 128 bits,
-    #    ADVICE r7): a single 64-bit key expects ~10^4 birthday
-    #    collisions at the module's 10^12-row design scale, silently
-    #    dropping distinct sequences, while 128 bits puts the expectation
-    #    back at ~2^-48 — the same accepted class as the text path's
-    #    128-bit md5 digest key (step 1 of curate). Identical arrays
-    #    collide on both seeds by construction, so no true duplicate is
-    #    ever missed; false merges need a simultaneous 2-seed collision.
-    from pyspark.sql import Window
-
-    # seed literal FIRST: Spark's multi-arg xxhash64 chains left to right
-    # (hash = XXH64(child_i, seed=hash_so_far)), so xxhash64(tokens, lit)
-    # would be a pure function of xxhash64(tokens) — zero added entropy.
-    # xxhash64(lit, tokens) hashes the tokens under a DIFFERENT seed
-    # (XXH64(lit, 42)), giving a genuinely independent second 64 bits.
-    # r10: pre-repartition on the window's keys at cluster width — the
-    # same AQE-coalescing fix as the text path's exact-dedup stage (see
-    # curate): user repartition on the identical expressions satisfies
-    # the window's distribution, no second exchange.
-    par = tokens_df.sparkSession.sparkContext.defaultParallelism
-    w_exact = Window.partitionBy(
-        F.xxhash64(F.col(tokens_col)),
-        F.xxhash64(F.lit(0x9E3779B9), F.col(tokens_col)),
-    ).orderBy("seq_id")
-    survivors = (
-        seqs.repartition(
-            par,
-            F.xxhash64(F.col(tokens_col)),
-            F.xxhash64(F.lit(0x9E3779B9), F.col(tokens_col)),
-        )
-        .withColumn("__rn", F.row_number().over(w_exact))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    # 1. exact dedup: identical token arrays -> min-seq_id survivor. The
+    #    key hashes the tokens (VERDICT r6 item 4: the raw multi-KB array
+    #    as shuffle and sort key costs what 16 bytes of longs do) with TWO
+    #    independently seeded xxhash64s (ADVICE r7): one 64-bit key
+    #    expects ~10^4 birthday collisions at the 10^12-row design scale,
+    #    128 bits ~2^-48, the class of the text path's md5. Seed literal
+    #    FIRST: multi-arg xxhash64 chains left to right (seed = hash so
+    #    far), so xxhash64(tokens, lit) would be a function of
+    #    xxhash64(tokens); xxhash64(lit, tokens) hashes under a new seed.
+    toks = F.col(tokens_col)
+    survivors = _count(
+        _exact_dedup(
+            seqs,
+            "seq_id",
+            [F.xxhash64(toks), F.xxhash64(F.lit(0x9E3779B9), toks)],
+        ),
+        "exact_dedup",
     )
 
-    # 2. transitive near-dup over token n-grams (pair density recorded /
-    #    guarded by _pair_guard, VERDICT r6 item 2 — see curate)
-    pairs = minhash_lsh_pairs_tokens(
+    # 2. transitive near-dup over token n-grams
+    pairs = dedup.minhash_lsh_pairs_tokens(
         survivors, "seq_id", tokens_col,
         gram_n=gram_n, threshold=near_dup_threshold,
     )
-    pairs = _pair_guard(pairs, "seq_id", stage_counts, max_pairs_per_doc)
-    cc_stats: dict = {}
-    clusters = near_dup_clusters(pairs, survivors, "seq_id", stats=cc_stats)
-    if stage_counts is not None:
-        stage_counts["cc_path"] = cc_stats.get("path")
-        stage_counts["cc_rounds"] = int(cc_stats.get("rounds", 0))
-        stage_counts["cc_n_edges"] = int(cc_stats.get("n_edges", 0))
-    keep = clusters.filter(F.col("seq_id") == F.col("canonical_id")).select("seq_id")
-    survivors = survivors.join(keep, "seq_id")
-    survivors = _count(survivors, "near_dup_dedup")
-    # r10: spread the post-join tail (filters/chunking/EOS transforms)
-    # across the cluster — AQE coalesces the keep-join output to a
-    # handful of byte-sized partitions; see curate for the full note
-    survivors = survivors.repartition(par)
+    survivors = _drop_near_dups(
+        survivors, pairs, "seq_id", stage_counts, max_pairs_per_doc
+    )
 
     # 3. token-count bounds + optional token-space repetition filter
     #    (both map-side)

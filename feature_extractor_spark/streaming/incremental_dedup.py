@@ -83,7 +83,8 @@ def flag_against_index(
 ) -> DataFrame:
     """(id, is_dup, dup_of, jaccard) for every id of ``survivors`` vs the
     index, materialized. ``grams`` / ``banded`` are the batch's hashing
-    pass (``_hash_batch``); they may cover more ids than ``survivors``.
+    pass (``_hash_batch``: the ``(id, __h, __sz)`` gram frame and its
+    bands); they may cover more ids than ``survivors``.
 
     Candidates come only from shared (band, bucket) rows; each candidate
     is verified with exact Jaccard over hashed shingle sets. ``dup_of``
@@ -98,8 +99,16 @@ def flag_against_index(
         .select(id_col, "corpus_id")
         .dropDuplicates([id_col, "corpus_id"])
     )
+    # Jaccard as _verified_pairs computes it, over distinct-gram set
+    # sizes: no per-pair union array
+    inter = F.size(F.array_intersect("h_new", "h_old"))
     verified = (
-        cand.join(grams.select(id_col, F.col("__h").alias("h_new")), id_col)
+        cand.join(
+            grams.select(
+                id_col, F.col("__h").alias("h_new"), F.col("__sz").alias("sz_new")
+            ),
+            id_col,
+        )
         .join(
             index_shingles.select(
                 F.col(id_col).alias("corpus_id"), F.col("__h").alias("h_old")
@@ -108,8 +117,8 @@ def flag_against_index(
         )
         .withColumn(
             "jaccard",
-            F.size(F.array_intersect("h_new", "h_old"))
-            / F.size(F.array_union("h_new", "h_old")),
+            inter
+            / (F.col("sz_new") + F.size(F.array_distinct("h_old")) - inter),
         )
         .filter(F.col("jaccard") >= threshold)
     )

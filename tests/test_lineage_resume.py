@@ -135,9 +135,9 @@ def test_snapshot_diff_lists_incremental_units(spark, tmp_path):
 
 
 def test_batched_commit_runs_few_jobs(spark, tmp_path):
-    """10 units must commit in ceil(10/units_per_job)=1 batched write job,
-    not 10 — total Spark job count for the stage stays far below the
-    one-job-per-unit regime (~22 jobs before batching)."""
+    """10 units must commit in ceil(10 / lineage.UNITS_PER_JOB) = 1
+    batched write job, not 10 — total Spark job count for the stage stays
+    far below the one-job-per-unit regime (~22 jobs before batching)."""
     n_before = len(
         spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
     )

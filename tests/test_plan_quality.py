@@ -383,3 +383,34 @@ def test_asof_no_cell_plan_is_one_window_over_one_shuffle(spark, tmp_path):
     # the same plan up to expression and plan ids
     plain, auto = (re.sub(r"#\d+|plan_id=\d+", "", p) for p in plans)
     assert plain == auto, (plain, auto)
+
+
+def test_exact_dedup_plan_is_one_window_over_one_shuffle(spark, sf_small):
+    """The exact-dedup stage of both curation front ends: the repartition
+    on the key at cluster width satisfies the rank window's distribution,
+    so each plans 1 Exchange and 1 Window — for the md5 text key and for
+    the two-hash token key."""
+    from feature_extractor_spark.operators.dedup import _norm_text
+    from feature_extractor_spark.plans.tokens_pipeline import _exact_dedup
+    from feature_extractor_spark.sources.tokens import synth_tokens
+
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    seqs = synth_tokens(spark, n_rows=300, n_docs=20).withColumn(
+        "seq_id", F.xxhash64("doc_id", "ts")
+    )
+    toks = F.col("tokens")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plans = [
+            _plan(_exact_dedup(docs, "doc_id", [F.md5(_norm_text("text"))])),
+            _plan(_exact_dedup(
+                seqs, "seq_id",
+                [F.xxhash64(toks), F.xxhash64(F.lit(0x9E3779B9), toks)],
+            )),
+        ]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert plan.count("Window ") == 1, plan

@@ -317,7 +317,7 @@ def test_curate_tokens_stage_counts(spark):
     got = resolve_stage_counts(counts)
     assert abs(got["input"] - 2000) <= 20  # HLL rsd
     assert abs(got["output"] - n) <= 20
-    order = ["input", "near_dup_dedup", "token_filters", "output"]
+    order = ["input", "exact_dedup", "near_dup_dedup", "token_filters", "output"]
     vals = [got[k] for k in order]
     assert all(a + 20 >= b for a, b in zip(vals, vals[1:])), vals
 
