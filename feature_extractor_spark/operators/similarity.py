@@ -411,6 +411,10 @@ def kmeans_centroids(
     Lloyd iterations run driver-side in NumPy on <= sample_size rows, and
     the refined centroids ship back as broadcast literals. Deterministic:
     seeded hash order + fixed iteration count, no RNG at assignment time.
+    The values are the same bits on every CPU: each value-bearing reduction
+    (row norms, cell means, centroid norms) is NumPy's own, whose summation
+    order is fixed by NumPy. BLAS (``X @ C.T``, whose kernel and so its
+    rounding OpenBLAS picks per CPU) only chooses an ``argmax`` index.
 
     Returns (centroids: list[list[float]] unit-normalized, balance: float
     max-cell/mean-cell population on the sample)."""
@@ -434,7 +438,9 @@ def kmeans_centroids(
             members = X[assign == j]
             if len(members):
                 m = members.mean(axis=0)
-                C[j] = m / max(np.linalg.norm(m), 1e-12)
+                # not np.linalg.norm(m): on a 1-D array it calls BLAS ddot,
+                # whose summation order OpenBLAS picks from the CPU
+                C[j] = m / max(np.sqrt(np.add.reduce(m * m)), 1e-12)
             # empty cell: keep the previous centroid (deterministic, and the
             # cell simply stays small — balance check below compensates)
     assign = np.argmax(X @ C.T, axis=1)

@@ -23,12 +23,24 @@ def test_conv1d_same_matches_naive():
         got = L.conv1d_same(x, k, b, stride=stride)
         out_t, pl, pr = L._same_pad(9, 3, stride)
         xp = np.pad(x, ((0, 0), (pl, pr), (0, 0)))
-        want = np.zeros((2, out_t, 5), dtype=np.float32)
+        # reference: the same float32 inputs, accumulated in float64
+        xp64, k64, b64 = (a.astype(np.float64) for a in (xp, k, b))
+        want = np.zeros((2, out_t, 5))
+        mag = np.zeros((2, out_t, 5))  # sum of |terms| per output element
         for t in range(out_t):
             for j in range(3):
-                want[:, t] += xp[:, t * stride + j] @ k[j]
-        want += b
-        np.testing.assert_allclose(got, want, rtol=1e-5)
+                want[:, t] += xp64[:, t * stride + j] @ k64[j]
+                mag[:, t] += np.abs(xp64[:, t * stride + j]) @ np.abs(k64[j])
+        want += b64
+        mag += np.abs(b64)
+        # Higham's forward error bound for a float32 dot product of
+        # n = k*Cin + 1 terms (bias included) summed in any order:
+        # |got - want| <= gamma_n * sum|terms|, gamma_n = n*u / (1 - n*u)
+        # (Accuracy and Stability of Numerical Algorithms, 2nd ed., eq. 3.5)
+        n, u = 3 * 3 + 1, 2.0**-24
+        gamma_n = n * u / (1 - n * u)
+        err = np.abs(got.astype(np.float64) - want)
+        assert np.all(err <= gamma_n * mag), float((err / (gamma_n * mag)).max())
         assert got.shape[1] == -(-9 // stride)  # TF same: ceil(T/stride)
 
 

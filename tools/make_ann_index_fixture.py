@@ -23,6 +23,12 @@ n_lists=16, m=8, k_codes=16, sample_size=4096, seed=23, residual=False
 combinatorial SQL blow-up; the residual path keeps its pytest
 bit-equality coverage instead).
 
+The committed centroids do not depend on the OpenBLAS kernel: every
+value the trainer computes comes from NumPy's own reductions, and BLAS
+only picks argmax indices. To check it, run the pin under another kernel,
+e.g. ``OPENBLAS_CORETYPE=Prescott`` (or ``Haswell``, ``SkylakeX``) in front
+of ``pytest tests/test_latent_fixtures.py``; the fixture must still match.
+
 Regeneration is DELIBERATE:  python tools/make_ann_index_fixture.py
 """
 
