@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_extractor_spark.session import local_frame
+
 _PCTS = [0.25, 0.5, 0.75, 0.99]
 
 
@@ -84,6 +86,8 @@ def profile_columns(
         )
     for c in cols:
         out_rows.append((c, "rows", float(n_rows), None))
-    return df.sparkSession.createDataFrame(
-        out_rows, "column string, metric string, value double, value_str string"
+    return local_frame(
+        df.sparkSession,
+        out_rows,
+        "column string, metric string, value double, value_str string",
     )

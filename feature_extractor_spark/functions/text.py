@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from feature_extractor_spark.session import path_exists
+from feature_extractor_spark.session import local_frame, path_exists
 
 # tiny per-language function-word lexicons for the n-gram/stopword heuristic
 LANG_LEXICONS: dict[str, list[str]] = {
@@ -1247,12 +1247,12 @@ def learn_bpe(
     for left, right in merges:
         _add(left + right)
 
-    merges_df = spark.createDataFrame(
-        [(int(i), l, r_) for i, (l, r_) in enumerate(merges)],
+    merges_df = local_frame(
+        spark, [(i, l, r_) for i, (l, r_) in enumerate(merges)],
         "rank int, left string, right string",
     )
-    vocab_df = spark.createDataFrame(
-        [(tok, int(n_reserved) + i) for i, tok in enumerate(tokens)],
+    vocab_df = local_frame(
+        spark, [(tok, int(n_reserved) + i) for i, tok in enumerate(tokens)],
         "token string, id int",
     )
     return merges_df, vocab_df

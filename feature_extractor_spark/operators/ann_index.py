@@ -41,7 +41,12 @@ from feature_extractor_spark.operators.similarity import (
     _pq_sample,
     kmeans_centroids,
 )
-from feature_extractor_spark.session import overwrite_partitions, path_exists
+from feature_extractor_spark.session import (
+    hadoop_path,
+    local_frame,
+    overwrite_partitions,
+    path_exists,
+)
 
 
 def _require_index(spark, index_dir: str) -> None:
@@ -173,9 +178,9 @@ def build_ann_index(
     # old meta FIRST: any crash between here and the final meta write
     # leaves the index meta-less, so _require_index fails loudly and
     # the operator re-runs the build — never a silently mixed model.
-    meta = spark._jvm.org.apache.hadoop.fs.Path(f"{index_dir}/meta")
+    fs, meta = hadoop_path(spark, f"{index_dir}/meta")
     # a missing meta (first build) deletes nothing
-    meta.getFileSystem(spark._jsc.hadoopConfiguration()).delete(meta, True)
+    fs.delete(meta, True)
     n_corpus = None
     if n_lists is None:
         # one count job, driver-side arithmetic only (auto-size)
@@ -197,13 +202,14 @@ def build_ann_index(
         books = _fit_pq(Xs, m, k_codes, iters=5, seed=seed)
 
     dim = int(Xs.shape[1])
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+    local_frame(
+        spark, [(i, c) for i, c in enumerate(C)],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
-            (s, j, [float(x) for x in books[s, j]])
+            (s, j, books[s, j])
             for s in range(m)
             for j in range(k_codes)
         ],
@@ -233,7 +239,8 @@ def build_ann_index(
     # its raw accepted count against. Meta is write-once-per-build on
     # purpose: per-batch mutation would double-count under foreachBatch
     # replays.
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (
                 dim, int(len(C)), int(m), int(k_codes), bool(residual),

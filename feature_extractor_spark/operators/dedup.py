@@ -25,8 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from feature_extractor_spark.functions.text import words
+from feature_extractor_spark.session import local_frame
 
 
 def _norm_text(text_col: str):
@@ -929,7 +931,7 @@ def _driver_union_find(rows: list, nodes: DataFrame, id_col: str) -> DataFrame:
     union-find, relabel every component by its MINIMUM member (identical
     survivor convention to the star-contraction fixpoint), and join the
     (node -> min) star edges back against the node universe. One collect +
-    one createDataFrame + the same broadcast-friendly universe join —
+    one local relation + the same broadcast-friendly universe join —
     versus 4+ eager jobs per star-contraction round."""
     parent: dict = {}
 
@@ -958,17 +960,11 @@ def _driver_union_find(rows: list, nodes: DataFrame, id_col: str) -> DataFrame:
     star = [
         (x, comp_min[rt]) for x, rt in node_root.items() if x != comp_min[rt]
     ]
-    spark = nodes.sparkSession
     id_type = nodes.schema[id_col].dataType
-    from pyspark.sql import types as T
-
     schema = T.StructType(
-        [
-            T.StructField("node", id_type),
-            T.StructField("canonical", id_type),
-        ]
+        [T.StructField("node", id_type), T.StructField("canonical", id_type)]
     )
-    assign = spark.createDataFrame(star, schema)
+    assign = local_frame(nodes.sparkSession, star, schema)
     return _assign_to_universe(assign, nodes, id_col)
 
 

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feature_extractor_spark.session import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -418,7 +420,7 @@ def synth_media(spark, n_rows: int = 64, kind: str = "image") -> DataFrame:
             payload, meta = _synth_wav(i), (None, None, 8000, 64)
         else:
             payload, meta = f"PAYLOAD:{i:012d}".encode(), (64, 64, None, None)
-        rows.append((f"m_{i:06d}", kind, bytearray(payload), meta))
+        rows.append((f"m_{i:06d}", kind, payload, meta))
     schema = T.StructType(
         [
             MEDIA_SCHEMA["media_id"],
@@ -427,7 +429,7 @@ def synth_media(spark, n_rows: int = 64, kind: str = "image") -> DataFrame:
             MEDIA_SCHEMA["meta"],
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def decode_features(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from feature_extractor_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -125,7 +127,7 @@ def cosine_topk(
     )
     spark = corpus.sparkSession
     if not qrows:
-        return _rank_topk(spark.createDataFrame([], out_schema), k)
+        return _rank_topk(local_frame(spark, [], out_schema), k)
     q_ids = np.asarray([r[0] for r in qrows])
     Qm = np.asarray([r[1] for r in qrows], dtype=np.float64)
     qn = np.maximum(np.linalg.norm(Qm, axis=1), 1e-300)
@@ -265,7 +267,7 @@ def lsh_bucketed_topk(
     )
     spark = corpus.sparkSession
     if not qrows:
-        return _rank_topk(spark.createDataFrame([], out_schema), k)
+        return _rank_topk(local_frame(spark, [], out_schema), k)
     q_index = {r[0]: i for i, r in enumerate(qrows)}
     Qm = np.asarray([r[1] for r in qrows], dtype=np.float64)
     qn = np.maximum(np.linalg.norm(Qm, axis=1), 1e-300)
@@ -497,7 +499,7 @@ def ivf_topk(
                 T.StructField("rank", T.IntegerType()),
             ]
         )
-        return corpus.sparkSession.createDataFrame([], empty_schema)
+        return local_frame(corpus.sparkSession, [], empty_schema)
     if balance > balance_limit:
         n_probe = min(len(cents), n_probe * 2)
     cent_arr = [
@@ -720,7 +722,7 @@ def pq_topk(
         ]
     )
     if not qrows:
-        empty = spark.createDataFrame([], out_schema)
+        empty = local_frame(spark, [], out_schema)
         return empty.withColumn("rank", F.lit(1)).limit(0)
     q_ids = np.asarray([r[0] for r in qrows])
     Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
@@ -917,7 +919,8 @@ def _adc_score(
     if len(qrows) > max_queries:
         raise ValueError(f"adc top-k: query side exceeds max_queries={max_queries}")
     if not qrows:
-        empty = spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             T.StructType(
                 [
@@ -928,7 +931,6 @@ def _adc_score(
                 ]
             ),
         )
-        return empty
     q_ids = [r[0] for r in qrows]
     Q = np.asarray([r[1] for r in qrows], dtype=np.float64)
     probe = np.argsort(-(Q @ C.T), axis=1)[:, :n_probe]
@@ -967,7 +969,8 @@ def _adc_score(
     probe_rows = [
         (qid, int(c)) for qid, cells in zip(q_ids, probe) for c in cells
     ]
-    q_probe = spark.createDataFrame(
+    q_probe = local_frame(
+        spark,
         probe_rows,
         T.StructType(
             [

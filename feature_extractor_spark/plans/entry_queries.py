@@ -39,6 +39,7 @@ from feature_extractor_spark.operators.windows import (
     lag_lead_features,
     sliding_windows,
 )
+from feature_extractor_spark.session import local_frame
 
 ENTRY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -1826,11 +1827,11 @@ def encode_bpe_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ceded_rows.py)."""
     from feature_extractor_spark.functions.text import encode_bpe
 
-    spark_merges = spark.createDataFrame(
-        _BPE_MERGES, "rank int, left string, right string"
+    spark_merges = local_frame(
+        spark, _BPE_MERGES, "rank int, left string, right string"
     )
-    spark_vocab = spark.createDataFrame(
-        list(_bpe_vocab().items()), "token string, id int"
+    spark_vocab = local_frame(
+        spark, list(_bpe_vocab().items()), "token string, id int"
     )
     docs = _t(spark, sf_dir, "documents")
     enc = encode_bpe(
@@ -2687,8 +2688,8 @@ def a8_best_latent_search_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(d), float(m), d == res["best_latent_dim"])
         for d, m in res["candidates"]
     ]
-    return spark.createDataFrame(
-        rows, "latent_dim int, val_mae double, selected boolean"
+    return local_frame(
+        spark, rows, "latent_dim int, val_mae double, selected boolean"
     )
 
 
@@ -2887,8 +2888,8 @@ def domain_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed = {r["source"]: r["observed_mass"] for r in mass_rows}
     fractions = mixture_fractions(docs, target, "source", weight_col="n_chars")
-    return spark.createDataFrame(
-        [(s, observed[s], fractions[s]) for s in observed],
+    return local_frame(
+        spark, [(s, observed[s], fractions[s]) for s in observed],
         "source string, observed_mass double, fraction double",
     )
 

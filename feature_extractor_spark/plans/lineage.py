@@ -24,19 +24,23 @@ multi-table transaction).
 from __future__ import annotations
 
 import datetime as dt
-import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from feature_extractor_spark.session import overwrite_partitions
+from feature_extractor_spark.session import (
+    hadoop_path,
+    local_frame,
+    overwrite_partitions,
+)
 
 _MANIFEST_SCHEMA = (
     "stage string, unit string, rows long, bytes long, "
     "n_files long, wall_sec double, committed_at timestamp, run_id string"
 )
+_MANIFEST_FIELDS = [f.split()[0] for f in _MANIFEST_SCHEMA.split(", ")]
 
 # pending units commit in batches of this many, one write job per batch, so
 # job-launch latency does not multiply with the unit count
@@ -49,8 +53,9 @@ class CheckpointLog:
     def __init__(self, spark: SparkSession, checkpoint_dir: str):
         self.spark = spark
         self.dir = checkpoint_dir
-        self.manifest_dir = os.path.join(checkpoint_dir, "manifest")
-        os.makedirs(self.manifest_dir, exist_ok=True)
+        self.manifest_dir = f"{checkpoint_dir}/manifest"
+        fs, p = hadoop_path(spark, self.manifest_dir)
+        fs.mkdirs(p)
 
     def read(self) -> DataFrame:
         # the directory exists from __init__, and an empty one reads as no
@@ -68,37 +73,28 @@ class CheckpointLog:
     def append(self, records: list[dict]) -> None:
         if not records:
             return
-        pdf = self.spark.createDataFrame(
-            [
-                (
-                    r["stage"],
-                    str(r["unit"]),
-                    int(r["rows"]),
-                    int(r["bytes"]),
-                    int(r["n_files"]),
-                    float(r["wall_sec"]),
-                    r["committed_at"],
-                    r["run_id"],
-                )
-                for r in records
-            ],
+        pdf = local_frame(
+            self.spark, [tuple(r[f] for f in _MANIFEST_FIELDS) for r in records],
             _MANIFEST_SCHEMA,
         )
         # one small commit file per append; readers union all files
         pdf.coalesce(1).write.mode("append").parquet(self.manifest_dir)
 
 
-def _partition_stats(output_dir: str, unit_col: str, units: list[str]) -> dict[str, tuple[int, int]]:
+def _partition_stats(
+    spark: SparkSession, output_dir: str, unit_col: str, units: list[str]
+) -> dict[str, tuple[int, int]]:
     """(bytes, n_files) per unit from the committed files — real on-disk
-    byte metrics, not estimates."""
+    byte metrics, not estimates — listed through the Hadoop FileSystem API,
+    so any scheme the output path has works."""
     stats = {}
     for u in units:
-        pdir = os.path.join(output_dir, f"{unit_col}={u}")
+        fs, pdir = hadoop_path(spark, f"{output_dir}/{unit_col}={u}")
         n_bytes = n_files = 0
-        if os.path.isdir(pdir):
-            for f in os.listdir(pdir):
-                if f.endswith(".parquet"):
-                    n_bytes += os.path.getsize(os.path.join(pdir, f))
+        if fs.exists(pdir):
+            for st in fs.listStatus(pdir):
+                if st.getPath().getName().endswith(".parquet"):
+                    n_bytes += st.getLen()
                     n_files += 1
         stats[u] = (n_bytes, n_files)
     return stats
@@ -182,7 +178,7 @@ def run_stage_with_resume(
         overwrite_partitions(out, output_dir, unit_col)
         batch_wall = max(time.time() - t0, 1e-6)
         rows = obs.get
-        stats = _partition_stats(output_dir, unit_col, batch)
+        stats = _partition_stats(spark, output_dir, unit_col, batch)
         # ...manifest second (commit point), one row per unit
         log.append(
             [
@@ -193,7 +189,7 @@ def run_stage_with_resume(
                     "bytes": stats[u][0],
                     "n_files": stats[u][1],
                     "wall_sec": batch_wall / len(batch),
-                    "committed_at": dt.datetime.utcnow(),
+                    "committed_at": dt.datetime.now(dt.timezone.utc),
                     "run_id": run_id,
                 }
                 for k, u in enumerate(batch)
@@ -211,9 +207,15 @@ def run_stage_with_resume(
 
 def _snapshot_id(log: CheckpointLog) -> str | None:
     """Monotonic snapshot id = the latest commit timestamp in the manifest
-    (append-only, so "as of commit <= T" is a consistent view)."""
-    row = log.read().agg(F.max("committed_at").alias("t")).first()
-    return None if row["t"] is None else row["t"].isoformat()
+    (append-only, so "as of commit <= T" is a consistent view), as an ISO
+    time with a UTC offset: its instant does not depend on the driver's or
+    the session's time zone. Taken as epoch microseconds, since a collected
+    timestamp is a naive driver-local datetime."""
+    row = log.read().agg(F.unix_micros(F.max("committed_at")).alias("t")).first()
+    if row["t"] is None:
+        return None
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    return (epoch + dt.timedelta(microseconds=row["t"])).isoformat()
 
 
 class Snapshot:
@@ -228,6 +230,9 @@ class Snapshot:
     incremental-read model on plain parquet (no Iceberg jars in this
     environment); swapping the backend changes the storage of the
     manifest, not this logic.
+
+    ``as_of`` is an ISO-8601 time (default: the latest commit); one without
+    a UTC offset is read in the session time zone.
     """
 
     def __init__(self, log: CheckpointLog, as_of: str | None = None):

@@ -1,4 +1,6 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the session helpers every
+module shares: driver-side frames (``local_frame``), partitioned overwrites
+and Hadoop FileSystem paths.
 
 Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same settings
 (AQE, Arrow, UTC, shuffle-partition sizing) are what we would ship to a real
@@ -7,9 +9,13 @@ multi-executor cluster via spark-submit --conf.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 
 def machine_cores() -> int:
@@ -103,6 +109,43 @@ def get_spark(
     return spark
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order; a DDL
+    string or a ``StructType``), built through Arrow as a ``LocalRelation``.
+
+    Every frame this package builds from driver values goes through here.
+    ``createDataFrame`` on a Python list is a pickled RDD: each scan of it
+    runs one Python task per partition, which forks the worker daemon (a
+    warm 50-row parquet write on 4 vCPU, ``local[4]``: 0.66-0.74 s, against
+    0.13-0.17 s as a local relation).
+    Each column is one typed Arrow array, so nullable ints never pass
+    through pandas floats; arrays, maps, structs, binaries and dates keep
+    their values. A top-level ``timestamp`` value is read as the list path
+    reads it: an aware datetime is its instant, a naive one is
+    driver-local time.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_arrays(
+        [
+            _arrow_column([r[i] for r in rows], f.dataType)
+            for i, f in enumerate(schema.fields)
+        ],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_column(values: list, data_type: T.DataType) -> pa.Array:
+    if isinstance(data_type, T.TimestampType):
+        # pyarrow stores an aware datetime's wall time and drops its
+        # offset; astimezone reads a naive one as driver-local
+        values = [v if v is None else v.astimezone(dt.timezone.utc) for v in values]
+    return pa.array(values, type=to_arrow_type(data_type))
+
+
 def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
     """Write ``df`` partitioned ``by`` over ``path``, replacing only the
     partitions it holds rows for (a replayed batch or unit rewrites its own
@@ -115,9 +158,15 @@ def overwrite_partitions(df: DataFrame, path: str, by: str) -> None:
     ).partitionBy(by).parquet(path)
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` exists, probed through the Hadoop FileSystem API (any
-    scheme the session can read). Callers let only a missing path soften
-    their behaviour; every other failure propagates."""
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem API:
+    any scheme the session can read (``file://``, ``hdfs://``, ``s3a://``)."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists (see ``hadoop_path``). Callers let only a
+    missing path soften their behaviour; every other failure propagates."""
+    fs, p = hadoop_path(spark, path)
+    return fs.exists(p)

@@ -51,7 +51,11 @@ from feature_extractor_spark.operators.dedup import (
     near_dup_clusters,
     signature_bands,
 )
-from feature_extractor_spark.session import overwrite_partitions, path_exists
+from feature_extractor_spark.session import (
+    local_frame,
+    overwrite_partitions,
+    path_exists,
+)
 
 
 def _hash_batch(
@@ -155,8 +159,8 @@ def write_stats_row(spark, stats_dir: str, batch_id: int, row: dict) -> None:
     all-long row under a ``batch_id`` dynamic-partition overwrite, so a
     replayed batch overwrites its own stats row — the replay-idempotence
     mechanics live in ONE place for every funnel."""
-    stats_row = spark.createDataFrame(
-        [tuple(int(v) for v in row.values())],
+    stats_row = local_frame(
+        spark, [tuple(int(v) for v in row.values())],
         ", ".join(f"{k} long" for k in row),
     )
     overwrite_partitions(

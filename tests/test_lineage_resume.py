@@ -196,3 +196,56 @@ def test_transform_must_keep_the_unit_column(spark, tmp_path):
             spark, "drop", _input(spark), "bucket", lambda df: df.drop("bucket"),
             str(tmp_path / "out"), str(tmp_path / "ckpt"),
         )
+
+
+def test_lineage_on_a_file_uri(spark, tmp_path, monkeypatch):
+    """Output and checkpoint dirs given as ``file://`` URIs: the manifest
+    directory is made and the committed files are listed through the
+    Hadoop FileSystem API (``os`` calls made a stray ``./file:`` tree and
+    then failed to read the manifest), and each manifest row carries the
+    unit's real on-disk bytes and file count."""
+    monkeypatch.chdir(tmp_path)
+    out_dir, ckpt_dir = tmp_path / "out", tmp_path / "ckpt"
+    run_stage_with_resume(
+        spark, "double", _input(spark), "bucket", _transform,
+        out_dir.as_uri(), ckpt_dir.as_uri(),
+    )
+    assert not (tmp_path / "file:").exists()
+    m = CheckpointLog(spark, ckpt_dir.as_uri()).read().toPandas()
+    assert len(m) == 10 and (m["rows"] == 100).all()
+    for r in m.itertuples():
+        files = list((out_dir / f"bucket={r.unit}").glob("*.parquet"))
+        assert r.n_files == len(files) >= 1
+        assert r.bytes == sum(f.stat().st_size for f in files)
+
+
+def test_manifest_time_is_utc_under_any_driver_zone(spark, tmp_path, monkeypatch):
+    """``committed_at`` is the commit's instant whatever the driver's local
+    zone (a naive UTC wall time was read as driver-local, 4-5 h off in New
+    York), and the latest snapshot sees every unit just committed."""
+    import time
+
+    from feature_extractor_spark.plans.lineage import current_snapshot
+
+    df = spark.range(10).select(
+        (F.col("id") % 2).cast("string").alias("grp"), F.col("id").alias("v")
+    )
+    ck = str(tmp_path / "ck")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        t0 = time.time()
+        run_stage_with_resume(
+            spark, "s", df, "grp", lambda d: d, str(tmp_path / "out"), ck
+        )
+        t1 = time.time()
+        log = CheckpointLog(spark, ck)
+        stamps = [
+            r[0] for r in log.read().select(F.unix_micros("committed_at")).collect()
+        ]
+        assert len(stamps) == 2
+        assert all(t0 - 1 <= us / 1e6 <= t1 + 1 for us in stamps), (t0, stamps)
+        assert current_snapshot(spark, ck).units("s") == {"0", "1"}
+    finally:
+        monkeypatch.undo()
+        time.tzset()
