@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from feature_extractor_spark.encoder.layers import _softmax_last, layer_norm
+
 DTYPE = np.float32
 
 
@@ -79,18 +81,6 @@ def _positional_encoding(W: int, d: int) -> np.ndarray:
     pe[:, 1::2] = np.cos(angle[:, 1::2])
     _PE_CACHE[(W, d)] = pe
     return pe
-
-
-def _layernorm(x: np.ndarray, g: np.ndarray, b: np.ndarray) -> np.ndarray:
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    return ((x - mu) / np.sqrt(var + DTYPE(1e-5))) * g + b
-
-
-def _softmax(x: np.ndarray) -> np.ndarray:
-    x = x - x.max(axis=-1, keepdims=True)
-    e = np.exp(x)
-    return e / e.sum(axis=-1, keepdims=True)
 
 
 def encoder_forward(
@@ -208,8 +198,8 @@ def encoder_forward_full(
     k = z @ weights["w_k"]
     v = z @ weights["w_v"]
     d = DTYPE(z.shape[-1])
-    att = _softmax((q @ k.transpose(0, 2, 1)) / np.sqrt(d)) @ v
-    z = _layernorm(z + att, weights["ln_g"], weights["ln_b"])
+    att = _softmax_last((q @ k.transpose(0, 2, 1)) / np.sqrt(d)) @ v
+    z = layer_norm(z + att, weights["ln_g"], weights["ln_b"], eps=1e-5)
     W2 = W // 2
     zc = z[:, : 2 * W2, :].reshape(B, W2, -1) @ weights["w_conv"] + weights["b_conv"]
     zc = np.where(zc > 0, zc, DTYPE(0.2) * zc)

@@ -40,7 +40,9 @@ import numpy as np
 
 from feature_extractor_spark.encoder.h5_reader import keras_weights
 from feature_extractor_spark.encoder.layers import (
+    ACTIVATIONS,
     DTYPE,
+    _softmax_last,
     layer_norm,
     positional_encoding_concat,
 )
@@ -49,15 +51,7 @@ GOLDEN_DIR = "/root/reference/tests/models"
 ENCODER_PATH = f"{GOLDEN_DIR}/encoder_model_transformer_va.h5.keras"
 DECODER_PATH = f"{GOLDEN_DIR}/decoder_model_transformer_va.h5.keras"
 
-
-def _relu(x):
-    return np.maximum(x, DTYPE(0))
-
-
-def _softmax_last(x):
-    x = x - x.max(axis=-1, keepdims=True)
-    e = np.exp(x)
-    return e / e.sum(axis=-1, keepdims=True)
+_relu = ACTIVATIONS["relu"]
 
 
 def cyberzhg_mha(x: np.ndarray, w: dict, name: str, head_num: int) -> np.ndarray:
@@ -160,35 +154,18 @@ def golden_encode_stage(
     df,
     feature_cols: list[str],
     keep_cols: list[str] | None = None,
-    out_col: str = "z_latent",
     encoder_path: str = ENCODER_PATH,
 ):
-    """Distributed golden-encoder forward: 8 scalar feature columns form the
-    (B, 1, 8) per-step input; trained weights broadcast once; Arrow-batched
-    mapInPandas (no per-row Python)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
+    """Distributed golden-encoder forward through ``stage.model_stage``: 8
+    scalar feature columns form the (B, 1, 8) per-step input, emitted as
+    ``z_latent`` (B, 16)."""
+    from feature_extractor_spark.encoder.stage import model_stage
 
     assert len(feature_cols) == 8, "golden encoder takes 8 features per step"
     keep = keep_cols or [c for c in df.columns if c not in feature_cols]
-    sc = df.sparkSession.sparkContext
-    bw = sc.broadcast(load_golden_encoder(encoder_path))
-    schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField(out_col, T.ArrayType(T.FloatType()), False)]
+    return model_stage(
+        df.select(*keep, *feature_cols), load_golden_encoder(encoder_path),
+        keep, [], feature_cols,
+        lambda _, x, w: (golden_transformer_encode(x[:, None, :], w),),
+        ["z_latent"],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bw.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = pdf[feature_cols].to_numpy(dtype=np.float32)[:, None, :]
-            z = golden_transformer_encode(x, w)
-            out = pdf[keep].copy()
-            out[out_col] = list(z)
-            yield out
-
-    return df.select(*keep, *feature_cols).mapInPandas(run, schema)

@@ -49,6 +49,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from feature_extractor_spark.encoder.forward import encoder_forward
 from feature_extractor_spark.encoder.layers import (
     DTYPE,
     avg_pool1d_same,
@@ -760,6 +761,12 @@ def get_encoder(name: str) -> tuple:
     if name not in ENCODERS:
         raise KeyError(f"unknown encoder plugin {name!r}; have {sorted(ENCODERS)}")
     return ENCODERS[name]
+
+
+def encoder_fn(name: str | None):
+    """The forward of ``plugin=name``: None is the compact default graph
+    (``forward.encoder_forward``), any other name the registry's."""
+    return encoder_forward if name is None else get_encoder(name)[1]
 
 
 def out_shape(weights: dict[str, np.ndarray]) -> tuple[int, int]:

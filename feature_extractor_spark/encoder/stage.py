@@ -1,9 +1,13 @@
-"""Distributed encoder forward stage (SURVEY.md §2.9 U1, §3.2).
+"""The Arrow model stage (SURVEY.md §2.9 U1, §3.2): ``model_stage`` is the
+one body that runs a NumPy model over Spark rows. ``encode_stage``,
+``decode_stage``, ``decode_seq_stage`` and ``golden.golden_encode_stage``
+only say which columns go in, which arrays come out and which NumPy
+function maps one to the other.
 
-``mapInPandas`` over Arrow batches: weights are broadcast once (SparkContext
-broadcast — one copy per executor, not per task), deserialized lazily inside
-the generator, and every batch runs the whole NumPy graph vectorized. No
-per-row Python anywhere (input_hint mandate).
+``mapInPandas`` over Arrow batches: the model state is broadcast once
+(SparkContext broadcast — one copy per executor, not per task),
+deserialized lazily inside the generator, and every batch runs the whole
+NumPy graph vectorized. No per-row Python anywhere (input_hint mandate).
 
 Batch sizing: spark.sql.execution.arrow.maxRecordsPerBatch (session.py sets
 4096) bounds per-task memory at batch × W × F × 4 bytes.
@@ -11,28 +15,71 @@ Batch sizing: spark.sql.execution.arrow.maxRecordsPerBatch (session.py sets
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feature_extractor_spark.encoder.forward import decoder_forward, encoder_forward
+from feature_extractor_spark.encoder.forward import decoder_forward
+from feature_extractor_spark.encoder.plugins import (
+    encoder_fn,
+    get_encoder_full,
+    vae_small_decode,
+)
 
 
-def _flat_windows_to_3d(col: pd.Series, n_features: int) -> np.ndarray:
-    """(B,) of FLAT window arrays (length W*F each) -> float32 (B, W, F).
+def _matrix(col: pd.Series) -> np.ndarray:
+    """(B,) arrays of one length n -> float32 (B, n).
 
     One np.concatenate over the whole Arrow batch + one reshape — no
-    per-row Python. (The nested array<array<T>> layout is flattened
-    JVM-side with F.flatten before the UDF; converting nested object
-    arrays row-by-row in Python measured ~3x slower end-to-end.)"""
+    per-row Python. (A nested array<array<T>> column is flattened JVM-side
+    with F.flatten before the UDF; converting nested object arrays
+    row-by-row in Python measured ~3x slower end-to-end.)"""
     flat = np.concatenate(col.to_numpy()).astype(np.float32, copy=False)
-    B = len(col)
-    W = flat.size // (B * n_features)
-    return flat.reshape(B, W, n_features)
+    return flat.reshape(len(col), -1)
+
+
+def model_stage(
+    df: DataFrame,
+    state,
+    keep: list[str],
+    array_cols: list[str],
+    scalar_cols: list[str],
+    fn: Callable,
+    out_cols: list[str],
+) -> DataFrame:
+    """Rows of ``keep`` + one array<float> column per ``out_cols`` name.
+
+    Per non-empty Arrow batch of B rows, ``fn(arrays, scalars, state)``
+    gets each ``array_cols`` column as a float32 (B, n) matrix, the
+    ``scalar_cols`` as one float32 (B, len(scalar_cols)) matrix and the
+    broadcast ``state``, and returns one (B, d) array per ``out_cols``."""
+    for c in array_cols:
+        if isinstance(df.schema[c].dataType.elementType, T.ArrayType):
+            df = df.withColumn(c, F.flatten(F.col(c)))
+    bw = df.sparkSession.sparkContext.broadcast(state)
+    schema = T.StructType(
+        [df.schema[c] for c in keep]
+        + [T.StructField(c, T.ArrayType(T.FloatType()), False) for c in out_cols]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        st = bw.value  # one deserialization per task; broadcast = one per executor
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            arrays = [_matrix(pdf[c]) for c in array_cols]
+            scalars = pdf[scalar_cols].to_numpy(dtype=np.float32)
+            out = pdf[keep].copy()
+            for c, v in zip(out_cols, fn(arrays, scalars, st)):
+                out[c] = list(v)
+            yield out
+
+    return df.mapInPandas(run, schema)
 
 
 def encode_stage(
@@ -41,9 +88,7 @@ def encode_stage(
     window_col: str = "window",
     h_col: str = "h_context",
     cond_cols: list[str] | None = None,
-    out_col: str = "z_mean",
     keep_cols: list[str] | None = None,
-    rebalance: bool = True,
     plugin: str | None = None,
     log_var_col: str | None = None,
 ) -> DataFrame:
@@ -56,90 +101,41 @@ def encode_stage(
     - ``cond_cols``: scalar double columns forming the conditioning vector
       (the 10 cyclical features, P4)
     - ``plugin``: reference plugin name resolved through the registry
-      (encoder/plugins.py, the setup.py entry-point names); None = the
-      compact default graph (forward.encoder_forward)
-    Output: input keep_cols + ``out_col`` array<float> latent vector
+      (``plugins.encoder_fn``)
+    Output: input keep_cols + ``z_mean`` array<float> latent vector
     (sequence latents arrive flattened row-major; plugins.out_shape gives
     the logical (T', D') back).
-
-    ``rebalance``: window rows are self-contained, so the forward pass is
-    embarrassingly parallel — but the upstream window build leaves rows
-    partitioned by entity, and a heavy-hitter entity turns into one
-    straggler Python worker. A round-robin repartition ahead of the UDF
-    costs one balanced shuffle and removes the skew (measured: required for
-    local[8]->local[32] scaling on Zipf-skewed entities).
 
     ``log_var_col``: also emit the encoder's second head as an extra
     array<float> column — the reference encoder contract is
     ``encode -> (z_mean, z_log_var)`` (encoder_plugin_vae_small.py:228-235);
     only plugins with a log-var head support it (vae_small family).
     """
-    full_fn = None
-    if log_var_col is not None:
-        from feature_extractor_spark.encoder.plugins import get_encoder_full
-
-        full_fn = get_encoder_full(plugin)
-    if plugin is not None:
-        from feature_extractor_spark.encoder.plugins import get_encoder
-
-        forward_fn = get_encoder(plugin)[1]
+    if log_var_col is None:
+        forward, out_cols = encoder_fn(plugin), ["z_mean"]
     else:
-        forward_fn = encoder_forward
+        forward, out_cols = get_encoder_full(plugin), ["z_mean", log_var_col]
     have_h = h_col in df.columns
-
     keep = keep_cols or [c for c in df.columns if c not in (window_col, h_col)]
-    if rebalance:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2)
-
-    # flatten nested windows JVM-side: the Python worker then reshapes one
-    # contiguous buffer per batch instead of walking object arrays per row
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as _T
-
-    wtype = df.schema[window_col].dataType
-    if isinstance(wtype, _T.ArrayType) and isinstance(wtype.elementType, _T.ArrayType):
-        df = df.withColumn(window_col, F.flatten(F.col(window_col)))
     n_features = int(weights["meta"][1])
-    cond_cols = cond_cols or []
-    sc = df.sparkSession.sparkContext
-    bw = sc.broadcast({k: v for k, v in weights.items()})
 
-    out_fields = [df.schema[c] for c in keep] + [
-        T.StructField(out_col, T.ArrayType(T.FloatType()), False)
-    ]
-    if log_var_col is not None:
-        out_fields.append(
-            T.StructField(log_var_col, T.ArrayType(T.FloatType()), False)
-        )
-    schema = T.StructType(out_fields)
+    def run(arrays, cond, w):
+        x = arrays[0].reshape(len(cond), -1, n_features)
+        h = arrays[1] if have_h else np.zeros((len(cond), 0), dtype=np.float32)
+        out = forward(x, h, cond, w)
+        return (out,) if log_var_col is None else out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bw.value  # one deserialization per task; broadcast = one per executor
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = _flat_windows_to_3d(pdf[window_col], n_features)
-            if have_h:
-                h = np.concatenate(pdf[h_col].to_numpy()).astype(
-                    np.float32, copy=False
-                ).reshape(len(pdf), -1)
-            else:
-                h = np.zeros((len(pdf), 0), dtype=np.float32)
-            if cond_cols:
-                cond = pdf[cond_cols].to_numpy(dtype=np.float32)
-            else:
-                cond = np.zeros((len(pdf), 0), dtype=np.float32)
-            out = pdf[keep].copy()
-            if full_fn is not None:
-                z, zlv = full_fn(x, h, cond, w)
-                out[out_col] = list(z)
-                out[log_var_col] = list(zlv)
-            else:
-                z = forward_fn(x, h, cond, w)
-                out[out_col] = list(z)
-            yield out
-
-    return df.mapInPandas(run, schema)
+    # window rows are self-contained, so the forward pass is embarrassingly
+    # parallel — but the upstream window build leaves rows partitioned by
+    # entity, and a heavy-hitter entity turns into one straggler Python
+    # worker. A round-robin repartition ahead of the UDF costs one balanced
+    # shuffle and removes the skew (measured: required for local[8]->local[32]
+    # scaling on Zipf-skewed entities).
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2)
+    array_cols = [window_col, h_col] if have_h else [window_col]
+    return model_stage(
+        df, dict(weights), keep, array_cols, cond_cols or [], run, out_cols
+    )
 
 
 def name_reconstruction_columns(
@@ -159,8 +155,6 @@ def name_reconstruction_columns(
     feature dim). A ``.first()`` probe is kept ONLY as a last resort for
     frames of unknown provenance: it is a driver-side action that executes
     the upstream plan once, so it must never sit inside a library pipeline."""
-    from pyspark.sql import functions as F
-
     n = n_features
     if n is None and weights is not None and "meta" in weights:
         n = int(weights["meta"][1])
@@ -184,76 +178,39 @@ def name_reconstruction_columns(
 def decode_seq_stage(
     df: DataFrame,
     weights: dict[str, np.ndarray],
-    latent_col: str = "z_mean",
-    out_col: str = "reconstruction",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """U2 faithful vae_small decoder stage: flattened SEQUENCE latents
-    (T'*L per row, as emitted by encode_stage(plugin='vae_small')) ->
-    (B, F_out) last-step reconstruction (reference
+    (``z_mean``, T'*L per row, as emitted by encode_stage(plugin='vae_small'))
+    -> ``reconstruction``, the (B, F_out) last-step reconstruction (reference
     decoder_plugin_vae_small.py:81-240). h/cond default to zeros (P5)."""
-    from feature_extractor_spark.encoder.plugins import vae_small_decode
+    keep = keep_cols or [c for c in df.columns if c != "z_mean"]
+    meta = weights["meta"]
+    t_prime, latent = int(meta[6]), int(meta[4])
+    h_dim, c_dim = int(meta[2]), int(meta[3])
 
-    keep = keep_cols or [c for c in df.columns if c != latent_col]
-    sc = df.sparkSession.sparkContext
-    bw = sc.broadcast(dict(weights))
-    schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField(out_col, T.ArrayType(T.FloatType()), False)]
+    def run(arrays, _, w):
+        B = len(arrays[0])
+        z = arrays[0].reshape(B, t_prime, latent)
+        h = np.zeros((B, h_dim), dtype=np.float32)
+        cond = np.zeros((B, c_dim), dtype=np.float32)
+        return (vae_small_decode(z, h, cond, w),)
+
+    return model_stage(
+        df, dict(weights), keep, ["z_mean"], [], run, ["reconstruction"]
     )
-    t_prime = int(weights["meta"][6])
-    latent = int(weights["meta"][4])
-    h_dim = int(weights["meta"][2])
-    c_dim = int(weights["meta"][3])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bw.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            flat = np.concatenate(pdf[latent_col].to_numpy()).astype(
-                np.float32, copy=False
-            )
-            z = flat.reshape(len(pdf), t_prime, latent)
-            h = np.zeros((len(pdf), h_dim), dtype=np.float32)
-            cond = np.zeros((len(pdf), c_dim), dtype=np.float32)
-            x = vae_small_decode(z, h, cond, w)
-            out = pdf[keep].copy()
-            out[out_col] = list(x)
-            yield out
-
-    return df.mapInPandas(run, schema)
 
 
 def decode_stage(
     df: DataFrame,
     weights: dict[str, np.ndarray],
-    latent_col: str = "z_mean",
-    out_col: str = "reconstruction",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """U2 decoder forward: latent array column -> reconstructed point-in-time
-    feature vector (reference decoder evaluation path, SURVEY.md §3.3).
-    Same broadcast-weights Arrow pattern as encode_stage."""
-    keep = keep_cols or [c for c in df.columns if c != latent_col]
-    sc = df.sparkSession.sparkContext
-    bw = sc.broadcast(dict(weights))
-    schema = T.StructType(
-        [df.schema[c] for c in keep]
-        + [T.StructField(out_col, T.ArrayType(T.FloatType()), False)]
+    """U2 decoder forward: the ``z_mean`` latent array -> ``reconstruction``,
+    the reconstructed point-in-time feature vector (reference decoder
+    evaluation path, SURVEY.md §3.3)."""
+    keep = keep_cols or [c for c in df.columns if c != "z_mean"]
+    return model_stage(
+        df, dict(weights), keep, ["z_mean"], [],
+        lambda arrays, _, w: (decoder_forward(arrays[0], w),), ["reconstruction"],
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bw.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            z = np.asarray(
-                [np.asarray(v, dtype=np.float32) for v in pdf[latent_col]]
-            )
-            x = decoder_forward(z, w)
-            out = pdf[keep].copy()
-            out[out_col] = list(x)
-            yield out
-
-    return df.mapInPandas(run, schema)

@@ -1,7 +1,7 @@
 """Aggregation operators (SURVEY.md §2.4 A1-A6).
 
-MAE/MSE/standardized moments are plain Column aggregates (map-side partial
-aggregation for free). MMD uses a deterministic modulo-sample (not
+MAE/MSE are plain Column aggregates (map-side partial aggregation for
+free). MMD uses a deterministic modulo-sample (not
 df.sample: reproducible across engines and runs) + broadcast cross join of
 two tiny sampled sets. KL divergence works on array columns via
 aggregate(zip_with(...)).
@@ -21,22 +21,6 @@ def mae(t: Column, p: Column) -> Column:
 def mse(t: Column, p: Column) -> Column:
     """A2 (reference app/plugins/decoder_plugin_cnn.py:159-163)."""
     return F.avg(F.pow(t - p, F.lit(2)))
-
-
-def standardized_moment(df: DataFrame, col: str, k: int, group_cols: list[str] | None = None) -> DataFrame:
-    """A3: mean(((x-mu)/sigma)^k) with sigma~0 guard
-    (reference app/autoencoder_helper.py:104-122). Computed with the explicit
-    two-pass formula (population sigma) so any SQL engine agrees exactly —
-    Spark's built-in kurtosis() is excess-kurtosis and would differ by 3."""
-    g = group_cols or []
-    stats = df.groupBy(*g).agg(
-        F.avg(col).alias("__mu"), F.stddev_pop(col).alias("__sigma")
-    )
-    joined = df.join(F.broadcast(stats), g) if g else df.crossJoin(F.broadcast(stats))
-    z = (F.col(col) - F.col("__mu")) / F.when(
-        F.col("__sigma") < 1e-12, F.lit(1.0)
-    ).otherwise(F.col("__sigma"))
-    return joined.groupBy(*g).agg(F.avg(F.pow(z, F.lit(k))).alias(f"moment_{k}"))
 
 
 def kl_divergence(mu: Column, log_var: Column) -> Column:

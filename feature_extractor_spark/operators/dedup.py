@@ -123,13 +123,6 @@ def jaccard_pairs(
 _M31 = (1 << 31) - 1
 
 
-def shingle_hashes(shingles_col):
-    """xxhash64 per shingle, folded into [0, 2^31-1). Computed ONCE and
-    materialized — string hashing dominates minhash cost, so the k
-    permutations must run over this integer array, not re-hash."""
-    return F.transform(shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_M31)))
-
-
 def _minhash_params(k: int, seed: int = 7) -> list[tuple[int, int]]:
     import random
 
@@ -165,8 +158,9 @@ def _minhash_signatures_agg(
     seed: int = 7,
     carry: "list[str] | None" = None,
 ) -> DataFrame:
-    """Same K minhashes as ``_minhash_signature`` (bit-identical, tested),
-    computed as explode -> groupBy(id) -> K min() aggregates. Each affine
+    """Same K minhashes as ``_minhash_signature`` (bit-identical, tested;
+    a doc with no hashes has no row here, where the array form gives K
+    NULLs), computed as explode -> groupBy(id) -> K min() aggregates. Each affine
     permutation is a compiled (whole-stage-codegen) expression instead of an
     interpreted HOF lambda — measured ~10x on long documents — and the
     groupBy's map-side partial aggregation reduces the exploded rows to one
@@ -283,15 +277,6 @@ def combine_word_hashes(wh_col, n: int = 3, variant: int = 0):
     ).otherwise(F.array().cast("array<long>"))
 
 
-def hashed_shingles(words_col, n: int = 3):
-    """Shingle hashes WITHOUT building shingle strings (expression form —
-    words hashed then combined inline). Composable anywhere an expression
-    is needed, but subject to the element_at re-evaluation trap described
-    in combine_word_hashes: inside minhash_lsh_pairs the two steps are
-    split across a materialized column instead."""
-    return combine_word_hashes(word_hashes(words_col), n)
-
-
 def _hashed_shingle_table(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -353,10 +338,10 @@ def minhash_lsh_pairs(
 
     rows = bands implies num_hashes % bands == 0; candidate pairs share at
     least one identical band. Only candidates are verified — the N^2 term
-    never materializes. Shingles exist only as 64-bit hashes end-to-end
-    (hashed_shingles): jaccard is computed over hashed-shingle SETS, which
-    equals string-shingle jaccard up to hash collisions (~2^-31 per pair;
-    parity vs string-shingle jaccard is tested).
+    never materializes. Shingles exist only as 64-bit hashes end-to-end:
+    jaccard is computed over hashed-shingle SETS, which equals
+    string-shingle jaccard up to hash collisions (~2^-31 per pair; parity
+    vs string-shingle jaccard is tested).
 
     The verified pairs are materialized and the shingle caches released
     before returning (localCheckpoint, freed on GC)."""

@@ -39,8 +39,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feature_extractor_spark.encoder.forward import encoder_forward
+from feature_extractor_spark.encoder.plugins import encoder_fn
 from feature_extractor_spark.operators.skew import heavy_cell
+
+# encoder rows per kernel call: bounds the kernel working set. With the
+# output-pruned attention (scores are (B, 2, W), not (B, W, W)) the set is
+# GEMM-stream friendly and 128 is the measured sweet spot: 618k windows/s
+# at 32 procs vs 316k at sub=32 (tiny GEMMs) and flat beyond 128.
+_SUB_BATCH = 128
 
 
 def _chunk_assign(
@@ -135,8 +141,6 @@ def windowed_encode(
     weights: dict[str, np.ndarray],
     h_dim: int = 4,
     rows_per_chunk: int = 8192,
-    sub_batch: int = 128,
-    out_col: str = "z_mean",
     heavy_keys: list | None = None,
     plugin: str | None = None,
 ) -> DataFrame:
@@ -144,12 +148,7 @@ def windowed_encode(
     (doubles, point-in-time conditioning at the window's right edge).
     ``cond_cols=None`` computes the reference's 10 cyclical datetime
     features from ts inside the stage (cheaper: nothing extra shuffled).
-    Returns (entity, ts, out_col).
-
-    ``sub_batch`` bounds the kernel working set. With the output-pruned
-    attention (scores are (B, 2, W), not (B, W, W)) the set is GEMM-stream
-    friendly and 128 is the measured sweet spot: 618k windows/s at 32
-    procs vs 316k at sub=32 (tiny GEMMs) and flat beyond 128.
+    Returns (entity, ts, z_mean).
 
     ``heavy_keys`` (None and ``[]`` alike mean none): the entities whose
     rows are numbered within ``skew.heavy_cell`` time cells, the cells the
@@ -160,12 +159,7 @@ def windowed_encode(
     W = window_size
     if rows_per_chunk < W:
         raise ValueError("rows_per_chunk must be >= window_size")
-    if plugin is not None:
-        from feature_extractor_spark.encoder.plugins import get_encoder
-
-        forward_fn = get_encoder(plugin)[1]
-    else:
-        forward_fn = encoder_forward
+    forward_fn = encoder_fn(plugin)
 
     in_stage_conds = cond_cols is None
     src = df.select(entity_col, ts_col, *feature_cols, *(cond_cols or []))
@@ -177,7 +171,7 @@ def windowed_encode(
         [
             df.schema[entity_col],
             df.schema[ts_col],
-            T.StructField(out_col, T.ArrayType(T.FloatType()), False),
+            T.StructField("z_mean", T.ArrayType(T.FloatType()), False),
         ]
     )
 
@@ -208,16 +202,16 @@ def windowed_encode(
         else:
             conds = np.zeros((len(idx), 0), dtype=np.float32)
         outs = []
-        for s in range(0, len(idx), sub_batch):
-            sel = idx[s : s + sub_batch]
+        for s in range(0, len(idx), _SUB_BATCH):
+            sel = idx[s : s + _SUB_BATCH]
             x = np.ascontiguousarray(wins[sel - (W - 1)])
             h = np.zeros((len(sel), h_dim), dtype=np.float32)
-            outs.append(forward_fn(x, h, conds[s : s + sub_batch], wts))
+            outs.append(forward_fn(x, h, conds[s : s + _SUB_BATCH], wts))
         yield pd.DataFrame(
             {
                 entity_col: ent[idx],
                 ts_col: ts.to_numpy(),
-                out_col: list(np.concatenate(outs)),
+                "z_mean": list(np.concatenate(outs)),
             }
         )
 

@@ -52,6 +52,7 @@ from feature_extractor_spark.operators.dedup import (
     signature_bands,
 )
 from feature_extractor_spark.session import (
+    hadoop_path,
     local_frame,
     overwrite_partitions,
     path_exists,
@@ -538,8 +539,6 @@ def compact_index(
 
     Returns {"<table>_files": n} per compacted table.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     n_out = target_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
@@ -548,22 +547,23 @@ def compact_index(
         cur = f"{index_dir}/{sub}"
         tmp = f"{index_dir}/{sub}__compacting"
         bak = f"{index_dir}/{sub}__pre_compact"
-        fs = jvm.org.apache.hadoop.fs.Path(cur).getFileSystem(conf)
-        P = jvm.org.apache.hadoop.fs.Path
-        if not fs.exists(P(cur)) and fs.exists(P(bak)):
+        (fs, p_cur), (_, p_tmp), (_, p_bak) = (
+            hadoop_path(spark, p) for p in (cur, tmp, bak)
+        )
+        if not fs.exists(p_cur) and fs.exists(p_bak):
             # a prior run crashed inside the swap window (cur renamed to
             # bak, replacement not yet renamed in): complete the documented
             # recovery by restoring the intact pre-compact copy, then
             # re-compact normally — this is what makes re-runs idempotent
-            if not fs.rename(P(bak), P(cur)):
+            if not fs.rename(p_bak, p_cur):
                 raise IOError(
                     f"compact_index: could not restore {bak} to {cur}"
                 )
-        if not fs.exists(P(cur)):
+        if not fs.exists(p_cur):
             raise FileNotFoundError(f"compact_index: missing {cur}")
-        for stale in (tmp, bak):  # recover from a previous crash
-            if fs.exists(P(stale)):
-                fs.delete(P(stale), True)
+        for stale in (p_tmp, p_bak):  # recover from a previous crash
+            if fs.exists(stale):
+                fs.delete(stale, True)
         df = (
             spark.read.parquet(cur)
             .drop("batch_id")
@@ -572,15 +572,12 @@ def compact_index(
         df.repartition(n_out).write.mode("overwrite").partitionBy(
             "batch_id"
         ).parquet(tmp)
-        if not fs.rename(P(cur), P(bak)):
+        if not fs.rename(p_cur, p_bak):
             raise IOError(f"compact_index: could not move {cur} aside")
-        if not fs.rename(P(tmp), P(cur)):
+        if not fs.rename(p_tmp, p_cur):
             # restore the original on failure
-            fs.rename(P(bak), P(cur))
+            fs.rename(p_bak, p_cur)
             raise IOError(f"compact_index: could not swap in {tmp}")
-        fs.delete(P(bak), True)
-        stats[f"{sub}_files"] = sum(
-            1
-            for f in spark.read.parquet(cur).inputFiles()
-        )
+        fs.delete(p_bak, True)
+        stats[f"{sub}_files"] = len(spark.read.parquet(cur).inputFiles())
     return stats

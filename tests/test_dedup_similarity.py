@@ -290,6 +290,51 @@ def test_hashed_shingle_jaccard_matches_string_shingles(spark):
         assert abs(j - exact) < 1e-12, (a, b, j, exact)
 
 
+@pytest.mark.parametrize("payload", ["text", "tokens"])
+def test_minhash_signatures_agg_matches_array_form(spark, payload):
+    """``_minhash_signatures_agg`` (explode -> K compiled min aggregates)
+    gives the K minhashes of ``_minhash_signature`` (transform + array_min)
+    bit for bit, on text shingle hashes and on token-id hash arrays. A doc
+    with no hashes has no row in the aggregate (explode drops it); the
+    array form gives it K NULLs."""
+    from feature_extractor_spark.functions.text import words
+    from feature_extractor_spark.operators.dedup import (
+        _minhash_signature,
+        _minhash_signatures_agg,
+        combine_word_hashes,
+        token_hashes,
+        word_hashes,
+    )
+
+    k = 16
+    if payload == "text":
+        df = _docs(spark).unionByName(
+            spark.createDataFrame([(7, "")], "doc_id long, text string")
+        )
+        ws = F.transform(words(F.col("text")), F.lower)
+        hashes = combine_word_hashes(word_hashes(ws), 3)
+    else:
+        rng = np.random.default_rng(3)
+        rows = [
+            (i, rng.integers(0, 50_000, int(rng.integers(1, 40))).tolist())
+            for i in range(1, 7)
+        ] + [(7, [])]
+        df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+        hashes = token_hashes(F.col("tokens"))
+    h = df.select("doc_id", hashes.alias("h")).localCheckpoint()
+    want = {
+        r["doc_id"]: list(r["sig"])
+        for r in h.select("doc_id", _minhash_signature(F.col("h"), k).alias("sig"))
+        .collect()
+    }
+    got = {
+        r["doc_id"]: list(r["sig"])
+        for r in _minhash_signatures_agg(h, "doc_id", "h", k).collect()
+    }
+    assert want.pop(7) == [None] * k
+    assert len(want) == 6 and got == want
+
+
 def test_simhash_near_dup_exact_by_pigeonhole(spark):
     """Banded candidate generation must find EXACTLY the brute-force
     Hamming<=k pair set (pigeonhole: bands > k), and reject bands<=k."""
